@@ -1,6 +1,7 @@
 package graft
 
-/** Scratch job-census harness (dev tool, the [[Prof]] tier): run ONE
+/** Scratch job-census harness (dev tool beside [[Verify]]'s
+  * `SPARK_GRAFT_VERIFY_ONLY` subset dump): run ONE
   * declared query twice (warm-up + measured) with a SparkListener
   * recording every job's wall time and call site, so a job-COUNT-
   * bound bench line (the lifecycle tier — memory: ~54 ms fixed cost

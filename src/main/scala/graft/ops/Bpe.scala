@@ -93,9 +93,12 @@ object Bpe {
     * refitting identical merges (which doubled BPE training cost per
     * bench pass). Entries are merge tables (KBs each); the key space
     * is the handful of (dir, params) combos a session touches, same
-    * lifetime story as Spark's own bucketed-table catalog cache.
+    * lifetime story as Spark's own bucketed-table catalog cache. A
+    * corpus dir is assumed immutable for the JVM's lifetime; a caller
+    * that rewrites one in place retires its fits through
+    * [[LlmOps.invalidateMemosFor]].
     */
-  private val fitCache =
+  private[ops] val fitCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), BpeTable]()
 
   /** Number of full distributed fits actually run (cache misses) —
@@ -107,14 +110,6 @@ object Bpe {
       nMerges: Int, vocabCap: Int): BpeTable =
     fitCache.computeIfAbsent((dir, nMerges, vocabCap),
       _ => fit(Tables.documents(spark, dir), nMerges, vocabCap))
-
-  /** Drop every memoized fit. The cache assumes a corpus dir is
-    * immutable for the JVM's lifetime (a re-materialized corpus is a
-    * new dir/version); a caller that DOES rewrite a dir in place
-    * calls this first, or the next encode would silently use merges
-    * trained on the old contents.
-    */
-  def invalidateFitCache(): Unit = fitCache.clear()
 
   /** Persist a fitted merge table as a tiny rank-ordered parquet
     * artifact — the production tokenizer story: train ONCE, ship the

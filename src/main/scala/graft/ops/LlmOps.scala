@@ -1006,7 +1006,7 @@ object LlmOps {
     (String, Double, Long), DataFrame]()
 
   /** [[ngramJaccardPairs]] memoized per (corpus dir, threshold, cap)
-    * — the [[fitTrigramLmCached]] convention applied to the dedup
+    * — the [[fitNgramLmCached]] convention applied to the dedup
     * pair machinery (round-16 verdict item 2): q61's declared
     * contract is literally "pairs here are the exact q40 twin (same
     * threshold/cap semantics)", so one pair enumeration per JVM
@@ -2171,23 +2171,6 @@ object LlmOps {
       table: String): String =
     memoDirKey(dir) + "_s" + tableSignature(spark, dir, table)
 
-  def invalidateTrainerCaches(): Unit = {
-    // IN-JVM ONLY by contract: drop this JVM's memoized trainer fits.
-    // Persisted disk memos are shared, cross-session state — retiring
-    // them is a destructive act that must name its target, so it
-    // routes exclusively through [[invalidateMemosFor]](dir). (An
-    // earlier revision deleted every memo this JVM had touched from
-    // here, which silently destroyed memo state concurrent sessions
-    // were mid-read on whenever a session cleared its own caches.)
-    centroidCache.clear()
-    pqCbCache.clear()
-    trigramLmCache.clear()
-    fourgramCache.clear()
-    fivegramCache.clear()
-    ngramPairsCache.clear()
-    minhashPairsCache.clear()
-  }
-
   /** Every disk-memo family's path prefix, in one place: a memo
     * participates in [[invalidateMemosFor]] iff its name starts with
     * one of these followed by [[memoDirKey]] — forget to list a new
@@ -2226,9 +2209,8 @@ object LlmOps {
     // targeted in-JVM retirement: only this dir's entries
     centroidCache.keySet.removeIf(_._1 == dir)
     pqCbCache.keySet.removeIf(_._1 == dir)
-    trigramLmCache.keySet.removeIf(_._1 == dir)
-    fourgramCache.keySet.removeIf(_._1 == dir)
-    fivegramCache.keySet.removeIf(_._1 == dir)
+    ngramLmCache.keySet.removeIf(_._1 == dir)
+    Bpe.fitCache.keySet.removeIf(_._1 == dir)
     ngramPairsCache.keySet.removeIf(_._1 == dir)
     minhashPairsCache.keySet.removeIf(_._1 == dir)
     ()
@@ -2995,15 +2977,6 @@ object LlmOps {
       s"$indexPath/vectors" -> Some("cell"),
       s"$indexPath/codes" -> Some("cell")))
   }
-
-  /** Explicit-schema read of an ANN index's tombstone directory —
-    * None when no delete was ever recorded. Explicit schema: a
-    * crash-orphaned file-less dir must read as zero tombstones, not
-    * throw at inference (the q126 read-back rule).
-    */
-  private def readAnnDeletes(spark: SparkSession,
-      indexPath: String): Option[DataFrame] =
-    readIdDeletes(spark, indexPath, "vec_id")
 
   /** Anti-join `df` (carrying vec_id) against the index's tombstones,
     * when any exist — the merge-on-read half of [[annIndexDelete]]
@@ -5016,6 +4989,12 @@ object LlmOps {
 
   private def log2(x: Double): Double = math.log(x) / math.log(2.0)
 
+  /** Every LM gate (q100–q139) fits on this reference slice with this
+    * vocab cap.
+    */
+  private final val LmRefSource = "src0"
+  private final val LmVocabCap = 4096
+
   /** #100 LM-perplexity quality filter — the CCNet gate (Wenzek et al.
     * 2020 §4.3): score every document's cross-entropy under a language
     * model trained on a trusted reference corpus, then bucket into
@@ -5041,13 +5020,11 @@ object LlmOps {
     * corpus's 4.84–5.38 bits/token range; CCNet tunes them per
     * language from the reference's own score distribution.
     */
-  def q100PerplexityFilter(spark: SparkSession, dir: String,
-      refSource: String = "src0", vocabCap: Int = 4096,
-      headBits: Long = 4910000L, midBits: Long = 4940000L): DataFrame = {
+  def q100PerplexityFilter(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     perplexityFilter(docs.select("doc_id", "lang", "text"),
-      docs.filter(col("source") === refSource).select("text"),
-      vocabCap, headBits, midBits)
+      docs.filter(col("source") === LmRefSource).select("text"),
+      LmVocabCap, 4910000L, 4940000L)
   }
 
   /** Fit the q100 unigram LM on `ref` (text): a ≤`vocabCap`-row
@@ -5088,10 +5065,26 @@ object LlmOps {
       .groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n_tokens"),
         sum(coalesce(col("bits"), lit(oovBits))).as("bits_micro"))
-      .withColumn("ppl_bucket",
-        when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
-          .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
-          .otherwise("tail"))
+      .withColumn("ppl_bucket", pplBucket(headBits, midBits))
+
+  /** The head/middle/tail bucket of a scored (n_tokens, bits_micro)
+    * row: `bits_micro < threshold × n_tokens` in exact integer
+    * arithmetic (never a division — floor-vs-truncate semantics can
+    * differ across engines). Shared by every LM gate.
+    */
+  private def pplBucket(headBits: Long, midBits: Long): Column =
+    when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
+      .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
+      .otherwise("tail")
+
+  /** Per-token bits of probability `p`, micro-rounded in-plan:
+    * round(−log₂ p · 1e6) as a long — the expression every oracle
+    * writes as `CAST(round(-log2(p) * 1000000.0) AS BIGINT)`.
+    * (functions.log2 qualified: the file-local driver-side
+    * log2(Double) helper shadows the Column overload.)
+    */
+  private def microBits(p: Column): Column =
+    round(-org.apache.spark.sql.functions.log2(p) * lit(1000000.0)).cast("long")
 
   /** #139 PER-LANGUAGE LM perplexity gate — the setup CCNet actually
     * runs (Wenzek et al. 2020 §4.3 trains one model PER LANGUAGE;
@@ -5120,11 +5113,9 @@ object LlmOps {
     * DuckDB oracle (window-ranked vocab + the identical float
     * expression, the q134 token-for-token discipline).
     */
-  def q139PerplexityPerLang(spark: SparkSession, dir: String,
-      refSource: String = "src0", vocabCap: Int = 4096,
-      headBits: Long = 4943000L, midBits: Long = 5006000L): DataFrame =
+  def q139PerplexityPerLang(spark: SparkSession, dir: String): DataFrame =
     perLangPerplexityOf(Tables.documents(spark, dir),
-      col("source") === refSource, vocabCap, headBits, midBits)
+      col("source") === LmRefSource, LmVocabCap, 4943000L, 5006000L)
       .orderBy("doc_id")
 
   /** Core of [[q139PerplexityPerLang]] over any (doc_id, lang, text,
@@ -5145,18 +5136,14 @@ object LlmOps {
         Window.partitionBy("lang").orderBy(col("c").desc, col("tok").asc)))
       .filter(col("rk") <= vocabCap).drop("rk")
     val vl = voc.groupBy("lang").agg(count(lit(1)).as("v"))
-    // written token-for-token as the oracle SQL writes it (clog2:
-    // the Column log2 — the local Double helper shadows the name)
-    def clog2(c: Column): Column = org.apache.spark.sql.functions.log2(c)
+    // written token-for-token as the oracle SQL writes it
     val bits = voc.join(nl, "lang").join(vl, "lang")
       .select(col("lang"), col("tok"),
-        round(-clog2((col("c") + lit(1.0)) / (col("n") + col("v") + lit(1))) *
-          lit(1000000.0)).cast("long").as("bits"))
+        microBits((col("c") + lit(1.0)) / (col("n") + col("v") + lit(1))).as("bits"))
       .localCheckpoint()
     val oov = nl.join(vl, "lang")
       .select(col("lang"),
-        round(-clog2(lit(1.0) / (col("n") + col("v") + lit(1))) *
-          lit(1000000.0)).cast("long").as("oov_bits"))
+        microBits(lit(1.0) / (col("n") + col("v") + lit(1))).as("oov_bits"))
       .localCheckpoint()
     docs
       .select(col("doc_id"), col("lang"),
@@ -5169,9 +5156,7 @@ object LlmOps {
           .as("bits_micro"))
       .withColumn("ppl_bucket",
         when(col("bits_micro") === lit(-1L), "unmodeled")
-          .when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
-          .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
-          .otherwise("tail"))
+          .otherwise(pplBucket(headBits, midBits)))
   }
 
   /** The q77 heuristic quality gate over any (…, doc_id, text)
@@ -5313,920 +5298,309 @@ object LlmOps {
       .orderBy("doc_id")
   }
 
-  /** #117 Interpolated-bigram LM perplexity gate — q100's pipeline
-    * with the model upgraded one order: CCNet's gate is a 5-gram
-    * KenLM (Wenzek et al. 2020 §4.3) and a unigram model is blind to
-    * word ORDER — a token-shuffled document scores identically to its
-    * original under q100, while real quality filtering must prefer
-    * fluent text. The bigram closes most of that gap: per token,
-    *
-    *   P(cur | prev) = 0.5·P_bi + 0.5·P_uni            (interpolation)
-    *   P_uni(cur)    = (c_cur + 1) / (N + V + 1)       (q100's model)
-    *   P_bi(cur|prev)= (c_{prev,cur} + 1) / (c_prev + V + 1)
-    *
-    * with the first token of a document scored by P_uni alone (no
-    * predecessor). Both model tables are BOUNDED regardless of corpus
-    * size: vocab = top `vocabCap` reference tokens, bigrams = top
-    * `bigramCap` reference pairs (count desc, pair asc — the q64/q85
-    * top-V pattern), and the bigram table keeps only pairs whose
-    * `prev` is in-vocab, so c_prev ≥ c_{prev,cur} and every
-    * probability stays below 1. Out-of-table lookups coalesce to
-    * count 0 — exactly the add-one smoothing mass.
-    *
-    * Oracle parity: bits are computed IN-PLAN per token as
-    * −log₂(0.5·P_bi + 0.5·P_uni), micro-rounded, integer-summed (the
-    * q100 machinery); the float expression is written token-for-token
-    * as the DuckDB oracle writes it (same literals, same association),
-    * so only log2's libm ulp drift is engine code — ~1e-9 micro-units
-    * from any rounding boundary. Bucket thresholds compare
-    * `bits_micro < threshold × n_tokens` in exact integers.
-    *
-    * Scale shape: trainer traffic is two TakeOrdered driver transfers
-    * (≤ vocabCap + bigramCap rows); scoring is an explode + THREE
-    * broadcast hash joins (cur-unigram, prev-unigram, bigram — all
-    * map-side) + ONE doc_id-keyed partial-agg exchange. Same cost
-    * class as q100 with one extra broadcast probe per token.
-    * `headBits`/`midBits` are corpus-tuned free parameters (the q97
-    * convention): measured interpolated-bigram bits/token spans
-    * ~4.66–5.52 across sf0.01/sf0.1 (p33 ≈ 4.92–4.96M micro) — the
-    * defaults cut near those terciles. The synthetic corpus's token
-    * order is near-random, so the bigram lowers bits only modestly
-    * here; on real text the gap (and the shuffled-text separation
-    * LlmOpsSpec pins) widens.
+  // -- the n-gram LM ladder (q117, q130, q133–q137): one model, three rules --
+
+  /** A fitted n-gram LM of order `tables.size` — CCNet's gate model
+    * (Wenzek et al. 2020 §4.3 uses a 5-gram KenLM) at bounded size.
+    * `table(k)` is the order-k count table: columns [[gramCols]](k)
+    * (prev(k−1) … prev1, cur — the probe-side names, oldest token
+    * first) plus its count `c`; it holds the top `NgramCaps(k − 1)`
+    * reference k-grams by (count desc, gram asc — the q64/q85 top-V
+    * TakeOrdered pattern), so driver traffic and every broadcast are
+    * capped whatever the reference size. For k ≥ 2 only k-grams whose
+    * (k−1)-token context is itself a row of `table(k − 1)` are kept:
+    * every k-gram occurrence contains a context occurrence counted
+    * over the same reference, so a k-gram's count never exceeds its
+    * context's and every probability [[scoreWithNgramLm]] builds stays
+    * below 1 (no negative bits). `n` is the reference token count,
+    * `v` the vocab rows. All tables are localCheckpoint-pinned, so
+    * scoring replays never re-scan the reference.
     */
-  def q117PerplexityBigram(spark: SparkSession, dir: String,
-      refSource: String = "src0", vocabCap: Int = 4096,
-      bigramCap: Int = 16384, headBits: Long = 4930000L,
-      midBits: Long = 4980000L): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    bigramPerplexity(docs.select("doc_id", "lang", "text"),
-      docs.filter(col("source") === refSource).select("text"),
-      vocabCap, bigramCap, headBits, midBits)
+  final case class NgramLm(tables: Vector[DataFrame], n: Long, v: Long) {
+    def order: Int = tables.size
+    def table(k: Int): DataFrame = tables(k - 1)
   }
 
-  /** Fitted interpolated-bigram model: bounded (tok, c) unigram and
-    * (prev, cur, cb) bigram tables plus the corpus constants (N, V).
-    */
-  final case class BigramLm(uni: DataFrame, bi: DataFrame, n: Long, v: Long)
+  /** Table caps by order: vocab, bigrams, trigrams, 4-grams, 5-grams. */
+  private val NgramCaps = Vector(LmVocabCap, 16384, 32768, 65536, 131072)
 
-  /** Fit the q117 model on `ref` (text): top-`vocabCap` unigrams, top
-    * `bigramCap` in-vocab-prev bigrams — both via TakeOrdered, so
-    * driver traffic is capped no matter the reference size (the
-    * `Bpe.fit` rule). The returned frames are localCheckpoint-pinned
-    * (bounded) so scoring replays never re-scan the reference.
+  /** Probe-side name of the token `i` positions back: cur, prev1, … */
+  private def at(i: Int): String = if (i == 0) "cur" else s"prev$i"
+
+  /** Key columns of an order-`k` table, oldest token first. */
+  private def gramCols(k: Int): Seq[String] = (k - 1 to 0 by -1).map(at)
+
+  /** The order-`j` table keyed as the CONTEXT of an order-(j+1) gram
+    * (every column one position further back), its count as `cnt`.
     */
-  def fitBigramLm(ref: DataFrame, vocabCap: Int,
-      bigramCap: Int): BigramLm = {
-    val toks = ref.select(split(col("text"), " ").as("toks"))
-      .localCheckpoint() // read twice: unigram counts + pair counts
-    val refToks = toks.select(explode(col("toks")).as("tok"))
-    val n = refToks.count()
-    val uni = refToks.groupBy("tok").count()
-      .orderBy(col("count").desc, col("tok").asc).limit(vocabCap)
-      .select(col("tok"), col("count").as("c"))
+  private def contextOf(t: DataFrame, j: Int, cnt: String): DataFrame =
+    t.select((j - 1 to 0 by -1).map(i => col(at(i)).as(at(i + 1))) :+
+      col("c").as(cnt): _*)
+
+  private def tokensOf(ref: DataFrame): DataFrame =
+    ref.select(split(col("text"), " ").as("toks"))
+
+  /** The bounded order-`k` table of `toks` (see [[NgramLm]]): every
+    * k-gram, kept only if its context is a row of `ctx` (order k−1),
+    * counted, TakeOrdered to the order's cap, pinned.
+    */
+  private def ngramTable(toks: DataFrame, k: Int,
+      ctx: Option[DataFrame]): DataFrame = {
+    val names = gramCols(k)
+    val gramType = names.map(_ + ":string").mkString("array<struct<", ",", ">>")
+    val grams = toks.select(explode(
+        when(size(col("toks")) >= k,
+          transform(sequence(lit(0), size(col("toks")) - k),
+            i => struct(names.zipWithIndex.map { case (nm, j) =>
+              element_at(col("toks"), i + (j + 1)).as(nm) }: _*)))
+          .otherwise(array().cast(gramType))).as("g"))
+      .select(names.map(nm => col(s"g.$nm").as(nm)): _*)
+    ctx.fold(grams)(t =>
+        grams.join(broadcast(contextOf(t, k - 1, "ctx_c")), names.init))
+      .groupBy(names.map(col): _*).count()
+      .orderBy(col("count").desc +: names.map(col(_).asc): _*)
+      .limit(NgramCaps(k - 1))
+      .select(names.map(col) :+ col("count").as("c"): _*)
       .localCheckpoint()
-    val v = uni.count()
-    val pairs = toks.select(explode(
-        when(size(col("toks")) >= 2,
-          transform(sequence(lit(0), size(col("toks")) - 2),
-            i => struct(element_at(col("toks"), i + 1).as("prev"),
-              element_at(col("toks"), i + 2).as("cur"))))
-          .otherwise(array().cast("array<struct<prev:string,cur:string>>")))
-        .as("p"))
-      .select(col("p.prev").as("prev"), col("p.cur").as("cur"))
-    // in-vocab prev only: guarantees c_prev >= c_{prev,cur}, so P_bi
-    // < 1 by construction (an OOV-prev bigram would divide by the
-    // smoothing floor and could exceed 1 — negative "bits")
-    val bi = pairs
-      .join(broadcast(uni.select(col("tok").as("prev"))), Seq("prev"))
-      .groupBy("prev", "cur").count()
-      .orderBy(col("count").desc, col("prev").asc, col("cur").asc)
-      .limit(bigramCap)
-      .select(col("prev"), col("cur"), col("count").as("cb"))
-      .localCheckpoint()
-    BigramLm(uni, bi, n, v)
   }
 
-  /** Score `docs` (doc_id, lang, text) under a [[fitBigramLm]] model:
-    * explode with position, three broadcast probes, one doc-keyed
-    * partial-agg exchange, integer bucket thresholds. Pure transform
-    * (the [[scoreWithLm]] contract, bigram edition).
+  /** `lm` one order up: its top table becomes the context of a new
+    * top table counted over `toks`. One reference scan, one
+    * TakeOrdered.
     */
-  def scoreWithBigramLm(docs: DataFrame, lm: BigramLm, headBits: Long,
-      midBits: Long): DataFrame = {
-    val denomUni = lit((lm.n + lm.v + 1).toDouble)
+  private def extended(lm: NgramLm, toks: DataFrame): NgramLm =
+    lm.copy(tables = lm.tables :+
+      ngramTable(toks, lm.order + 1, Some(lm.tables.last)))
+
+  /** Fit an order-`order` [[NgramLm]] on `ref` (text): the vocab and
+    * (N, V), then each higher order from the one below it.
+    */
+  def fitNgramLm(ref: DataFrame, order: Int): NgramLm = {
+    val toks = tokensOf(ref).localCheckpoint() // read once per order
+    val n = toks.select(explode(col("toks"))).count()
+    val uni = ngramTable(toks, 1, None)
+    (2 to order).foldLeft(NgramLm(Vector(uni), n, uni.count()))(
+      (lm, _) => extended(lm, toks))
+  }
+
+  private val ngramLmCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Int), NgramLm]()
+
+  /** [[fitNgramLm]] memoized per (corpus dir, refSource, order), each
+    * order riding the cached order below it (the
+    * [[kmeansCentroidsCached]] convention): q133 and q134 score under
+    * ONE order-3 fit, q135 adds only its 4-gram table to it and q137
+    * only its 5-gram table, so each bench line measures its scoring
+    * rule, not a re-fit. `ref` is by-name: a warm cache builds no
+    * frame and pays zero jobs. The lower order is resolved BEFORE
+    * this key's computeIfAbsent — a computeIfAbsent nested inside
+    * another on the same map throws "Recursive update". Corpus-dir
+    * immutability contract as with every trainer cache;
+    * [[invalidateMemosFor]] drops a dir's entries.
+    */
+  def fitNgramLmCached(ref: => DataFrame, dir: String, refSource: String,
+      order: Int): NgramLm = {
+    lazy val frame = ref
+    val lower =
+      if (order > 1) Some(fitNgramLmCached(frame, dir, refSource, order - 1))
+      else None
+    ngramLmCache.computeIfAbsent((dir, refSource, order),
+      _ => lower.fold(fitNgramLm(frame, order))(extended(_, tokensOf(frame))))
+  }
+
+  /** The probe join every n-gram scorer reads: posexplode into (cur,
+    * prev1 … prev(K−1)) — null where the document has no such
+    * predecessor — then per order k one broadcast hash probe for the
+    * numerator count `nk` (table(k) on prev(k−1) … prev1, cur) and,
+    * for k ≥ 2, one for the context count `dk` (table(k−1) one
+    * position back) — 2K−1 probes, all map-side.
+    */
+  private def ngramProbeJoin(docs: DataFrame, lm: NgramLm): DataFrame = {
     val tok = docs
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), col("lang"), col("toks"),
         posexplode(col("toks")).as(Seq("pos", "cur")))
       // element_at is 1-based: element_at(toks, pos) IS the previous
-      // token of the 0-based position pos; the first token has none
-      .select(col("doc_id"), col("lang"), col("cur"),
-        when(col("pos") > 0, element_at(col("toks"), col("pos"))).as("prev"))
-    val joined = tok
-      .join(broadcast(lm.uni.select(col("tok").as("cur"), col("c").as("cu"))),
-        Seq("cur"), "left")
-      .join(broadcast(lm.uni.select(col("tok").as("prev"), col("c").as("cp"))),
-        Seq("prev"), "left")
-      .join(broadcast(lm.bi), Seq("prev", "cur"), "left")
-    // written token-for-token as the oracle SQL writes it (scaladoc)
-    val puni = (coalesce(col("cu"), lit(0L)) + lit(1.0)) / denomUni
-    val pbi = (coalesce(col("cb"), lit(0L)) + lit(1.0)) /
-      (coalesce(col("cp"), lit(0L)) + lit(lm.v + 1))
-    // functions.log2 qualified: the file-local driver-side
-    // log2(Double) helper shadows the Column overload
-    def clog2(c: Column): Column = org.apache.spark.sql.functions.log2(c)
-    val bits = when(col("prev").isNull,
-        round(-clog2(puni) * lit(1000000.0)).cast("long"))
-      .otherwise(
-        round(-clog2(lit(0.5) * pbi + lit(0.5) * puni) * lit(1000000.0)).cast("long"))
+      // token of the 0-based position pos
+      .select(Seq(col("doc_id"), col("lang"), col("cur")) ++
+        (1 until lm.order).map(j => when(col("pos") > (j - 1),
+          element_at(col("toks"), col("pos") - (j - 1))).as(at(j))): _*)
+    val probes = lm.table(1).select(col("cur"), col("c").as("n1")) +:
+      (2 to lm.order).flatMap(k => Seq(
+        contextOf(lm.table(k - 1), k - 1, s"d$k"),
+        lm.table(k).withColumnRenamed("c", s"n$k")))
+    probes.foldLeft(tok)((df, t) => df.join(broadcast(t), t.columns.init, "left"))
+  }
+
+  /** The scoring rules the LM gates declare, each over the same
+    * [[ngramProbeJoin]] counts (`nk` numerator, `dk` context, both
+    * null when out of table). Position j of a document (j
+    * predecessors) scores under order min(j + 1, K).
+    */
+  sealed trait LmRule
+  object LmRule {
+    /** Add-one orders interpolated with equal weight (q117 at order 2,
+      * q130 at order 3):
+      *   P_1 = (n1 + 1) / (N + V + 1),  P_k = (nk + 1) / (dk + V + 1)
+      *   pos 0: P_1;  pos 1: 0.5·P_2 + 0.5·P_1;  pos ≥ 2: (P_3 + P_2 + P_1) / 3.0
+      * Out-of-table counts coalesce to 0 — the add-one smoothing mass.
+      */
+    case object Interpolated extends LmRule
+    /** Stupid backoff (Brants et al. 2007 §4; q133): relative
+      * frequencies with a fixed α = 0.4 penalty per backoff,
+      *   S_k = nk / dk  if the k-gram is in table,  else 0.4 · S_(k−1)
+      * over q100's add-one unigram base S_1 = P_1 — pure stupid
+      * backoff leaves an OOV token at S = 0 (−log₂ undefined); the
+      * smoothed base is the one declared deviation. In-table ratios
+      * are ≤ 1 by the fit invariant, so bits stay non-negative.
+      */
+    case object Backoff extends LmRule
+    /** Kneser–Ney with a fixed discount D = 0.75 (Kneser & Ney 1995;
+      * Chen & Goodman 1999 §2.7; KenLM's smoother — q134/q135/q137 at
+      * orders 3/4/5). Aux stats are integer counts over the fitted
+      * tables: n1b = distinct in-table predecessors of cur, fk =
+      * distinct in-table continuations of the k-token context, B =
+      * bigram rows.
+      *   P_cont = (n1b + 1) / (B + V + 1)          (pos 0 — KN's base)
+      *   P_k = (nk − D)/dk + (D·f(k−1)/dk)·P_(k−1)   k-gram in table
+      *       | (D·f(k−1)/dk)·P_(k−1)                 context has table k-grams
+      *       | P_(k−1)                               else, with P_1 = P_cont
+      * Every branch lies in (0, 1): each of a context's f distinct
+      * in-table continuations contributes ≥ 1 occurrence to its count
+      * d (same reference; the cap only shrinks f), so
+      * nk + D·(f − 1) ≤ dk, while nk ≥ 1 > D keeps the head positive;
+      * P_cont's add-one base keeps an OOV token finite (the Backoff
+      * deviation) and n1b ≤ B bounds it under 1.
+      */
+    case object KneserNey extends LmRule
+  }
+
+  /** Score `docs` (doc_id, lang, text) under `lm` with `rule`: the
+    * [[ngramProbeJoin]] (plus, for Kneser–Ney, one bounded broadcast
+    * per aux stat), per-token [[microBits]], ONE doc_id-keyed
+    * partial-agg exchange, integer [[pplBucket]] thresholds. Pure
+    * transform (the [[scoreWithLm]] contract at order K).
+    *
+    * Oracle parity: every probability is written token-for-token as
+    * the DuckDB oracle writes it (same literals, same association), so
+    * only log2's libm ulp drift is engine code — ~1e-9 micro-units from
+    * any rounding boundary.
+    */
+  def scoreWithNgramLm(docs: DataFrame, lm: NgramLm, rule: LmRule,
+      headBits: Long, midBits: Long): DataFrame = {
+    def n(k: Int): Column = col(s"n$k")
+    def d(k: Int): Column = col(s"d$k")
+    val probed = ngramProbeJoin(docs, lm)
+    val p1 = (coalesce(n(1), lit(0L)) + lit(1.0)) /
+      lit((lm.n + lm.v + 1).toDouble)
+    def addOne(k: Int): Column = (coalesce(n(k), lit(0L)) + lit(1.0)) /
+      (coalesce(d(k), lit(0L)) + lit(lm.v + 1))
+    // byPos(j): the probability of a token with j predecessors
+    val (joined, byPos) = rule match {
+      case LmRule.Interpolated =>
+        require(lm.order <= 3, "interpolation is declared for orders 2 and 3")
+        (probed, Seq(p1, lit(0.5) * addOne(2) + lit(0.5) * p1,
+          (addOne(3) + addOne(2) + p1) / lit(3.0)).take(lm.order))
+      case LmRule.Backoff =>
+        (probed, (2 to lm.order).scanLeft(p1)((s, k) =>
+          when(n(k).isNotNull, n(k).cast("double") / d(k))
+            .otherwise(lit(0.4) * s)))
+      case LmRule.KneserNey =>
+        val b = lm.table(2).count()
+        val aux = lm.table(2).groupBy("cur").agg(count(lit(1)).as("n1b")) +:
+          (2 to lm.order).map(k => lm.table(k).groupBy(gramCols(k).init.map(col): _*)
+            .agg(count(lit(1)).as(s"f${k - 1}")))
+        val pcont = (coalesce(col("n1b"), lit(0L)) + lit(1.0)) /
+          lit((b + lm.v + 1).toDouble)
+        (aux.foldLeft(probed)((df, t) =>
+            df.join(broadcast(t), t.columns.init, "left")),
+          (2 to lm.order).scanLeft(pcont) { (p, k) =>
+            val f = col(s"f${k - 1}")
+            when(n(k).isNotNull,
+                (n(k) - lit(0.75)) / d(k) + (lit(0.75) * f / d(k)) * p)
+              .when(f.isNotNull, (lit(0.75) * f / d(k)) * p)
+              .otherwise(p)
+          })
+    }
+    val early = byPos.init.zipWithIndex.map { case (p, j) =>
+      col(at(j + 1)).isNull -> microBits(p) }
+    val bits = early.tail
+      .foldLeft(when(early.head._1, early.head._2)) { case (w, (c, v)) => w.when(c, v) }
+      .otherwise(microBits(byPos.last))
     joined
       .groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n_tokens"), sum(bits).as("bits_micro"))
-      .withColumn("ppl_bucket",
-        when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
-          .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
-          .otherwise("tail"))
+      .withColumn("ppl_bucket", pplBucket(headBits, midBits))
   }
 
-  /** DataFrame core of [[q117PerplexityBigram]]. */
-  def bigramPerplexity(docs: DataFrame, ref: DataFrame, vocabCap: Int,
-      bigramCap: Int, headBits: Long, midBits: Long): DataFrame =
-    scoreWithBigramLm(docs, fitBigramLm(ref, vocabCap, bigramCap),
-      headBits, midBits).orderBy("doc_id")
-
-  /** #130 Interpolated-TRIGRAM LM perplexity gate — [[q117PerplexityBigram]]
-    * upgraded one more order toward CCNet's 5-gram KenLM (Wenzek et
-    * al. 2020 §4.3; KenLM's SMOOTHER — Kneser–Ney — is the q134 tier,
-    * [[q134PerplexityKneserNey]]; order here stays 3, the declared
-    * stop of this ladder at harness scale). Per token:
-    *
-    *   pos 0:  P_uni                          (no predecessor)
-    *   pos 1:  0.5·P_bi + 0.5·P_uni           (exactly q117's rule)
-    *   pos ≥2: (P_tri + P_bi + P_uni) / 3.0   (equal-weight interpolation)
-    *
-    *   P_tri(cur | prev2, prev) = (c_tri + 1) / (c_ctx + V + 1)
-    *
-    * where c_ctx is the CONTEXT bigram's (prev2, prev) table count.
-    * The trigram table keeps only trigrams whose context is an
-    * in-table bigram — the q117 in-vocab-prev invariant lifted one
-    * order: c_ctx ≥ c_tri always (every trigram occurrence contains a
-    * context-bigram occurrence, both counted over the same reference),
-    * so P_tri < 1 by construction and bits stay positive. All three
-    * model tables are TakeOrdered-BOUNDED (vocabCap/bigramCap/
-    * trigramCap) regardless of reference size; out-of-table lookups
-    * coalesce to count 0 — the add-one smoothing mass.
-    *
-    * Oracle parity: the q117 machinery verbatim — per-token bits
-    * micro-rounded in-plan from an expression written token-for-token
-    * as the DuckDB oracle writes it, integer-summed, integer bucket
-    * thresholds. Scale shape: trainer traffic is THREE TakeOrdered
-    * transfers; scoring is one posexplode + five broadcast hash
-    * probes (two against the unigram table, two against the bigram
-    * table under different key aliases, one trigram) + ONE
-    * doc_id-keyed partial-agg exchange. `headBits`/`midBits` cut near
-    * the measured terciles (the q117 convention).
+  /** A declared n-gram gate: fit an order-`order` model on the
+    * documents' reference slice — fresh, or via [[fitNgramLmCached]] —
+    * and score every document with `rule`. `headBits`/`midBits` are
+    * corpus-tuned free parameters (the q97 convention) cut near the
+    * measured sf0.01 terciles of bits_micro / n_tokens.
     */
-  def q130PerplexityTrigram(spark: SparkSession, dir: String,
-      refSource: String = "src0", vocabCap: Int = 4096,
-      bigramCap: Int = 16384, trigramCap: Int = 32768,
-      headBits: Long = 4960000L, midBits: Long = 4995000L): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    // q130 is the FRESH-fit carrier of the LM ladder: its bench line
-    // pays the trainer pass every sample, so the record always holds
-    // the fresh trigram-fit cost somewhere. The higher tiers
-    // (q133/q134/q135) ride [[fitTrigramLmCached]] per their declared
-    // "same fitted tables as q130" contract — the q109-gates-q116
-    // fresh-path convention applied to trainer state.
-    scoreWithTrigramLm(docs.select("doc_id", "lang", "text"),
-      fitTrigramLm(docs.filter(col("source") === refSource)
-        .select("text"), vocabCap, bigramCap, trigramCap),
-      headBits, midBits).orderBy("doc_id")
-  }
-
-  /** Fitted interpolated-trigram model: the [[BigramLm]] tables plus
-    * the bounded (p2, p1, cur, ct) trigram table.
-    */
-  final case class TrigramLm(uni: DataFrame, bi: DataFrame,
-      tri: DataFrame, n: Long, v: Long)
-
-  /** Fit the q130 model on `ref` (text): [[fitBigramLm]]'s tables,
-    * then the top-`trigramCap` trigrams whose (prev2, prev) context
-    * is an in-table bigram (count desc, triple asc — the q64/q85
-    * top-V pattern). One extra reference scan + one TakeOrdered.
-    */
-  def fitTrigramLm(ref: DataFrame, vocabCap: Int, bigramCap: Int,
-      trigramCap: Int): TrigramLm = {
-    val base = fitBigramLm(ref, vocabCap, bigramCap)
-    val toks = ref.select(split(col("text"), " ").as("toks"))
-    val tripleType = "array<struct<p2:string,p1:string,cur:string>>"
-    val tris = toks.select(explode(
-        when(size(col("toks")) >= 3,
-          transform(sequence(lit(0), size(col("toks")) - 3),
-            i => struct(element_at(col("toks"), i + 1).as("p2"),
-              element_at(col("toks"), i + 2).as("p1"),
-              element_at(col("toks"), i + 3).as("cur"))))
-          .otherwise(array().cast(tripleType))).as("t"))
-      .select(col("t.p2").as("p2"), col("t.p1").as("p1"),
-        col("t.cur").as("cur"))
-    val tri = tris
-      .join(broadcast(base.bi.select(col("prev").as("p2"),
-        col("cur").as("p1"))), Seq("p2", "p1"))
-      .groupBy("p2", "p1", "cur").count()
-      .orderBy(col("count").desc, col("p2").asc, col("p1").asc,
-        col("cur").asc)
-      .limit(trigramCap)
-      .select(col("p2"), col("p1"), col("cur"), col("count").as("ct"))
-      .localCheckpoint()
-    TrigramLm(base.uni, base.bi, tri, base.n, base.v)
-  }
-
-  private val trigramLmCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int), TrigramLm]()
-
-  /** [[fitTrigramLm]] memoized per (corpus dir, refSource, caps) —
-    * the q130/q133/q134/q135 tiers score under the IDENTICAL fitted
-    * tables (q133's declared contract is literally "no new trainer
-    * pass — the SAME three fitted tables as q130"), so one fit per
-    * JVM serves all four, and the declared difference between the
-    * tiers — the scoring RULE — is exactly what each bench line then
-    * measures (the [[kmeansCentroidsCached]] convention). `ref` is
-    * by-name: a warm cache builds no frame and pays zero jobs. The
-    * fitted tables are localCheckpointed and bounded
-    * (vocabCap + bigramCap + trigramCap rows), so the pinned blocks
-    * are KB-scale. Corpus-dir immutability contract as with every
-    * trainer cache (see the scaladoc on the clear hook below).
-    */
-  def fitTrigramLmCached(ref: => DataFrame, dir: String, refSource: String,
-      vocabCap: Int, bigramCap: Int, trigramCap: Int): TrigramLm =
-    trigramLmCache.computeIfAbsent(
-      (dir, refSource, vocabCap, bigramCap, trigramCap),
-      _ => fitTrigramLm(ref, vocabCap, bigramCap, trigramCap))
-
-  /** Score `docs` (doc_id, lang, text) under a [[fitTrigramLm]]
-    * model: posexplode, five broadcast probes, one doc-keyed
-    * partial-agg exchange, integer bucket thresholds (the
-    * [[scoreWithBigramLm]] contract, trigram edition).
-    */
-  def scoreWithTrigramLm(docs: DataFrame, lm: TrigramLm, headBits: Long,
+  private def ngramGate(spark: SparkSession, dir: String, order: Int,
+      cached: Boolean, rule: LmRule, headBits: Long,
       midBits: Long): DataFrame = {
-    val denomUni = lit((lm.n + lm.v + 1).toDouble)
-    val joined = trigramProbeJoin(docs, lm)
-    // written token-for-token as the oracle SQL writes it
-    val puni = (coalesce(col("cu"), lit(0L)) + lit(1.0)) / denomUni
-    val pbi = (coalesce(col("cb"), lit(0L)) + lit(1.0)) /
-      (coalesce(col("cp"), lit(0L)) + lit(lm.v + 1))
-    val ptri = (coalesce(col("ct"), lit(0L)) + lit(1.0)) /
-      (coalesce(col("cbc"), lit(0L)) + lit(lm.v + 1))
-    def clog2(c: Column): Column = org.apache.spark.sql.functions.log2(c)
-    val bits = when(col("prev").isNull,
-        round(-clog2(puni) * lit(1000000.0)).cast("long"))
-      .when(col("prev2").isNull,
-        round(-clog2(lit(0.5) * pbi + lit(0.5) * puni) * lit(1000000.0)).cast("long"))
-      .otherwise(
-        round(-clog2((ptri + pbi + puni) / lit(3.0)) * lit(1000000.0)).cast("long"))
-    joined
-      .groupBy("doc_id", "lang")
-      .agg(count(lit(1)).as("n_tokens"), sum(bits).as("bits_micro"))
-      .withColumn("ppl_bucket",
-        when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
-          .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
-          .otherwise("tail"))
-  }
-
-  /** The five-probe broadcast join every trigram-model scorer reads —
-    * ONE definition shared by the interpolated (q130) and
-    * stupid-backoff (q133) scorers, so the probe shape PlanSpec pins
-    * cannot drift between them: posexplode into (pos, cur, prev,
-    * prev2), then broadcast hash probes against the unigram table
-    * (twice, under cur/prev aliases), the bigram table (twice — the
-    * scored bigram and the trigram CONTEXT bigram), and the trigram
-    * table.
-    */
-  private def trigramProbeJoin(docs: DataFrame, lm: TrigramLm): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), col("lang"), col("toks"),
-        posexplode(col("toks")).as(Seq("pos", "cur")))
-      .select(col("doc_id"), col("lang"), col("pos"), col("cur"),
-        when(col("pos") > 0, element_at(col("toks"), col("pos"))).as("prev"),
-        when(col("pos") > 1, element_at(col("toks"), col("pos") - 1)).as("prev2"))
-    tok
-      .join(broadcast(lm.uni.select(col("tok").as("cur"), col("c").as("cu"))),
-        Seq("cur"), "left")
-      .join(broadcast(lm.uni.select(col("tok").as("prev"), col("c").as("cp"))),
-        Seq("prev"), "left")
-      .join(broadcast(lm.bi), Seq("prev", "cur"), "left")
-      .join(broadcast(lm.bi.select(col("prev").as("prev2"),
-        col("cur").as("prev"), col("cb").as("cbc"))),
-        Seq("prev2", "prev"), "left")
-      .join(broadcast(lm.tri.select(col("p2").as("prev2"),
-        col("p1").as("prev"), col("cur"), col("ct"))),
-        Seq("prev2", "prev", "cur"), "left")
-  }
-
-  /** #133 Stupid-backoff LM perplexity gate — the scoring rule CCNet's
-    * scale-tier actually ships (Brants et al. 2007 §4: no normalized
-    * smoothing, just relative frequencies with a fixed backoff
-    * penalty), run over the SAME three fitted tables as q130 (no new
-    * trainer pass — the declared step past equal-weight
-    * interpolation). Per token:
-    *
-    *   S(cur | p2, p1) = c_tri / c_ctx            trigram in table
-    *                   | α · S(cur | p1)          else
-    *   S(cur | p1)     = c_bi / c_prev            bigram in table
-    *                   | α · S(cur)               else
-    *   S(cur)          = (c_uni + 1) / (N + V + 1)
-    *
-    * with α = 0.4 (the published constant). The unigram base keeps
-    * q100's add-one shape — pure stupid backoff leaves an OOV token
-    * at S = 0 (−log2 undefined); the smoothed base is the one
-    * deviation, declared here, that keeps bits finite while the
-    * higher orders stay exact relative frequencies. Both in-table
-    * ratios are ≤ 1 by the fit invariants (a trigram's context
-    * bigram and a bigram's prev unigram are counted over the same
-    * reference), so bits stay non-negative. Same oracle-parity
-    * discipline as q117/q130: per-token bits micro-rounded from an
-    * expression written token-for-token as the DuckDB oracle writes
-    * it, integer-summed, integer bucket thresholds. Plan shape is
-    * [[trigramProbeJoin]] — five broadcast probes, one doc-keyed
-    * exchange — identical to q130's PlanSpec-pinned shape.
-    */
-  def q133PerplexityBackoff(spark: SparkSession, dir: String,
-      refSource: String = "src0", vocabCap: Int = 4096,
-      bigramCap: Int = 16384, trigramCap: Int = 32768,
-      headBits: Long = 6050000L, midBits: Long = 6250000L): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    scoreWithBackoffLm(docs.select("doc_id", "lang", "text"),
-      fitTrigramLmCached(docs.filter(col("source") === refSource)
-        .select("text"), dir, refSource, vocabCap, bigramCap, trigramCap),
+    def ref = docs.filter(col("source") === LmRefSource).select("text")
+    val lm =
+      if (cached) fitNgramLmCached(ref, dir, LmRefSource, order)
+      else fitNgramLm(ref, order)
+    scoreWithNgramLm(docs.select("doc_id", "lang", "text"), lm, rule,
       headBits, midBits).orderBy("doc_id")
   }
 
-  /** Score `docs` under a [[fitTrigramLm]] model with stupid backoff
-    * (the [[scoreWithTrigramLm]] contract, q133's rule).
+  /** #117 Interpolated-bigram LM gate — q100's pipeline one order up:
+    * a unigram model is blind to word ORDER (a token-shuffled document
+    * scores identically to its original under q100), while quality
+    * filtering must prefer fluent text. Fresh fit. Scale shape: two
+    * bounded TakeOrdered transfers to fit; scoring is three broadcast
+    * probes plus one doc-keyed exchange.
     */
-  def scoreWithBackoffLm(docs: DataFrame, lm: TrigramLm, headBits: Long,
-      midBits: Long): DataFrame = {
-    val denomUni = lit((lm.n + lm.v + 1).toDouble)
-    val joined = trigramProbeJoin(docs, lm)
-    // written token-for-token as the oracle SQL writes it
-    val sUni = (coalesce(col("cu"), lit(0L)) + lit(1.0)) / denomUni
-    val sBi = when(col("cb").isNotNull,
-      col("cb").cast("double") / col("cp")).otherwise(lit(0.4) * sUni)
-    val sTri = when(col("ct").isNotNull,
-      col("ct").cast("double") / col("cbc")).otherwise(lit(0.4) * sBi)
-    def clog2(c: Column): Column = org.apache.spark.sql.functions.log2(c)
-    val bits = when(col("prev").isNull,
-        round(-clog2(sUni) * lit(1000000.0)).cast("long"))
-      .when(col("prev2").isNull,
-        round(-clog2(sBi) * lit(1000000.0)).cast("long"))
-      .otherwise(
-        round(-clog2(sTri) * lit(1000000.0)).cast("long"))
-    joined
-      .groupBy("doc_id", "lang")
-      .agg(count(lit(1)).as("n_tokens"), sum(bits).as("bits_micro"))
-      .withColumn("ppl_bucket",
-        when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
-          .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
-          .otherwise("tail"))
-  }
+  def q117PerplexityBigram(spark: SparkSession, dir: String): DataFrame =
+    ngramGate(spark, dir, 2, cached = false, LmRule.Interpolated,
+      4930000L, 4980000L)
 
-  /** #134 Kneser–Ney LM perplexity gate — the smoother KenLM actually
-    * ships (Kneser & Ney 1995; Chen & Goodman 1999 §2.7; Heafield
-    * 2011), closing the declared gap between q130/q133 and the CCNet
-    * citation (Wenzek et al. 2020 §4.3): absolute discounting with a
-    * FIXED D = 0.75 plus continuation-count backoff, over the SAME
-    * three fitted tables as q130/q133 (no new trainer pass). Per
-    * token, with table lookups c_tri/c_ctx/c_bi/c_prev and the
-    * aux stats derived from the fitted tables themselves —
-    * N1(•,cur) = n1b (distinct in-table predecessors of cur),
-    * N1(prev,•) = f1 (distinct in-table continuations of prev),
-    * N1(p2 p1,•) = f2 (distinct in-table trigram continuations),
-    * B = bigram TYPES in table:
-    *
-    *   P_cont(cur)      = (n1b + 1) / (B + V + 1)
-    *   P_bi(cur|prev)   = (c_bi − D)/c_prev + (D·f1/c_prev)·P_cont   bigram in table
-    *                    | (D·f1/c_prev)·P_cont                        prev has table bigrams
-    *                    | P_cont                                      else
-    *   P_tri(cur|p2,p1) = (c_tri − D)/c_ctx + (D·f2/c_ctx)·P_bi      trigram in table
-    *                    | (D·f2/c_ctx)·P_bi                           ctx has table trigrams
-    *                    | P_bi                                        else
-    *
-    * Every branch lies in (0, 1): c_bi + D·(f1 − 1) ≤ c_prev because
-    * each of prev's f1 distinct in-table continuations contributes
-    * ≥ 1 occurrence to c_prev (counted over the same reference, and
-    * the capped table only shrinks f1) — so the discounted head plus
-    * the backoff mass stays under 1 while c_bi ≥ 1 > D keeps it
-    * positive; the trigram level repeats the argument against c_ctx;
-    * P_cont's add-one base keeps an OOV token finite (the q133
-    * declared deviation) and n1b ≤ B bounds it under 1. Bits are
-    * therefore positive at every position — pos 0 scores under
-    * P_cont itself (KN's base distribution IS the continuation
-    * distribution), pos 1 under P_bi, pos ≥ 2 under P_tri.
-    *
-    * Oracle parity: the q117/q130/q133 discipline verbatim — all
-    * aux stats are deterministic integer counts over the bounded
-    * tables, the per-token float expression is written
-    * token-for-token as the DuckDB oracle writes it, bits
-    * micro-round in-plan and integer-sum. Plan shape:
-    * [[trigramProbeJoin]]'s five broadcast probes plus THREE more
-    * bounded broadcasts (n1b/f1/f2 — each a groupBy of an
-    * already-bounded table), still one doc-keyed exchange.
+  /** #130 Interpolated-trigram LM gate — q117 one order up. The FRESH
+    * fit carrier of the ladder: its bench line pays the trainer pass
+    * every sample, so the record always holds the fresh-fit cost (the
+    * q109-gates-q116 fresh-path convention applied to trainer state).
+    * Five broadcast probes, one doc-keyed exchange.
     */
-  def q134PerplexityKneserNey(spark: SparkSession, dir: String,
-      refSource: String = "src0", vocabCap: Int = 4096,
-      bigramCap: Int = 16384, trigramCap: Int = 32768,
-      headBits: Long = 5390000L, midBits: Long = 5520000L): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    scoreWithKneserNeyLm(docs.select("doc_id", "lang", "text"),
-      fitTrigramLmCached(docs.filter(col("source") === refSource)
-        .select("text"), dir, refSource, vocabCap, bigramCap, trigramCap),
-      headBits, midBits).orderBy("doc_id")
-  }
+  def q130PerplexityTrigram(spark: SparkSession, dir: String): DataFrame =
+    ngramGate(spark, dir, 3, cached = false, LmRule.Interpolated,
+      4960000L, 4995000L)
 
-  /** Score `docs` under a [[fitTrigramLm]] model with fixed-discount
-    * Kneser–Ney (the [[scoreWithTrigramLm]] contract, q134's rule).
+  /** #133 Stupid-backoff LM gate — the scoring rule CCNet's scale
+    * tier ships, over the cached order-3 fit it shares with q134.
     */
-  def scoreWithKneserNeyLm(docs: DataFrame, lm: TrigramLm,
-      headBits: Long, midBits: Long): DataFrame = {
-    // aux continuation stats from the FITTED tables — three bounded
-    // groupBys plus one count over checkpointed broadcast-sized
-    // relations, not a reference scan
-    val n1b = lm.bi.groupBy("cur").agg(count(lit(1)).as("n1b"))
-    val f1 = lm.bi.groupBy("prev").agg(count(lit(1)).as("f1"))
-    val f2 = lm.tri.groupBy("p2", "p1").agg(count(lit(1)).as("f2"))
-      .select(col("p2").as("prev2"), col("p1").as("prev"), col("f2"))
-    val b = lm.bi.count()
-    val joined = trigramProbeJoin(docs, lm)
-      .join(broadcast(n1b), Seq("cur"), "left")
-      .join(broadcast(f1), Seq("prev"), "left")
-      .join(broadcast(f2), Seq("prev2", "prev"), "left")
-    // written token-for-token as the oracle SQL writes it
-    val pcont = (coalesce(col("n1b"), lit(0L)) + lit(1.0)) /
-      lit((b + lm.v + 1).toDouble)
-    val pbi = when(col("cb").isNotNull,
-        (col("cb") - lit(0.75)) / col("cp") +
-          (lit(0.75) * col("f1") / col("cp")) * pcont)
-      .when(col("f1").isNotNull,
-        (lit(0.75) * col("f1") / col("cp")) * pcont)
-      .otherwise(pcont)
-    val ptri = when(col("ct").isNotNull,
-        (col("ct") - lit(0.75)) / col("cbc") +
-          (lit(0.75) * col("f2") / col("cbc")) * pbi)
-      .when(col("f2").isNotNull,
-        (lit(0.75) * col("f2") / col("cbc")) * pbi)
-      .otherwise(pbi)
-    def clog2(c: Column): Column = org.apache.spark.sql.functions.log2(c)
-    val bits = when(col("prev").isNull,
-        round(-clog2(pcont) * lit(1000000.0)).cast("long"))
-      .when(col("prev2").isNull,
-        round(-clog2(pbi) * lit(1000000.0)).cast("long"))
-      .otherwise(
-        round(-clog2(ptri) * lit(1000000.0)).cast("long"))
-    joined
-      .groupBy("doc_id", "lang")
-      .agg(count(lit(1)).as("n_tokens"), sum(bits).as("bits_micro"))
-      .withColumn("ppl_bucket",
-        when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
-          .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
-          .otherwise("tail"))
-  }
+  def q133PerplexityBackoff(spark: SparkSession, dir: String): DataFrame =
+    ngramGate(spark, dir, 3, cached = true, LmRule.Backoff,
+      6050000L, 6250000L)
 
-  /** Fitted 4-gram Kneser–Ney model: the [[TrigramLm]] tables plus
-    * the bounded (p3, p2, p1, cur, cq) fourgram table.
+  /** #134 Kneser–Ney LM gate — the smoother KenLM ships, over the
+    * cached order-3 fit; five probes plus three bounded aux broadcasts
+    * (n1b, f1, f2).
     */
-  final case class FourgramLm(tri: TrigramLm, quad: DataFrame)
+  def q134PerplexityKneserNey(spark: SparkSession, dir: String): DataFrame =
+    ngramGate(spark, dir, 3, cached = true, LmRule.KneserNey,
+      5390000L, 5520000L)
 
-  /** Fit the q135 model on `ref` (text): [[fitTrigramLm]]'s tables,
-    * then the top-`fourgramCap` 4-grams whose (p3, p2, p1) context is
-    * an in-table TRIGRAM — the q130 context invariant lifted one more
-    * order (every 4-gram occurrence contains a context-trigram
-    * occurrence counted over the same reference, so cq ≤ the
-    * context's ct and the discounted ratio stays under 1). One extra
-    * reference scan + one TakeOrdered; every table stays
-    * broadcast-bounded regardless of reference size.
+  /** #135 4-gram Kneser–Ney LM gate — q134 one order up, riding the
+    * cached order-3 fit; seven probes plus four aux broadcasts.
     */
-  def fitFourgramLm(ref: DataFrame, vocabCap: Int, bigramCap: Int,
-      trigramCap: Int, fourgramCap: Int): FourgramLm = {
-    val base = fitTrigramLm(ref, vocabCap, bigramCap, trigramCap)
-    FourgramLm(base, fourgramTableOf(ref, base, fourgramCap))
-  }
+  def q135PerplexityKneserNey4(spark: SparkSession, dir: String): DataFrame =
+    ngramGate(spark, dir, 4, cached = true, LmRule.KneserNey,
+      5407000L, 5529000L)
 
-  private val fourgramCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int, Int), FourgramLm]()
-
-  /** [[fitFourgramLm]] riding the SHARED cached trigram base
-    * ([[fitTrigramLmCached]]) with its own memoized quad table — the
-    * warm path q135 takes so its bench line measures the 4-gram
-    * SCORING rule, not a re-fit of the three tables q130 already
-    * gated (the kmeansCentroidsCached convention, one order up).
+  /** #137 5-gram Kneser–Ney LM gate — the ladder's final rung, the
+    * order of CCNet's cited KenLM, riding the cached order-4 fit; nine
+    * probes plus five aux broadcasts, still one doc-keyed exchange.
     */
-  def fitFourgramLmCached(ref: => DataFrame, dir: String,
-      refSource: String, vocabCap: Int, bigramCap: Int,
-      trigramCap: Int, fourgramCap: Int): FourgramLm = {
-    lazy val frame = ref
-    fourgramCache.computeIfAbsent(
-      (dir, refSource, vocabCap, bigramCap, trigramCap, fourgramCap),
-      _ => {
-        val base = fitTrigramLmCached(frame, dir, refSource, vocabCap,
-          bigramCap, trigramCap)
-        FourgramLm(base, fourgramTableOf(frame, base, fourgramCap))
-      })
-  }
-
-  /** The bounded fourgram table of [[fitFourgramLm]] (top-`fourgramCap`
-    * whose (p3, p2, p1) context is an in-table trigram of `base`).
-    */
-  private def fourgramTableOf(ref: DataFrame, base: TrigramLm,
-      fourgramCap: Int): DataFrame = {
-    val toks = ref.select(split(col("text"), " ").as("toks"))
-    val quadType = "array<struct<p3:string,p2:string,p1:string,cur:string>>"
-    val quads = toks.select(explode(
-        when(size(col("toks")) >= 4,
-          transform(sequence(lit(0), size(col("toks")) - 4),
-            i => struct(element_at(col("toks"), i + 1).as("p3"),
-              element_at(col("toks"), i + 2).as("p2"),
-              element_at(col("toks"), i + 3).as("p1"),
-              element_at(col("toks"), i + 4).as("cur"))))
-          .otherwise(array().cast(quadType))).as("q"))
-      .select(col("q.p3").as("p3"), col("q.p2").as("p2"),
-        col("q.p1").as("p1"), col("q.cur").as("cur"))
-    val quad = quads
-      .join(broadcast(base.tri.select(col("p2").as("p3"),
-        col("p1").as("p2"), col("cur").as("p1"))), Seq("p3", "p2", "p1"))
-      .groupBy("p3", "p2", "p1", "cur").count()
-      .orderBy(col("count").desc, col("p3").asc, col("p2").asc,
-        col("p1").asc, col("cur").asc)
-      .limit(fourgramCap)
-      .select(col("p3"), col("p2"), col("p1"), col("cur"),
-        col("count").as("cq"))
-      .localCheckpoint()
-    quad
-  }
-
-  /** #135 4-gram Kneser–Ney LM perplexity gate — the q134 smoother
-    * lifted one order toward CCNet's cited 5-gram KenLM (Wenzek et
-    * al. 2020 §4.3; reference anchor: the perplexity-gated corpus
-    * prep the reference delegates to its upstream data vendor,
-    * README.md:34-42). Same fixed discount D = 0.75 and the same
-    * continuation-count backoff chain, extended by one tier:
-    *
-    *   pos 0:  P_cont                (KN's base distribution)
-    *   pos 1:  P_bi                  (q134's bigram rule)
-    *   pos 2:  P_tri                 (q134's trigram rule)
-    *   pos ≥3: P_quad(cur | p3,p2,p1) =
-    *             (cq − D)/ctc + (D·f3/ctc)·P_tri    4-gram in table
-    *           | (D·f3/ctc)·P_tri                   context has fits
-    *           | P_tri                              else
-    *
-    * where ctc is the CONTEXT trigram's table count and f3 the count
-    * of distinct in-table continuations of that context (a groupBy of
-    * the already-bounded fourgram table — the q134 aux-stat rule, one
-    * order up). cq ≤ ctc and f3 ≤ ctc by the fit invariants, so
-    * P_quad < 1 and bits stay positive at every position.
-    *
-    * Oracle parity: the q117/q130/q133/q134 discipline verbatim —
-    * aux stats are integer counts over bounded tables, the per-token
-    * float expression is written token-for-token as the DuckDB
-    * oracle writes it (the oracle SQL is COMPOSED from the same
-    * nested-CASE building blocks), bits micro-round in-plan and
-    * integer-sum. Plan shape: [[fourgramProbeJoin]]'s seven broadcast
-    * probes plus FOUR aux broadcasts (n1b/f1/f2/f3), still ONE
-    * doc-keyed exchange — PlanSpec pins zero sort-merge joins.
-    */
-  def q135PerplexityKneserNey4(spark: SparkSession, dir: String,
-      refSource: String = "src0", vocabCap: Int = 4096,
-      bigramCap: Int = 16384, trigramCap: Int = 32768,
-      fourgramCap: Int = 65536, headBits: Long = 5407000L,
-      midBits: Long = 5529000L): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    scoreWithKneserNey4Lm(docs.select("doc_id", "lang", "text"),
-      fitFourgramLmCached(docs.filter(col("source") === refSource)
-        .select("text"), dir, refSource, vocabCap, bigramCap, trigramCap,
-        fourgramCap),
-      headBits, midBits).orderBy("doc_id")
-  }
-
-  /** [[trigramProbeJoin]] lifted one order: posexplode into (pos,
-    * cur, prev, prev2, prev3), the five trigram-model probes, plus
-    * the 4-gram CONTEXT trigram (the tri table under the
-    * p3/p2/p1-as-context alias) and the fourgram table itself —
-    * seven broadcast hash probes, no shuffle key besides doc_id
-    * downstream.
-    */
-  private def fourgramProbeJoin(docs: DataFrame, lm: FourgramLm): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), col("lang"), col("toks"),
-        posexplode(col("toks")).as(Seq("pos", "cur")))
-      .select(col("doc_id"), col("lang"), col("pos"), col("cur"),
-        when(col("pos") > 0, element_at(col("toks"), col("pos"))).as("prev"),
-        when(col("pos") > 1, element_at(col("toks"), col("pos") - 1)).as("prev2"),
-        when(col("pos") > 2, element_at(col("toks"), col("pos") - 2)).as("prev3"))
-    tok
-      .join(broadcast(lm.tri.uni.select(col("tok").as("cur"), col("c").as("cu"))),
-        Seq("cur"), "left")
-      .join(broadcast(lm.tri.uni.select(col("tok").as("prev"), col("c").as("cp"))),
-        Seq("prev"), "left")
-      .join(broadcast(lm.tri.bi), Seq("prev", "cur"), "left")
-      .join(broadcast(lm.tri.bi.select(col("prev").as("prev2"),
-        col("cur").as("prev"), col("cb").as("cbc"))),
-        Seq("prev2", "prev"), "left")
-      .join(broadcast(lm.tri.tri.select(col("p2").as("prev2"),
-        col("p1").as("prev"), col("cur"), col("ct"))),
-        Seq("prev2", "prev", "cur"), "left")
-      .join(broadcast(lm.tri.tri.select(col("p2").as("prev3"),
-        col("p1").as("prev2"), col("cur").as("prev"), col("ct").as("ctc"))),
-        Seq("prev3", "prev2", "prev"), "left")
-      .join(broadcast(lm.quad.select(col("p3").as("prev3"),
-        col("p2").as("prev2"), col("p1").as("prev"), col("cur"), col("cq"))),
-        Seq("prev3", "prev2", "prev", "cur"), "left")
-  }
-
-  /** Score `docs` under a [[fitFourgramLm]] model with fixed-discount
-    * Kneser–Ney (the [[scoreWithKneserNeyLm]] contract, q135's rule).
-    */
-  def scoreWithKneserNey4Lm(docs: DataFrame, lm: FourgramLm,
-      headBits: Long, midBits: Long): DataFrame = {
-    val n1b = lm.tri.bi.groupBy("cur").agg(count(lit(1)).as("n1b"))
-    val f1 = lm.tri.bi.groupBy("prev").agg(count(lit(1)).as("f1"))
-    val f2 = lm.tri.tri.groupBy("p2", "p1").agg(count(lit(1)).as("f2"))
-      .select(col("p2").as("prev2"), col("p1").as("prev"), col("f2"))
-    val f3 = lm.quad.groupBy("p3", "p2", "p1").agg(count(lit(1)).as("f3"))
-      .select(col("p3").as("prev3"), col("p2").as("prev2"),
-        col("p1").as("prev"), col("f3"))
-    val b = lm.tri.bi.count()
-    val joined = fourgramProbeJoin(docs, lm)
-      .join(broadcast(n1b), Seq("cur"), "left")
-      .join(broadcast(f1), Seq("prev"), "left")
-      .join(broadcast(f2), Seq("prev2", "prev"), "left")
-      .join(broadcast(f3), Seq("prev3", "prev2", "prev"), "left")
-    // written token-for-token as the oracle SQL writes it (the q134
-    // expressions verbatim, plus the one-order-up quad tier)
-    val pcont = (coalesce(col("n1b"), lit(0L)) + lit(1.0)) /
-      lit((b + lm.tri.v + 1).toDouble)
-    val pbi = when(col("cb").isNotNull,
-        (col("cb") - lit(0.75)) / col("cp") +
-          (lit(0.75) * col("f1") / col("cp")) * pcont)
-      .when(col("f1").isNotNull,
-        (lit(0.75) * col("f1") / col("cp")) * pcont)
-      .otherwise(pcont)
-    val ptri = when(col("ct").isNotNull,
-        (col("ct") - lit(0.75)) / col("cbc") +
-          (lit(0.75) * col("f2") / col("cbc")) * pbi)
-      .when(col("f2").isNotNull,
-        (lit(0.75) * col("f2") / col("cbc")) * pbi)
-      .otherwise(pbi)
-    val pquad = when(col("cq").isNotNull,
-        (col("cq") - lit(0.75)) / col("ctc") +
-          (lit(0.75) * col("f3") / col("ctc")) * ptri)
-      .when(col("f3").isNotNull,
-        (lit(0.75) * col("f3") / col("ctc")) * ptri)
-      .otherwise(ptri)
-    def clog2(c: Column): Column = org.apache.spark.sql.functions.log2(c)
-    val bits = when(col("prev").isNull,
-        round(-clog2(pcont) * lit(1000000.0)).cast("long"))
-      .when(col("prev2").isNull,
-        round(-clog2(pbi) * lit(1000000.0)).cast("long"))
-      .when(col("prev3").isNull,
-        round(-clog2(ptri) * lit(1000000.0)).cast("long"))
-      .otherwise(
-        round(-clog2(pquad) * lit(1000000.0)).cast("long"))
-    joined
-      .groupBy("doc_id", "lang")
-      .agg(count(lit(1)).as("n_tokens"), sum(bits).as("bits_micro"))
-      .withColumn("ppl_bucket",
-        when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
-          .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
-          .otherwise("tail"))
-  }
-
-  /** Fitted 5-gram Kneser–Ney model: the [[FourgramLm]] tables plus
-    * the bounded (p4, p3, p2, p1, cur, c5) fivegram table.
-    */
-  final case class FivegramLm(quad: FourgramLm, five: DataFrame)
-
-  /** Fit the q137 model on `ref`: [[fitFourgramLm]]'s tables, then
-    * the top-`fivegramCap` fivegrams whose (p4, p3, p2, p1) context
-    * is an in-table fourgram — the fit invariant one order up, which
-    * keeps c5 ≤ context count and the KN probabilities < 1 at every
-    * tier. One extra reference scan + one TakeOrdered; every table
-    * stays broadcast-bounded regardless of reference size.
-    */
-  def fitFivegramLm(ref: DataFrame, vocabCap: Int, bigramCap: Int,
-      trigramCap: Int, fourgramCap: Int, fivegramCap: Int): FivegramLm = {
-    val base = fitFourgramLm(ref, vocabCap, bigramCap, trigramCap,
-      fourgramCap)
-    FivegramLm(base, fivegramTableOf(ref, base, fivegramCap))
-  }
-
-  private val fivegramCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int, Int, Int), FivegramLm]()
-
-  /** [[fitFivegramLm]] riding the SHARED cached fourgram base
-    * ([[fitFourgramLmCached]]) with its own memoized quint table —
-    * the warm path q137 takes so its bench line measures the 5-gram
-    * SCORING rule, not a re-fit of the four tables q130/q135 already
-    * gate (the fourgramCache convention, one order up).
-    */
-  def fitFivegramLmCached(ref: => DataFrame, dir: String,
-      refSource: String, vocabCap: Int, bigramCap: Int, trigramCap: Int,
-      fourgramCap: Int, fivegramCap: Int): FivegramLm = {
-    lazy val frame = ref
-    fivegramCache.computeIfAbsent(
-      (dir, refSource, vocabCap, bigramCap, trigramCap, fourgramCap,
-        fivegramCap),
-      _ => {
-        val base = fitFourgramLmCached(frame, dir, refSource, vocabCap,
-          bigramCap, trigramCap, fourgramCap)
-        FivegramLm(base, fivegramTableOf(frame, base, fivegramCap))
-      })
-  }
-
-  /** The bounded fivegram table of [[fitFivegramLm]]. */
-  private def fivegramTableOf(ref: DataFrame, base: FourgramLm,
-      fivegramCap: Int): DataFrame = {
-    val toks = ref.select(split(col("text"), " ").as("toks"))
-    val quintType =
-      "array<struct<p4:string,p3:string,p2:string,p1:string,cur:string>>"
-    val quints = toks.select(explode(
-        when(size(col("toks")) >= 5,
-          transform(sequence(lit(0), size(col("toks")) - 5),
-            i => struct(element_at(col("toks"), i + 1).as("p4"),
-              element_at(col("toks"), i + 2).as("p3"),
-              element_at(col("toks"), i + 3).as("p2"),
-              element_at(col("toks"), i + 4).as("p1"),
-              element_at(col("toks"), i + 5).as("cur"))))
-          .otherwise(array().cast(quintType))).as("q"))
-      .select(col("q.p4").as("p4"), col("q.p3").as("p3"),
-        col("q.p2").as("p2"), col("q.p1").as("p1"), col("q.cur").as("cur"))
-    quints
-      .join(broadcast(base.quad.select(col("p3").as("p4"),
-        col("p2").as("p3"), col("p1").as("p2"), col("cur").as("p1"))),
-        Seq("p4", "p3", "p2", "p1"))
-      .groupBy("p4", "p3", "p2", "p1", "cur").count()
-      .orderBy(col("count").desc, col("p4").asc, col("p3").asc,
-        col("p2").asc, col("p1").asc, col("cur").asc)
-      .limit(fivegramCap)
-      .select(col("p4"), col("p3"), col("p2"), col("p1"), col("cur"),
-        col("count").as("c5"))
-      .localCheckpoint()
-  }
-
-  /** #137 5-gram Kneser–Ney LM perplexity gate — the ladder's final
-    * declared rung, matching the order of CCNet's cited KenLM
-    * (Wenzek et al. 2020 §4.3 trains 5-gram models per language;
-    * reference anchor: the perplexity-gated corpus prep the
-    * reference delegates to its upstream data vendor,
-    * README.md:34-42). Same fixed discount D = 0.75 and the same
-    * continuation-count backoff chain as q134/q135, extended by one
-    * tier:
-    *
-    *   pos ≤2:  q135's rules (P_cont / P_bi / P_tri)
-    *   pos 3:   P_quad               (q135's 4-gram rule)
-    *   pos ≥4:  P_quint(cur | p4..p1) =
-    *              (c5 − D)/cqc + (D·f4/cqc)·P_quad   5-gram in table
-    *            | (D·f4/cqc)·P_quad                  context has fits
-    *            | P_quad                             else
-    *
-    * where cqc is the CONTEXT fourgram's table count and f4 the
-    * count of distinct in-table continuations of that context. c5 ≤
-    * cqc and f4 ≤ cqc by the fit invariants, so P_quint < 1 and bits
-    * stay positive. Oracle parity: the q135 discipline verbatim one
-    * order up — the oracle SQL is COMPOSED from the same nested-CASE
-    * blocks. Plan shape: [[fivegramProbeJoin]]'s nine broadcast
-    * probes plus FIVE aux broadcasts, still ONE doc-keyed exchange.
-    * Thresholds cut at the measured sf0.01 terciles of
-    * bits_micro/n_tokens (the q117 convention).
-    */
-  def q137PerplexityKneserNey5(spark: SparkSession, dir: String,
-      refSource: String = "src0", vocabCap: Int = 4096,
-      bigramCap: Int = 16384, trigramCap: Int = 32768,
-      fourgramCap: Int = 65536, fivegramCap: Int = 131072,
-      headBits: Long = 5407000L, midBits: Long = 5529000L): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    scoreWithKneserNey5Lm(docs.select("doc_id", "lang", "text"),
-      fitFivegramLmCached(docs.filter(col("source") === refSource)
-        .select("text"), dir, refSource, vocabCap, bigramCap, trigramCap,
-        fourgramCap, fivegramCap),
-      headBits, midBits).orderBy("doc_id")
-  }
-
-  /** [[fourgramProbeJoin]] lifted one order: (pos, cur, prev..prev4),
-    * the seven fourgram-model probes, plus the 5-gram CONTEXT
-    * fourgram (the quad table under the p4..p1-as-context alias) and
-    * the fivegram table itself — nine broadcast hash probes, no
-    * shuffle key besides doc_id downstream.
-    */
-  private def fivegramProbeJoin(docs: DataFrame, lm: FivegramLm): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), col("lang"), col("toks"),
-        posexplode(col("toks")).as(Seq("pos", "cur")))
-      .select(col("doc_id"), col("lang"), col("pos"), col("cur"),
-        when(col("pos") > 0, element_at(col("toks"), col("pos"))).as("prev"),
-        when(col("pos") > 1, element_at(col("toks"), col("pos") - 1)).as("prev2"),
-        when(col("pos") > 2, element_at(col("toks"), col("pos") - 2)).as("prev3"),
-        when(col("pos") > 3, element_at(col("toks"), col("pos") - 3)).as("prev4"))
-    tok
-      .join(broadcast(lm.quad.tri.uni.select(col("tok").as("cur"), col("c").as("cu"))),
-        Seq("cur"), "left")
-      .join(broadcast(lm.quad.tri.uni.select(col("tok").as("prev"), col("c").as("cp"))),
-        Seq("prev"), "left")
-      .join(broadcast(lm.quad.tri.bi), Seq("prev", "cur"), "left")
-      .join(broadcast(lm.quad.tri.bi.select(col("prev").as("prev2"),
-        col("cur").as("prev"), col("cb").as("cbc"))),
-        Seq("prev2", "prev"), "left")
-      .join(broadcast(lm.quad.tri.tri.select(col("p2").as("prev2"),
-        col("p1").as("prev"), col("cur"), col("ct"))),
-        Seq("prev2", "prev", "cur"), "left")
-      .join(broadcast(lm.quad.tri.tri.select(col("p2").as("prev3"),
-        col("p1").as("prev2"), col("cur").as("prev"), col("ct").as("ctc"))),
-        Seq("prev3", "prev2", "prev"), "left")
-      .join(broadcast(lm.quad.quad.select(col("p3").as("prev3"),
-        col("p2").as("prev2"), col("p1").as("prev"), col("cur"), col("cq"))),
-        Seq("prev3", "prev2", "prev", "cur"), "left")
-      .join(broadcast(lm.quad.quad.select(col("p3").as("prev4"),
-        col("p2").as("prev3"), col("p1").as("prev2"), col("cur").as("prev"),
-        col("cq").as("cqc"))),
-        Seq("prev4", "prev3", "prev2", "prev"), "left")
-      .join(broadcast(lm.five.select(col("p4").as("prev4"),
-        col("p3").as("prev3"), col("p2").as("prev2"), col("p1").as("prev"),
-        col("cur"), col("c5"))),
-        Seq("prev4", "prev3", "prev2", "prev", "cur"), "left")
-  }
-
-  /** Score `docs` under a [[fitFivegramLm]] model with fixed-discount
-    * Kneser–Ney (the [[scoreWithKneserNey4Lm]] contract, q137's rule).
-    */
-  def scoreWithKneserNey5Lm(docs: DataFrame, lm: FivegramLm,
-      headBits: Long, midBits: Long): DataFrame = {
-    val n1b = lm.quad.tri.bi.groupBy("cur").agg(count(lit(1)).as("n1b"))
-    val f1 = lm.quad.tri.bi.groupBy("prev").agg(count(lit(1)).as("f1"))
-    val f2 = lm.quad.tri.tri.groupBy("p2", "p1").agg(count(lit(1)).as("f2"))
-      .select(col("p2").as("prev2"), col("p1").as("prev"), col("f2"))
-    val f3 = lm.quad.quad.groupBy("p3", "p2", "p1").agg(count(lit(1)).as("f3"))
-      .select(col("p3").as("prev3"), col("p2").as("prev2"),
-        col("p1").as("prev"), col("f3"))
-    val f4 = lm.five.groupBy("p4", "p3", "p2", "p1")
-      .agg(count(lit(1)).as("f4"))
-      .select(col("p4").as("prev4"), col("p3").as("prev3"),
-        col("p2").as("prev2"), col("p1").as("prev"), col("f4"))
-    val b = lm.quad.tri.bi.count()
-    val joined = fivegramProbeJoin(docs, lm)
-      .join(broadcast(n1b), Seq("cur"), "left")
-      .join(broadcast(f1), Seq("prev"), "left")
-      .join(broadcast(f2), Seq("prev2", "prev"), "left")
-      .join(broadcast(f3), Seq("prev3", "prev2", "prev"), "left")
-      .join(broadcast(f4), Seq("prev4", "prev3", "prev2", "prev"), "left")
-    // written token-for-token as the oracle SQL writes it (the q135
-    // expressions verbatim, plus the one-order-up quint tier)
-    val pcont = (coalesce(col("n1b"), lit(0L)) + lit(1.0)) /
-      lit((b + lm.quad.tri.v + 1).toDouble)
-    val pbi = when(col("cb").isNotNull,
-        (col("cb") - lit(0.75)) / col("cp") +
-          (lit(0.75) * col("f1") / col("cp")) * pcont)
-      .when(col("f1").isNotNull,
-        (lit(0.75) * col("f1") / col("cp")) * pcont)
-      .otherwise(pcont)
-    val ptri = when(col("ct").isNotNull,
-        (col("ct") - lit(0.75)) / col("cbc") +
-          (lit(0.75) * col("f2") / col("cbc")) * pbi)
-      .when(col("f2").isNotNull,
-        (lit(0.75) * col("f2") / col("cbc")) * pbi)
-      .otherwise(pbi)
-    val pquad = when(col("cq").isNotNull,
-        (col("cq") - lit(0.75)) / col("ctc") +
-          (lit(0.75) * col("f3") / col("ctc")) * ptri)
-      .when(col("f3").isNotNull,
-        (lit(0.75) * col("f3") / col("ctc")) * ptri)
-      .otherwise(ptri)
-    val pquint = when(col("c5").isNotNull,
-        (col("c5") - lit(0.75)) / col("cqc") +
-          (lit(0.75) * col("f4") / col("cqc")) * pquad)
-      .when(col("f4").isNotNull,
-        (lit(0.75) * col("f4") / col("cqc")) * pquad)
-      .otherwise(pquad)
-    def clog2(c: Column): Column = org.apache.spark.sql.functions.log2(c)
-    val bits = when(col("prev").isNull,
-        round(-clog2(pcont) * lit(1000000.0)).cast("long"))
-      .when(col("prev2").isNull,
-        round(-clog2(pbi) * lit(1000000.0)).cast("long"))
-      .when(col("prev3").isNull,
-        round(-clog2(ptri) * lit(1000000.0)).cast("long"))
-      .when(col("prev4").isNull,
-        round(-clog2(pquad) * lit(1000000.0)).cast("long"))
-      .otherwise(
-        round(-clog2(pquint) * lit(1000000.0)).cast("long"))
-    joined
-      .groupBy("doc_id", "lang")
-      .agg(count(lit(1)).as("n_tokens"), sum(bits).as("bits_micro"))
-      .withColumn("ppl_bucket",
-        when(col("bits_micro") < lit(headBits) * col("n_tokens"), "head")
-          .when(col("bits_micro") < lit(midBits) * col("n_tokens"), "middle")
-          .otherwise("tail"))
-  }
+  def q137PerplexityKneserNey5(spark: SparkSession, dir: String): DataFrame =
+    ngramGate(spark, dir, 5, cached = true, LmRule.KneserNey,
+      5407000L, 5529000L)
 
   /** #121 Learned quality classifier — the reference-vs-corpus gate
     * of the big pipelines (GPT-3, Brown et al. 2020 Appendix A,

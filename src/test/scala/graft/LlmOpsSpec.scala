@@ -841,71 +841,80 @@ class LlmOpsSpec extends AnyFunSuite {
     // path registry (an in-place corpus rewrite is the use case)
     LlmOps.invalidateMemosFor(spark, sf)
     assert(!new java.io.File(memo).exists)
+    // in-JVM trainer fits of the dir go too, Bpe's merge tables
+    // included — on a scratch copy, so other suites' fits stay warm
+    val copy = java.nio.file.Files.createTempDirectory("graft_inval")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sf, "documents.parquet"),
+      copy.resolve("documents.parquet"))
+    graft.ops.Bpe.fitCached(spark, copy.toString, 20, 256)
+    val before = graft.ops.Bpe.fitRuns.get()
+    LlmOps.invalidateMemosFor(spark, copy.toString)
+    graft.ops.Bpe.fitCached(spark, copy.toString, 20, 256)
+    assert(graft.ops.Bpe.fitRuns.get() - before === 1L,
+      "a rewritten dir must not encode with merges fit on its old contents")
   }
 
-  test("q117 bigram LM separates token-shuffled text from the original; unigram is order-blind") {
-    // the reason q117 exists: destroy word ORDER while preserving the
-    // token multiset (deterministic in-doc sort). The interpolated
-    // bigram must charge the destroyed text strictly more bits; the
-    // q100 unigram — a pure bag-of-tokens model — scores the two
-    // HashSets of evidence identically, so its separation is exactly 0.
-    val docsT = Tables.documents(spark, sf)
-    val docs = docsT.select(col("doc_id"), col("lang"), col("text"))
-    val ref = docsT.filter(col("source") === "src0").select("text")
-    val shuffled = docs.select(col("doc_id"), col("lang"),
-      concat_ws(" ", array_sort(split(col("text"), " "))).as("text"))
-    val lm = LlmOps.fitBigramLm(ref, 4096, 16384)
-    def bigramBits(d: org.apache.spark.sql.DataFrame): Long =
-      LlmOps.scoreWithBigramLm(d, lm, 1L, 2L)
-        .agg(sum("bits_micro")).head().getLong(0)
-    val bOrig = bigramBits(docs)
-    val bShuf = bigramBits(shuffled)
-    assert(bShuf > bOrig,
-      s"bigram bits on shuffled text ($bShuf) not above original ($bOrig)")
-    val (ulm, oov) = LlmOps.fitUnigramLm(ref, 4096)
-    def uniBits(d: org.apache.spark.sql.DataFrame): Long =
-      LlmOps.scoreWithLm(d, ulm, oov, 1L, 2L)
-        .agg(sum("bits_micro")).head().getLong(0)
-    assert(uniBits(docs) === uniBits(shuffled),
-      "unigram should be exactly order-blind (same token multiset)")
-    // model-table bounds hold (the TakeOrdered contract)
-    assert(lm.uni.count() <= 4096)
-    assert(lm.bi.count() <= 16384)
-    // P_bi < 1 by the in-vocab-prev construction: no negative bits
-    val neg = LlmOps.scoreWithBigramLm(docs, lm, 1L, 2L)
-      .filter(col("bits_micro") < 0).count()
-    assert(neg === 0)
-  }
+  // every (order, rule) pair a declared LM gate scores with — one law
+  // body, one named test per pair
+  private val ngramLaws = Seq(
+    (2, LlmOps.LmRule.Interpolated,
+      "q117 bigram LM separates token-shuffled text from the original; unigram is order-blind"),
+    (3, LlmOps.LmRule.Interpolated,
+      "q130 trigram LM separates shuffled text at least as well as the bigram; P_tri < 1 invariant holds"),
+    (3, LlmOps.LmRule.Backoff,
+      "q133 stupid-backoff LM: bounded tables, no negative bits, deterministic"),
+    (3, LlmOps.LmRule.KneserNey,
+      "q134 Kneser-Ney trigram LM: bounded tables, no negative bits, deterministic"),
+    (4, LlmOps.LmRule.KneserNey,
+      "q135 Kneser-Ney 4-gram LM: bounded tables, no negative bits, deterministic"),
+    (5, LlmOps.LmRule.KneserNey,
+      "q137 Kneser-Ney 5-gram LM: bounded tables, no negative bits, deterministic"))
 
-  test("q130 trigram LM separates shuffled text at least as well as the bigram; P_tri < 1 invariant holds") {
-    // the q117 law one order up: destroying word order must cost the
-    // trigram-interpolated model MORE bits than the original — and at
-    // least as much separation as the bigram tier (the trigram term
-    // only adds order evidence). Model-table bounds + the lifted
-    // in-table-context invariant (no negative bits) ride along.
-    val docsT = Tables.documents(spark, sf)
-    val docs = docsT.select(col("doc_id"), col("lang"), col("text"))
-    val ref = docsT.filter(col("source") === "src0").select("text")
-    val shuffled = docs.select(col("doc_id"), col("lang"),
-      concat_ws(" ", array_sort(split(col("text"), " "))).as("text"))
-    val lm = LlmOps.fitTrigramLm(ref, 4096, 16384, 32768)
-    def triBits(d: org.apache.spark.sql.DataFrame): Long =
-      LlmOps.scoreWithTrigramLm(d, lm, 1L, 2L)
-        .agg(sum("bits_micro")).head().getLong(0)
-    val tOrig = triBits(docs)
-    val tShuf = triBits(shuffled)
-    assert(tShuf > tOrig,
-      s"trigram bits on shuffled text ($tShuf) not above original ($tOrig)")
-    assert(lm.uni.count() <= 4096)
-    assert(lm.bi.count() <= 16384)
-    assert(lm.tri.count() <= 32768)
-    val neg = LlmOps.scoreWithTrigramLm(docs, lm, 1L, 2L)
-      .filter(col("bits_micro") < 0).count()
-    assert(neg === 0)
-    // run-twice determinism (TakeOrdered ties broken by triple asc)
-    val again = LlmOps.fitTrigramLm(ref, 4096, 16384, 32768)
-    assert(triBits(docs) === LlmOps.scoreWithTrigramLm(docs, again, 1L, 2L)
-      .agg(sum("bits_micro")).head().getLong(0))
+  ngramLaws.foreach { case (order, rule, name) =>
+    test(name) {
+      val docsT = Tables.documents(spark, sf)
+      val docs = docsT.select(col("doc_id"), col("lang"), col("text"))
+      val ref = docsT.filter(col("source") === "src0").select("text")
+      val lm = LlmOps.fitNgramLm(ref, order)
+      def scored(d: org.apache.spark.sql.DataFrame,
+          m: LlmOps.NgramLm = lm) =
+        LlmOps.scoreWithNgramLm(d, m, rule, 1L, 2L)
+      // model-table bounds hold at every order (the TakeOrdered contract)
+      val caps = Seq(4096, 16384, 32768, 65536, 131072)
+      (1 to order).foreach { k =>
+        assert(lm.table(k).count() <= caps(k - 1), s"order-$k table over its cap")
+      }
+      // P < 1 at every position (the in-table-context fit invariant
+      // each rule's scaladoc proves): no negative bits
+      assert(scored(docs).filter(col("bits_micro") < 0).count() === 0)
+      // run-twice determinism (TakeOrdered ties broken by gram asc)
+      def perDoc(m: LlmOps.NgramLm) = scored(docs, m)
+        .select("doc_id", "bits_micro").orderBy("doc_id").collect().toSeq
+      assert(perDoc(lm) === perDoc(LlmOps.fitNgramLm(ref, order)))
+      // the reason the ladder exists: destroying word ORDER while
+      // keeping the token multiset (deterministic in-doc sort) must
+      // cost the interpolated model strictly more bits
+      def total(d: org.apache.spark.sql.DataFrame): Long =
+        scored(d).agg(sum("bits_micro")).head().getLong(0)
+      val shuffled = docs.select(col("doc_id"), col("lang"),
+        concat_ws(" ", array_sort(split(col("text"), " "))).as("text"))
+      if (rule == LlmOps.LmRule.Interpolated) {
+        val (orig, shuf) = (total(docs), total(shuffled))
+        assert(shuf > orig,
+          s"order-$order bits on shuffled text ($shuf) not above original ($orig)")
+      }
+      // ... while the q100 unigram, a bag-of-tokens model, is exactly
+      // order-blind
+      if (order == 2) {
+        val (ulm, oov) = LlmOps.fitUnigramLm(ref, 4096)
+        def uniBits(d: org.apache.spark.sql.DataFrame): Long =
+          LlmOps.scoreWithLm(d, ulm, oov, 1L, 2L)
+            .agg(sum("bits_micro")).head().getLong(0)
+        assert(uniBits(docs) === uniBits(shuffled),
+          "unigram should be exactly order-blind (same token multiset)")
+      }
+    }
   }
 
   test("q120 retrained-index simsearch: ingest + rotation + probe == exact q38") {

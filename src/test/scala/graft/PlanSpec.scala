@@ -336,84 +336,41 @@ class PlanSpec extends AnyFunSuite {
     assert(loops <= 1, s"unexpected nested-loop joins:\n$p")
   }
 
-  test("q117: all model probes are broadcast hash joins; the only shuffle key is doc-level") {
-    val df = graft.ops.LlmOps.q117PerplexityBigram(spark, sf)
-    val p = plan(df)
-    // three bounded model tables (cur-unigram, prev-unigram, bigram)
-    // probe the exploded token stream map-side — a sort-merge join
-    // here would shuffle one row PER TOKEN per table at corpus scale
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    // per-doc aggregation is partial before its exchange (map-side
-    // combine on the token stream — the q11 law: partial + final
-    // HashAggregate around one doc_id hash exchange)
-    assert("HashAggregate".r.findAllIn(p).size >= 2, p)
-    assert("hashpartitioning\\(doc_id".r.findAllIn(p).size >= 1, p)
-  }
+  // the n-gram LM gates: (query, test name, exact broadcast-hash-join
+  // count). Every model table and Kneser-Ney aux stat is a bounded
+  // broadcast probed map-side — a sort-merge join would shuffle one row
+  // PER TOKEN per table at corpus scale. The count is the order-K
+  // probe join's 2K-1 probes plus, for Kneser-Ney, K aux broadcasts
+  // (n1b, f1 … f(K-1)); a probe the shared join drops or duplicates
+  // moves it.
+  private val ngramPlans = Seq[(String, String, Int)](
+    ("q117_perplexity_bigram",
+      "q117: all model probes are broadcast hash joins; the only shuffle key is doc-level", 3),
+    ("q130_perplexity_trigram",
+      "q130: all five model probes are broadcast hash joins; the only shuffle key is doc-level", 5),
+    ("q133_perplexity_backoff",
+      "q133: backoff scoring shares q130's probe shape — broadcast-only, one doc-keyed shuffle", 5),
+    ("q134_perplexity_kneser_ney",
+      "q134: Kneser-Ney scoring keeps the broadcast-only probe shape (five shared + three aux)", 8),
+    ("q135_perplexity_kn_4gram",
+      "q135: 4-gram KN scoring keeps the broadcast-only probe shape (seven probes + four aux)", 11),
+    ("q137_perplexity_kn_5gram",
+      "q137: 5-gram KN scoring keeps the broadcast-only probe shape (nine probes + five aux)", 14))
 
-  test("q130: all five model probes are broadcast hash joins; the only shuffle key is doc-level") {
-    // the q117 shape one order up: cur/prev unigram probes, bigram
-    // numerator + trigram-context denominator probes, trigram
-    // numerator probe — every one a bounded broadcast; a sort-merge
-    // join would shuffle one row PER TOKEN per table at corpus scale
-    val df = graft.ops.LlmOps.q130PerplexityTrigram(spark, sf)
-    val p = plan(df)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    assert("HashAggregate".r.findAllIn(p).size >= 2, p)
-    assert("hashpartitioning\\(doc_id".r.findAllIn(p).size >= 1, p)
-  }
-
-  test("q133: backoff scoring shares q130's probe shape — broadcast-only, one doc-keyed shuffle") {
-    // stupid backoff changes only the bits EXPRESSION; the five-probe
-    // broadcast join is the shared trigramProbeJoin definition, so
-    // this pins that the backoff branch (extra CASE nesting) cannot
-    // regress the join strategy
-    val df = graft.ops.LlmOps.q133PerplexityBackoff(spark, sf)
-    val p = plan(df)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    assert("hashpartitioning\\(doc_id".r.findAllIn(p).size >= 1, p)
-  }
-
-  test("q134: Kneser-Ney scoring keeps the broadcast-only probe shape (five shared + three aux)") {
-    // the KN aux stats (n1b/f1/f2) are groupBys of already-bounded
-    // tables — three MORE broadcasts on top of trigramProbeJoin's
-    // five, never a shuffle; this pins that the extra probes cannot
-    // regress the join strategy
-    val df = graft.ops.LlmOps.q134PerplexityKneserNey(spark, sf)
-    val p = plan(df)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    assert("hashpartitioning\\(doc_id".r.findAllIn(p).size >= 1, p)
-  }
-
-  test("q135: 4-gram KN scoring keeps the broadcast-only probe shape (seven probes + four aux)") {
-    // one order up from q134: fourgramProbeJoin's seven probes plus
-    // the n1b/f1/f2/f3 aux broadcasts — all groupBys of bounded
-    // tables, never a shuffle; the only exchange key stays doc_id
-    val df = graft.ops.LlmOps.q135PerplexityKneserNey4(spark, sf)
-    val p = plan(df)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    assert("hashpartitioning\\(doc_id".r.findAllIn(p).size >= 1, p)
-  }
-
-  test("q137: 5-gram KN scoring keeps the broadcast-only probe shape (nine probes + five aux)") {
-    // one order up from q135: fivegramProbeJoin's nine probes plus
-    // the n1b/f1/f2/f3/f4 aux broadcasts — all groupBys of bounded
-    // tables, never a shuffle; the only exchange key stays doc_id
-    val df = graft.ops.LlmOps.q137PerplexityKneserNey5(spark, sf)
-    val p = plan(df)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    assert("hashpartitioning\\(doc_id".r.findAllIn(p).size >= 1, p)
+  ngramPlans.foreach { case (query, name, joins) =>
+    test(name) {
+      val p = plan(SparkEntry.queries(query)(spark, sf))
+      // formatted explain prints each node in the tree AND a detail
+      // header "(N) BroadcastHashJoin" — count the headers
+      assert("\\(\\d+\\) BroadcastHashJoin".r.findAllIn(p).size === joins, p)
+      assert(!p.contains("SortMergeJoin"), p)
+      assert(!p.contains("CartesianProduct"), p)
+      // per-doc aggregation is partial before its exchange (map-side
+      // combine on the token stream — the q11 law: partial + final
+      // HashAggregate around one doc_id hash exchange)
+      assert("HashAggregate".r.findAllIn(p).size >= 2, p)
+      assert("hashpartitioning\\(doc_id".r.findAllIn(p).size >= 1, p)
+    }
   }
 
   test("q138: portable SimHash pairs stay a bucket hash join — no cartesian, no SMJ") {
