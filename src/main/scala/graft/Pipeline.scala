@@ -352,10 +352,14 @@ object Pipeline {
     * synthetic domain, making the stage a global quality top-N)
     * → reproducible hash-gate train/holdout split (~90/10,
     * stable across runs, partitionings and retries — the q63 rule).
-    * Returns the cleaned corpus (with `is_train`) plus per-stage
-    * counts. Runs actions by design — the report IS the product;
-    * each heavy stage is checkpointed once and every later stage and
-    * count reads the materialization.
+    * Returns the cleaned corpus (with `is_train`), pinned, plus
+    * per-stage counts. Runs actions by design — the report IS the
+    * product — but no action runs only to count: each stage boundary
+    * is evaluated once, and every counter is a named Observation
+    * carried by an eager pin the chain needs anyway (the exact-dedup
+    * and paragraph pins, each enabled gate's input pin, the final
+    * survivors' pin with its train count). See
+    * [[ops.Sinks.observedPin]] for the two placement rules.
     *
     * Idempotent: re-running on its own output removes nothing (exact
     * keepers are unique; surviving canonicals are pairwise below the
@@ -379,30 +383,28 @@ object Pipeline {
       dsirThresholdMicro: Long = -210000L,
       sourceQuotaCap: Option[Int] = None,
       nearLabelsCache: Option[String] = None): (DataFrame, CorpusReport) = {
-    val input = docs.count()
-    // checkpoint each heavy stage once: every later stage AND its
-    // count reads the materialization, not a re-run of the upstream
-    // scan + shuffles (3 full corpus passes otherwise)
-    val exactKept = docs.join(
-      docs.groupBy(sha2(col("text"), 256).as("h"))
-        .agg(min("doc_id").as("doc_id")).select("doc_id"),
-      "doc_id").localCheckpoint()
+    import ops.Sinks.{observed, observedCount, observedPin}
+    // exact dedup as a per-content-hash window (min-id keeper), not a
+    // self-join of `docs`: one pass whose input and keeper counts ride
+    // its pin (the input count above the window's shuffle, in the
+    // pin's own stage)
+    val (windowed, oInput) = observed(docs.withColumn("__keeper",
+      min("doc_id").over(Window.partitionBy(sha2(col("text"), 256)))))
+    val (exactKept, oExact) = observedPin(windowed
+      .filter(col("doc_id") === col("__keeper")).drop("__keeper"))
     // optional paragraph-level boilerplate strip (q86 semantics,
     // C4/RefinedWeb order: after exact doc dedup, before near-dedup —
     // stripping repeated paragraphs first makes near-dup similarity
     // reflect CONTENT, not shared boilerplate). Documents reduced to
     // nothing are dropped; others continue with their cleaned text.
-    val nExact = exactKept.count()
-    val (exact, nParaDropped) = paraDedupTokens match {
+    val (exact, oPara) = paraDedupTokens match {
       case Some(wTok) =>
-        val cleaned = exactKept.drop("text")
+        observedPin(exactKept.drop("text")
           .join(ops.LlmOps.dedupParagraphs(
               exactKept.select("doc_id", "text"), wTok)
             .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
-          .filter(length(col("text")) > 0)
-          .localCheckpoint()
-        (cleaned, nExact - cleaned.count())
-      case None => (exactKept, 0L)
+          .filter(length(col("text")) > 0))
+      case None => (exactKept, oExact)
     }
     // DEFAULT pair source is LSH (minhashPairsOf): candidate volume
     // linear in the corpus — the only shape that survives 100 TB.
@@ -433,19 +435,19 @@ object Pipeline {
         val fs = ops.Sinks.fsFor(spark, memoPath)
         val dst = new org.apache.hadoop.fs.Path(memoPath)
         if (!fs.exists(dst)) {
-          val l = computeLabels().localCheckpoint()
           val staging = new org.apache.hadoop.fs.Path(
             memoPath + "__tmp_" + spark.sparkContext.applicationId)
           fs.delete(staging, true)
-          l.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+          computeLabels().coalesce(1).write.mode("overwrite")
+            .parquet(staging.toString)
           ops.Sinks.installMemo(fs, staging, dst)
         } else ops.Sinks.repairNestedStaging(fs, dst)
         spark.read.parquet(memoPath)
     }
-    val near = exact.join(labels, Seq("doc_id"), "left")
-      .filter(col("component").isNull || col("component") === col("doc_id"))
-      .drop("component")
-      .localCheckpoint()
+    val (near, oNear) = observed(
+      exact.join(labels, Seq("doc_id"), "left")
+        .filter(col("component").isNull || col("component") === col("doc_id"))
+        .drop("component"))
     val quality = ops.LlmOps.heuristicQualityGate(near, minTokens,
       dupMilliMax, topMilliMax)
     // model-based gates: both score (doc_id, lang, text) projections
@@ -454,57 +456,53 @@ object Pipeline {
     // lang only rides along in the op outputs)
     def langOf(d: DataFrame) =
       if (d.columns.contains("lang")) col("lang") else lit("")
-    val (ppl, nPplDropped) = perplexityRef match {
-      case Some(ref) =>
-        val q = quality.localCheckpoint()
+    val gates: Seq[Option[DataFrame => DataFrame]] = Seq(
+      perplexityRef.map { ref =>
         val (lmTab, oovBits) = ops.LlmOps.fitUnigramLm(ref.select("text"), 4096)
-        val kept = ops.LlmOps.lmTailGate(q, lmTab, oovBits,
-          pplHeadBits, pplMidBits)
-        val n = kept.count()
-        (kept, q.count() - n)
-      case None => (quality, 0L)
-    }
-    val (dsir, nDsirDropped) = dsirTarget match {
-      case Some(target) =>
-        val q = ppl.localCheckpoint()
-        val dropped = ops.LlmOps.importanceResample(
+        q => ops.LlmOps.lmTailGate(q, lmTab, oovBits, pplHeadBits, pplMidBits)
+      },
+      dsirTarget.map { target => q =>
+        q.join(ops.LlmOps.importanceResample(
             q.select(col("doc_id"), langOf(q).as("lang"), col("text")),
             target.select("text"), dsirThresholdMicro)
-          .filter(!col("kept")).select("doc_id")
-        val kept = q.join(dropped, Seq("doc_id"), "left_anti")
-        val n = kept.count()
-        (kept, q.count() - n)
-      case None => (ppl, 0L)
-    }
-    val (decon, nDropped) = evalDocs match {
-      case Some(ev) =>
-        val q = dsir.localCheckpoint()
-        val d = ops.LlmOps.decontaminationGate(q,
+          .filter(!col("kept")).select("doc_id"), Seq("doc_id"), "left_anti")
+      },
+      evalDocs.map { ev => q =>
+        ops.LlmOps.decontaminationGate(q,
           ops.LlmOps.shingles(ev.select("doc_id", "text"))
             .select("shingle").distinct(),
           contaminationMilli)
-        val n = d.count()
-        (d, q.count() - n)
-      case None => (dsir, 0L)
-    }
-    val (quota, nQuotaDropped) = sourceQuotaCap match {
-      case Some(cap) =>
-        val q = decon.localCheckpoint()
+      },
+      sourceQuotaCap.map { cap => q =>
         val srcOf = if (q.columns.contains("source")) col("source") else lit("")
-        val kept = q.join(
+        q.join(
           ops.Retrieval.sourceQuotaOf(
               q.select(col("doc_id"), srcOf.as("source"), col("text")), cap)
             .select("doc_id"), "doc_id")
-        val n = kept.count()
-        (kept, q.count() - n)
-      case None => (decon, 0L)
+      })
+    // every enabled gate reads its input twice (score, then join back),
+    // so its input is pinned; that pin's job counts the input and
+    // completes the upstream stage's observations
+    val (survivors, gateIns) = gates.foldLeft(
+        (quality, Vector.empty[Option[org.apache.spark.sql.Observation]])) {
+      case ((cur, ins), None) => (cur, ins :+ None)
+      case ((cur, ins), Some(gate)) =>
+        val (q, o) = observedPin(cur)
+        (gate(q), ins :+ Some(o))
     }
-    val cleaned = quota.withColumn("is_train",
-      substring(md5(col("doc_id").cast("string")), 1, 2) < lit("e6"))
-    val nQuality = cleaned.count()
-    val nTrain = cleaned.filter(col("is_train")).count()
-    (cleaned, CorpusReport(input, nExact, near.count(), nQuality,
-      nTrain, nQuality - nTrain, nDropped, nParaDropped,
+    val (cleaned, oFinal) = observedPin(
+      survivors.withColumn("is_train",
+        substring(md5(col("doc_id").cast("string")), 1, 2) < lit("e6")),
+      count(when(col("is_train"), 1)).as("train"))
+    val (nFinal, nTrain) = (observedCount(oFinal), observedCount(oFinal, "train"))
+    // a gate drops (count entering it) − (count entering the next stage)
+    val ins = gateIns.map(_.map(observedCount(_)))
+    val entering = ins.scanRight(nFinal)((in, next) => in.getOrElse(next))
+    val Seq(nPplDropped, nDsirDropped, nDropped, nQuotaDropped) =
+      ins.indices.map(i => ins(i).fold(0L)(_ - entering(i + 1)))
+    val nExact = observedCount(oExact)
+    (cleaned, CorpusReport(observedCount(oInput), nExact, observedCount(oNear),
+      nFinal, nTrain, nFinal - nTrain, nDropped, nExact - observedCount(oPara),
       nPplDropped, nDsirDropped, nQuotaDropped))
   }
 
@@ -609,14 +607,13 @@ object Pipeline {
       .filter(substring(md5(col("doc_id").cast("string")), 1, 2) < lit("e6"))
       .select(col("doc_id"), col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    val mixed = ops.LlmOps.dataMixtureOf(train, frac = frac,
-      enWeight = enWeight, otherWeight = otherWeight).localCheckpoint()
-    val mixtureKept = mixed.count()
+    val (mixed, oMixed) = ops.Sinks.observedPin(ops.LlmOps.dataMixtureOf(
+      train, frac = frac, enWeight = enWeight, otherWeight = otherWeight))
     (ops.Layout.shardPositionsOf(mixed.select("doc_id", "lang"), nShards)
       .select(lit("doc").as("kind"), col("lang").as("name"),
         col("doc_id").cast("long").as("doc_id"),
         col("shard").cast("int").as("shard"), col("pos")),
-      mixtureKept)
+      ops.Sinks.observedCount(oMixed))
   }
 
   /** The q125 memo's stage counters as (name, count) pairs in the
@@ -630,20 +627,6 @@ object Pipeline {
       "train", "holdout")
       .map(n => n -> rep.getAs[Long](n))
 
-  /** The q125-declared prepared corpus (cleaned relation + stage
-    * counters), built once per (corpus state, config) into a
-    * parameter-keyed persisted memo and read thereafter — the
-    * q114/q119 memo-clone rule: the chain is a pure function of
-    * (corpus state, this declared config), each of its stages
-    * carries its own bench line (q36/q86/q61/q77/q100/q81), and the
-    * memo key embeds the corpus signature + every config knob (the
-    * cfgTag names this declaration), so a regenerated corpus or a
-    * changed config rebuilds. The FIRST run on any corpus state
-    * executes the full chain — which is exactly what the driver's
-    * fresh-container correctness gate hashes. Shared by q125 (split +
-    * mixture + shard tail) and q126 (release artifact + read-back):
-    * both declare the SAME chain, so they must read the same bytes.
-    */
   /** The q125-declared chain CONFIG run directly — the one
     * prepareCorpus parameterization q125/q126 declare, factored out
     * of [[preparedCorpusCached]] so the memo install and [[Bench]]'s
@@ -691,6 +674,20 @@ object Pipeline {
       sourceQuotaCap = Some(12))
   }
 
+  /** The q125-declared prepared corpus (cleaned relation + stage
+    * counters), built once per (corpus state, config) into a
+    * parameter-keyed persisted memo and read thereafter — the
+    * q114/q119 memo-clone rule: the chain is a pure function of
+    * (corpus state, this declared config), each of its stages
+    * carries its own bench line (q36/q86/q61/q77/q100/q81), and the
+    * memo key embeds the corpus signature + every config knob (the
+    * cfgTag names this declaration), so a regenerated corpus or a
+    * changed config rebuilds. The FIRST run on any corpus state
+    * executes the full chain — which is exactly what a
+    * fresh-container correctness check hashes. Shared by q125 (split +
+    * mixture + shard tail) and q126 (release artifact + read-back):
+    * both declare the SAME chain, so they must read the same bytes.
+    */
   private[graft] def preparedCorpusCached(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       maxDocs: Long): (DataFrame, org.apache.spark.sql.Row) = {
@@ -875,13 +872,12 @@ object Pipeline {
       paraDedupTokens: Option[Int] = None,
       sourceQuotaCap: Option[Int] = None): (CorpusReport, DataFrame) = {
     import spark.implicits._
-    val (cleaned0, report) = prepareCorpus(spark, docs,
+    val (cleaned, report) = prepareCorpus(spark, docs,
       nearThreshold = nearThreshold, minTokens = minTokens,
       dupMilliMax = dupMilliMax, topMilliMax = topMilliMax,
       evalDocs = evalDocs, perplexityRef = perplexityRef,
       dsirTarget = dsirTarget, paraDedupTokens = paraDedupTokens,
       sourceQuotaCap = sourceQuotaCap)
-    val cleaned = cleaned0.localCheckpoint()
     val card = releaseArtifacts(spark, cleaned, report.counters, outPath,
       nShards)
     (report, card)

@@ -66,9 +66,10 @@ object Graph {
     * Convergence test is exact, not a checksum: the star rounds are a
     * fixpoint iff every component is a star rooted at its minimum, so
     * we stop when a round leaves the edge SET unchanged (equal count +
-    * empty `exceptAll`, both on checkpointed frames). `maxIter` is a
-    * safety rail far above the O(log² n) bound; non-convergence throws
-    * rather than returning partial labels.
+    * empty `exceptAll`, both on checkpointed frames; each count is an
+    * Observation on its round's eager pin, not a job of its own).
+    * `maxIter` is a safety rail far above the O(log² n) bound;
+    * non-convergence throws rather than returning partial labels.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
       assumeDistinct: Boolean = false): DataFrame = {
@@ -77,14 +78,14 @@ object Graph {
       .filter(col("src") =!= col("dst"))
     // callers whose edge list is distinct by construction (q61: a
     // groupBy output) skip one shuffle here
-    var e = (if (assumeDistinct) base else base.distinct())
-      .localCheckpoint()
-    var eCount = e.count()
+    var (e, o0) = Sinks.observedPin(
+      if (assumeDistinct) base else base.distinct())
+    var eCount = Sinks.observedCount(o0)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      val nextCount = next.count()
+      val (next, o) = Sinks.observedPin(smallStar(largeStar(e)))
+      val nextCount = Sinks.observedCount(o)
       converged = nextCount == eCount && next.exceptAll(e).isEmpty
       e = next
       eCount = nextCount

@@ -5036,14 +5036,19 @@ object LlmOps {
     */
   def fitUnigramLm(ref: DataFrame, vocabCap: Int): (DataFrame, Long) = {
     val spark = ref.sparkSession
-    val refToks = ref.select(explode(split(col("text"), " ")).as("tok"))
-    val n = refToks.count()
+    // the token total rides the vocab collect's job: an Observation on
+    // the full per-token counts, in that job's last stage
+    val (counts, obs) = Sinks.observed(
+      ref.select(explode(split(col("text"), " ")).as("tok"))
+        .groupBy("tok").count(),
+      coalesce(sum("count"), lit(0L)).as("tokens"))
     // TakeOrdered: full counts shuffle map-side-partial, only the top
     // vocabCap rows ever reach the driver
-    val voc = refToks.groupBy("tok").count()
+    val voc = counts
       .orderBy(col("count").desc, col("tok").asc)
       .limit(vocabCap)
       .collect().map(r => (r.getString(0), r.getLong(1)))
+    val n = Sinks.observedCount(obs, "tokens")
     val denom = (n + voc.length + 1).toDouble
     val lm = spark.createDataFrame(
       voc.toSeq.map { case (t, c) => (t, micro(-log2((c + 1).toDouble / denom))) })

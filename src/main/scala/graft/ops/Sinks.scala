@@ -206,6 +206,52 @@ object Sinks {
     spark.createDataFrame(rows.asJava, result.schema)
   }
 
+  /** Pin `df` in executor storage with its row count riding the pin's
+    * own job: an eager `localCheckpoint()` over `df.observe(count(*)
+    * as "n", extra*)`, so the count costs no second action (the
+    * commitVersion observe rule applied to pins). The same job also
+    * completes every Observation placed upstream in `df`'s plan.
+    *
+    * Two rules keep such counts exact on this Spark. The pin is EAGER:
+    * an Observation on a lazy `localCheckpoint(false)` fires when the
+    * pin is built, reads n = 0 and never updates when a later action
+    * materializes it. And an upstream Observation must sit in the
+    * pin's own stage and reach it through unary operators only. One
+    * beneath a join is pruned with the join when a side is empty; one
+    * below a shuffle is pruned with its stage when AQE finds that
+    * stage empty; one on a relation both sides of a self-join read is
+    * counted once per side.
+    */
+  private[graft] def observedPin(df: DataFrame,
+      extra: org.apache.spark.sql.Column*)
+      : (DataFrame, org.apache.spark.sql.Observation) = {
+    val (counted, obs) = observed(df, extra: _*)
+    (counted.localCheckpoint(), obs)
+  }
+
+  /** `df` under an Observation of its row count ("n") and `extra`,
+    * filled by whatever action later runs it — for [[observedPin]] and
+    * for counts upstream of one (see its placement rules).
+    */
+  private[graft] def observed(df: DataFrame,
+      extra: org.apache.spark.sql.Column*)
+      : (DataFrame, org.apache.spark.sql.Observation) = {
+    val obs = org.apache.spark.sql.Observation()
+    (df.observe(obs, count(lit(1)).as("n"), extra: _*), obs)
+  }
+
+  /** The Long metric `name` of a completed Observation. Fails loud when
+    * it is absent: an Observation whose subtree the optimizer pruned
+    * completes with an EMPTY map, which must never read as 0.
+    */
+  private[graft] def observedCount(obs: org.apache.spark.sql.Observation,
+      name: String = "n"): Long =
+    obs.get.get(name) match {
+      case Some(n: Long) => n
+      case other => throw new IllegalStateException(
+        s"observation ${obs.name} has no count '$name' ($other)")
+    }
+
   /** Collapse a batch-stamped relation (`.../__batch_id=<b>/`
     * subdirectories, the replay-safe streaming-append layout) into
     * its flat form: drop the stamp column, rewrite partitioned by the

@@ -311,6 +311,68 @@ class PipelineSpec extends AnyFunSuite {
     assert(expectTail.nonEmpty && expectDrop.nonEmpty, "gates should bite on this corpus")
   }
 
+  test("prepareCorpus observed report equals per-stage count() twin, every gate on") {
+    val docs = Tables.documents(spark, SharedSpark.sfTiny)
+    val ref = docs.filter(col("source") === "src0").select("text")
+    val eval_ = docs.filter(col("doc_id") % 13 === 0).select("doc_id", "text")
+    val (cleaned, r) = Pipeline.prepareCorpus(spark, docs,
+      evalDocs = Some(eval_), contaminationMilli = 700,
+      paraDedupTokens = Some(20), perplexityRef = Some(ref),
+      dsirTarget = Some(ref), sourceQuotaCap = Some(3))
+    // the twin: every stage built from the operators on its own, in
+    // the chain's order, and counted with a plain count()
+    def pin(d: org.apache.spark.sql.DataFrame) = d.localCheckpoint()
+    val exact = pin(docs.join(
+      docs.groupBy(sha2(col("text"), 256)).agg(min("doc_id").as("doc_id"))
+        .select("doc_id"), "doc_id"))
+    val para = pin(exact.drop("text")
+      .join(ops.LlmOps.dedupParagraphs(exact.select("doc_id", "text"), 20)
+        .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
+      .filter(length(col("text")) > 0))
+    val labels = ops.Graph.connectedComponents(
+        ops.LlmOps.minhashPairsOf(para, 0.5)
+          .select(col("doc_a").as("src"), col("doc_b").as("dst")))
+      .withColumnRenamed("node", "doc_id")
+    val near = pin(para.join(labels, Seq("doc_id"), "left")
+      .filter(col("component").isNull || col("component") === col("doc_id"))
+      .drop("component"))
+    val quality = pin(ops.LlmOps.heuristicQualityGate(near, 5, 300, 200))
+    val (lm, oov) = ops.LlmOps.fitUnigramLm(ref, 4096)
+    val ppl = pin(ops.LlmOps.lmTailGate(quality, lm, oov, 4910000L, 4940000L))
+    val dsir = pin(ppl.join(ops.LlmOps.importanceResample(
+        ppl.select("doc_id", "lang", "text"), ref, -210000L)
+      .filter(!col("kept")).select("doc_id"), Seq("doc_id"), "left_anti"))
+    val decon = pin(ops.LlmOps.decontaminationGate(dsir,
+      ops.LlmOps.shingles(eval_).select("shingle").distinct(), 700))
+    val quota = pin(decon.join(ops.Retrieval.sourceQuotaOf(
+      decon.select("doc_id", "source", "text"), 3).select("doc_id"), "doc_id"))
+    val train = quota
+      .filter(substring(md5(col("doc_id").cast("string")), 1, 2) < lit("e6"))
+      .count()
+    val want = Pipeline.CorpusReport(input = docs.count(),
+      afterExactDedup = exact.count(), afterNearDedup = near.count(),
+      afterQuality = quota.count(), train = train,
+      holdout = quota.count() - train,
+      decontaminated = dsir.count() - decon.count(),
+      paraDropped = exact.count() - para.count(),
+      pplDropped = quality.count() - ppl.count(),
+      dsirDropped = ppl.count() - dsir.count(),
+      quotaDropped = decon.count() - quota.count())
+    want.counters.zip(r.counters).foreach { case ((n, w), (_, got)) =>
+      assert(got === w, s"counter $n")
+    }
+    assert(r === want)
+    assert(cleaned.count() === r.afterQuality)
+    assert(cleaned.select("doc_id").as[Long].collect().sorted.toSeq ===
+      quota.select("doc_id").as[Long].collect().sorted.toSeq)
+    // the discriminating gates bite, so a misplaced observation moves
+    // some counter
+    assert(r.afterNearDedup < r.afterExactDedup - r.paraDropped,
+      "near-dup idle")
+    assert(r.pplDropped > 0 && r.dsirDropped > 0 && r.decontaminated > 0 &&
+      r.quotaDropped > 0, s"a gate is idle: $r")
+  }
+
   test("q123 SQL view stack == q55 stateful DataFrame surface, row for row") {
     // the declared SQL↔DataFrame parity law: the spark.sql query over
     // the registered temp views and the mapGroups sessionizer are two

@@ -378,4 +378,26 @@ class SinksSpec extends AnyFunSuite {
       java.nio.file.Files.exists(reclaim))
   }
 
+  test("observedPin: the pin's observed counts equal count(), upstream observations included") {
+    val df = spark.range(1000).toDF("id")
+    val (up, oUp) = Sinks.observed(df)
+    val kept = up.filter(col("id") % 2 === 0)
+    val (pinned, o) = Sinks.observedPin(kept,
+      count(when(col("id") % 4 === 0, 1)).as("quads"))
+    // all three counts are filled by the pin's own job — no action
+    // has run on `pinned` yet. A lazy pin would read 0 for good here.
+    assert(Sinks.observedCount(oUp) === df.count())
+    assert(Sinks.observedCount(o) === kept.count())
+    assert(Sinks.observedCount(o, "quads") ===
+      kept.filter(col("id") % 4 === 0).count())
+    assert(pinned.count() === 500L)
+    // an observation the optimizer pruned (beneath an inner join whose
+    // other side is empty) reports nothing: the reader fails loud
+    // rather than reading it as 0
+    val (side, oSide) = Sinks.observed(df)
+    Sinks.observedPin(side.join(df.filter(col("id") < 0), "id"))
+    val e = intercept[IllegalStateException](Sinks.observedCount(oSide))
+    assert(e.getMessage.contains("no count 'n'"))
+  }
+
 }
