@@ -22,7 +22,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * one (a `.scala` frame) — the root execution's action site, else
   * its first job's. An action site inside a shared helper also names
   * the helper's caller. `uncovered` is driver wall time outside every
-  * job's interval: planning, commits, renames, listings.
+  * job's interval: planning, commits, renames, listings. `forks` is
+  * the number of processes the JVM started meanwhile (JFR
+  * `jdk.ProcessStart`): a filesystem that forks per file shows here.
   */
 object JobCensus {
   /** One job: its interval (ns on the census clock), the root SQL
@@ -31,11 +33,12 @@ object JobCensus {
   final case class Job(id: Int, startNs: Long, endNs: Long,
       root: Option[Long], site: String)
 
-  /** What [[census]] saw: wall time, jobs, and every SQL execution as
-    * id → (root id, action call site).
+  /** What [[census]] saw: wall time, jobs, every SQL execution as
+    * id → (root id, action call site), and every started process's
+    * command line.
     */
   final case class Census(wallNs: Long, jobs: Seq[Job],
-      executions: Map[Long, (Long, String)]) {
+      executions: Map[Long, (Long, String)], forks: Seq[String]) {
     def uncoveredNs: Long = {
       val covered = jobs.sortBy(_.startNs)
         .foldLeft((0L, Long.MinValue)) { case ((sum, reach), j) =>
@@ -78,11 +81,36 @@ object JobCensus {
       f"TOTAL ${wallNs / 1e9}%.2f s, sql=${executions.size}, " +
         f"jobs=${jobs.size}, sum-job " +
         f"${jobs.map(j => j.endNs - j.startNs).sum / 1e9}%.2f s, " +
-        f"uncovered ${uncoveredNs / 1e9}%.2f s"
+        f"uncovered ${uncoveredNs / 1e9}%.2f s, forks=${forks.size}"
   }
 
-  /** Run `body` under a census listener. */
+  /** `body`'s result and the command line of every process the JVM
+    * started while it ran, from a JFR recording of `jdk.ProcessStart`.
+    */
+  def processStarts[A](body: => A): (A, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = body
+      rec.stop()
+      val file = java.nio.file.Files.createTempFile("forks", ".jfr")
+      try {
+        rec.dump(file)
+        (out, jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala
+          .map(_.getString("command")).toSeq)
+      } finally java.nio.file.Files.delete(file)
+    } finally rec.close()
+  }
+
+  /** Run `body` under a census listener and a process-start recording. */
   def census(spark: SparkSession)(body: => Unit): Census = {
+    val (c, forks) = processStarts(jobsOf(spark)(body))
+    c.copy(forks = forks)
+  }
+
+  private def jobsOf(spark: SparkSession)(body: => Unit): Census = {
     val t0 = System.nanoTime()
     val jobs = scala.collection.mutable.ArrayBuffer[Job]()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
@@ -122,7 +150,7 @@ object JobCensus {
     Thread.sleep(1000) // listener bus is async; let the tail drain
     spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
-    Census(wall, jobs.synchronized(jobs.toVector), execs.asScala.toMap)
+    Census(wall, jobs.synchronized(jobs.toVector), execs.asScala.toMap, Nil)
   }
 
   def main(args: Array[String]): Unit = {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** ONE local-session builder for every runnable main (Bench, Verify,
-  * Plans, ScaleProbe, BenchIncremental). The config here IS the
+  * Plans, ScaleProbe, BenchIncremental, JobCensus). The config here IS the
   * execution contract the oracle gate and the bench records are
   * measured under — five hand-synced copies of it meant a future
   * tuning could silently bench under a different config than the
@@ -12,12 +12,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** `fs.file.impl` of every session: [[NioLocalFileSystem]], which
+    * sets file permissions without forking a `chmod`. Hadoop caches
+    * filesystems by scheme and user, not by configuration, so this
+    * must be set before the JVM's first `file:` filesystem is built.
+    */
+  val LocalFsImpl: String = classOf[NioLocalFileSystem].getName
+
   /** `local[cpus]` session with the repo's standard knobs:
     * shuffle.partitions = cpus (never the 200 default on a laptop-
     * class box), UTC (oracle parity), AQE on, nanos-as-long for the
-    * events table's TIMESTAMP(NANOS) shape, and task-side v2 commit
+    * events table's TIMESTAMP(NANOS) shape, task-side v2 commit
     * renames so sink ops pay one rename per file instead of a serial
-    * driver-side directory move.
+    * driver-side directory move, and the fork-free local filesystem.
     */
   def local(cpus: String): SparkSession = {
     val s = SparkSession.builder()
@@ -35,6 +42,7 @@ object Sessions {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .config("spark.hadoop.fs.file.impl", LocalFsImpl)
       .getOrCreate()
     s
   }

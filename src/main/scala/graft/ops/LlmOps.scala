@@ -275,13 +275,7 @@ object LlmOps {
   private def indexHasData(spark: SparkSession, dir: String): Boolean = {
     val fs = Sinks.fsFor(spark, dir)
     val p = new org.apache.hadoop.fs.Path(dir)
-    fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
+    fs.exists(p) && Sinks.filesUnder(fs, p).exists(_.getPath.getName.endsWith(".parquet"))
   }
 
   /** max(doc_id) of a corpus as Long (−1 when empty; fixture ids have
@@ -1824,22 +1818,19 @@ object LlmOps {
     * recursive listing, driver-side, cheap relative to any job the
     * memo saves.
     */
-  private def tableSignature(spark: SparkSession, dir: String,
+  private[graft] def tableSignature(spark: SparkSession, dir: String,
       table: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
     val fs = Sinks.fsFor(spark, p.toString)
     if (!fs.exists(p)) return "0" * 8
-    // strip the QUALIFIED root (listFiles returns qualified URIs, so
+    // strip the QUALIFIED root (listings return qualified URIs, so
     // a bare-path prefix would never match): entries are root-relative
     // and the signature depends only on content, not path spelling
     val rootStr = fs.makeQualified(p).toString
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      entries += st.getPath.toString.stripPrefix(rootStr) + ":" +
+    val entries = Sinks.filesUnder(fs, p).map { st =>
+      st.getPath.toString.stripPrefix(rootStr) + ":" +
         st.getLen + ":" + st.getModificationTime
-    }
+    }.toSeq
     val acc = entries.sorted.foldLeft(1125899906842597L) { (h, e) =>
       h * 31 + scala.util.hashing.MurmurHash3.stringHash(e)
     }

@@ -190,6 +190,20 @@ object Sinks {
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
 
+  /** Every file under `p` (or `p` itself when it is a file), by plain
+    * `listStatus` recursion, lazily: an `exists` stops listing at its
+    * first match. Never `fs.listFiles`: each `LocatedFileStatus` it
+    * builds loads the file's permissions, which the local filesystem
+    * does without libhadoop by forking an `ls -ld` per file. A plain
+    * `FileStatus` never loads them. The checksum filesystem's listing
+    * hides `.crc` files, as `listFiles` does.
+    */
+  private[graft] def filesUnder(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(p).iterator.flatMap { st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Iterator.single(st)
+    }
+
   /** Materialize a BOUNDED result, then delete the directory it
     * read — the shared localize-then-delete discipline of the
     * declared throwaway-index queries (q106/q109's probeAndClean,
@@ -1101,7 +1115,7 @@ object Sinks {
     * names, only their contents, and must still be detected. Bounded
     * driver work: one recursive listing of the stamped tree.
     */
-  private def listBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def listBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Map[String, (Long, Long, Long)] = {
     def walk(p: org.apache.hadoop.fs.Path,
         rel: String): Seq[(String, org.apache.hadoop.fs.Path)] =
@@ -1112,14 +1126,9 @@ object Sinks {
         else walk(st.getPath, r)
       }
     walk(root, "").map { case (rel, p) =>
-      var n = 0L; var bytes = 0L; var mtime = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        n += 1; bytes += st.getLen
-        mtime = math.max(mtime, st.getModificationTime)
-      }
-      rel -> ((n, bytes, mtime))
+      val files = filesUnder(fs, p).toSeq
+      rel -> ((files.size.toLong, files.map(_.getLen).sum,
+        files.map(_.getModificationTime).foldLeft(0L)(math.max)))
     }.toMap
   }
 

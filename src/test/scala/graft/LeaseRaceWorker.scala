@@ -17,6 +17,7 @@ object LeaseRaceWorker {
   def main(args: Array[String]): Unit = {
     val Array(root, readyFile, goFile) = args
     val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.file.impl", Sessions.LocalFsImpl)
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
     ops.Sinks.withWriterLease(fs, root, "ingest-append") {
       java.nio.file.Files.createFile(java.nio.file.Paths.get(readyFile))

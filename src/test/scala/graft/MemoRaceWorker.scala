@@ -21,6 +21,7 @@ object MemoRaceWorker {
   def main(args: Array[String]): Unit = {
     val Array(id, memoRoot, barrier) = args
     val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.file.impl", Sessions.LocalFsImpl)
     val dst = new org.apache.hadoop.fs.Path(memoRoot)
     val fs = dst.getFileSystem(conf)
     val staging = new org.apache.hadoop.fs.Path(memoRoot + "__tmp_app_" + id)

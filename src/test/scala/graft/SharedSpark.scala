@@ -15,6 +15,7 @@ object SharedSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.hadoop.fs.file.impl", Sessions.LocalFsImpl)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
