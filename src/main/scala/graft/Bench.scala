@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main. Prints ONE cumulative JSON line per completed
   * measurement so the record survives an external kill (rounds 5 and 6
@@ -94,7 +95,9 @@ object Bench {
     * (`graft_sf*`), and lease/reclaim lifecycle files (`*__lease*`,
     * `*__reclaim*`). Pure-local java.io (never Hadoop FS: the per-call
     * overhead is the problem being solved), bounded to direct
-    * children of `root`. Returns the deleted names (spec hook).
+    * children of `root`. An entry that fails to delete is reported on
+    * stderr and skipped; fatal errors propagate. Returns the swept
+    * names (spec hook).
     */
   private[graft] def sweepScratch(root: String): Seq[String] = {
     val dir = new java.io.File(root)
@@ -110,7 +113,9 @@ object Bench {
         !n.startsWith("graft_sf") && !n.contains("__lease") &&
         !n.contains("__reclaim")
     }.map { f =>
-      try rm(f) catch { case _: Throwable => () }
+      try rm(f) catch { case NonFatal(e) =>
+        System.err.println(s"[bench] sweep: could not remove ${f.getName}: $e")
+      }
       f.getName
     }
   }
@@ -136,7 +141,9 @@ object Bench {
         if (swept.nonEmpty)
           System.err.println(s"[bench] swept ${swept.size} stale scratch entries")
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] scratch sweep failed: $e")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus)

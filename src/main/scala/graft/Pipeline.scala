@@ -369,6 +369,11 @@ object Pipeline {
     * RAW model on the surviving corpus itself, so a re-run rescores
     * under a shifted raw distribution and may drop more — monotone
     * shrinkage toward the target distribution, not an error.
+    *
+    * Contract: exact dedup assumes `doc_id` is a KEY of `docs`. The
+    * keeper rule keeps every row whose id equals its content group's
+    * min id, so two rows sharing an id and a text would both survive.
+    * Every caller's corpus (the fixture `documents` table) has it.
     */
   def prepareCorpus(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, nearThreshold: Double = 0.5,
@@ -382,7 +387,7 @@ object Pipeline {
       dsirTarget: Option[DataFrame] = None,
       dsirThresholdMicro: Long = -210000L,
       sourceQuotaCap: Option[Int] = None,
-      nearLabelsCache: Option[String] = None): (DataFrame, CorpusReport) = {
+      nearLabelsCache: Option[(String, String)] = None): (DataFrame, CorpusReport) = {
     import ops.Sinks.{observed, observedCount, observedPin}
     // exact dedup as a per-content-hash window (min-id keeper), not a
     // self-join of `docs`: one pass whose input and keeper counts ride
@@ -421,28 +426,21 @@ object Pipeline {
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
         .withColumnRenamed("node", "doc_id")
     }
-    // `nearLabelsCache`: persisted memo path for the cluster labels —
-    // the pair join + iterative CC dominate a bounded-corpus run and
-    // are a pure function of (corpus state, threshold, para config),
-    // so a caller whose memo key covers ALL of those (q125's does:
-    // dir signature + bound + threshold + paraTokens) may persist
-    // them with the q61 memo discipline (staged write, race-tolerant
-    // install, losers read the winner's identical bytes). No key
-    // input, no cache — the default recomputes.
+    // `nearLabelsCache`: (corpus dir, params) of a [[ops.Memo.Cluster]]
+    // memo for the cluster labels — the pair join + iterative CC
+    // dominate a bounded-corpus run and are a pure function of (corpus
+    // state, threshold, para config), so a caller whose params cover
+    // ALL of those (q125's do: bound + threshold + paraTokens + pair
+    // source; the dir signature is in every memo name) may persist
+    // them. No key input, no cache — the default recomputes.
     val labels = nearLabelsCache match {
       case None => computeLabels()
-      case Some(memoPath) =>
-        val fs = ops.Sinks.fsFor(spark, memoPath)
-        val dst = new org.apache.hadoop.fs.Path(memoPath)
-        if (!fs.exists(dst)) {
-          val staging = new org.apache.hadoop.fs.Path(
-            memoPath + "__tmp_" + spark.sparkContext.applicationId)
-          fs.delete(staging, true)
+      case Some((dir, params)) =>
+        spark.read.parquet(ops.Memo.ensure(spark, ops.Memo.Cluster, dir,
+          params) { staging =>
           computeLabels().coalesce(1).write.mode("overwrite")
             .parquet(staging.toString)
-          ops.Sinks.installMemo(fs, staging, dst)
-        } else ops.Sinks.repairNestedStaging(fs, dst)
-        spark.read.parquet(memoPath)
+        })
     }
     val (near, oNear) = observed(
       exact.join(labels, Seq("doc_id"), "left")
@@ -562,8 +560,8 @@ object Pipeline {
     *
     * Bench shape (the q114/q119 memo-clone rule): the prepared corpus
     * (chain output + counters) persists as a parameter-keyed memo
-    * ([[ops.LlmOps.corpusPrepMemoPathOf]] — corpus signature + every
-    * config knob), because the chain is a pure function of (corpus
+    * ([[ops.Memo.CorpusPrep]] — corpus signature + every config
+    * knob), because the chain is a pure function of (corpus
     * state, declared config) and each of its stages already carries
     * its own bench line (q36/q86/q61/q77/q100/q81); re-running all of
     * them inside every timed round would re-pay measured costs. The
@@ -571,6 +569,9 @@ object Pipeline {
     * fresh-container correctness gate hashes — executes the full
     * chain; warm rounds time the split + mixture + shard tail.
     * PipelineSpec pins fresh-chain == memoized-run row identity.
+    *
+    * Contract: exact dedup assumes `doc_id` is a key of `documents`
+    * (the [[prepareCorpus]] contract).
     */
   def q125CorpusPipeline(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxDocs: Long = 5000): DataFrame = {
@@ -639,7 +640,7 @@ object Pipeline {
   private[graft] def preparedCorpusFresh(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       maxDocs: Long = 5000,
-      nearLabelsCache: Option[String] = None): (DataFrame, CorpusReport) = {
+      nearLabelsCache: Option[(String, String)] = None): (DataFrame, CorpusReport) = {
     val full = Tables.documents(spark, dir)
     // source rides the whole chain: the q105 quota stage groups by
     // it, and the released datacard (q126) reports per-domain stats
@@ -692,17 +693,14 @@ object Pipeline {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       maxDocs: Long): (DataFrame, org.apache.spark.sql.Row) = {
     import spark.implicits._
-    val memo = ops.LlmOps.corpusPrepMemoPathOf(spark, dir, maxDocs,
-      "t500m5d300t200e13c700p20pplq12")
-    val fs = ops.Sinks.fsFor(spark, memo)
-    val dst = new org.apache.hadoop.fs.Path(memo)
-    if (!fs.exists(dst)) {
+    val memo = ops.Memo.ensure(spark, ops.Memo.CorpusPrep, dir,
+        s"_d${maxDocs}_t500m5d300t200e13c700p20pplq12") { staging =>
+      // the labels memo: q61's cluster params (threshold 0.5) plus
+      // the para window (`cp20`) and pair source (`ex` exact n-gram
+      // Jaccard; `lsh` would keep a different survivor set)
       val (cleaned0, report) = preparedCorpusFresh(spark, dir, maxDocs,
-        nearLabelsCache = Some(ops.LlmOps.corpusLabelsMemoPathOf(
-          spark, dir, 0.5, maxDocs, 20, exactPairs = true)))
-      val staging = new org.apache.hadoop.fs.Path(
-        memo + "__tmp_" + spark.sparkContext.applicationId)
-      fs.delete(staging, true)
+        nearLabelsCache = Some((dir,
+          ops.LlmOps.clusterMemoParams(0.5, maxDocs) + "_cp20ex")))
       cleaned0.coalesce(1).write.mode("overwrite")
         .parquet(s"$staging/cleaned")
       Seq((report.input, report.afterExactDedup, report.paraDropped,
@@ -713,12 +711,7 @@ object Pipeline {
           "after_near_dedup", "ppl_dropped", "decontaminated",
           "quota_dropped", "final_kept", "train", "holdout")
         .coalesce(1).write.mode("overwrite").parquet(s"$staging/report")
-      ops.Sinks.installMemo(fs, staging, dst)
-      ops.LlmOps.gcStaleMemos(spark, "graft_cluster_memo_", dir,
-        "documents")
-      ops.LlmOps.gcStaleMemos(spark, "graft_corpus_prep_memo_", dir,
-        "documents")
-    } else ops.Sinks.repairNestedStaging(fs, dst)
+    }
     (spark.read.parquet(s"$memo/cleaned"),
       spark.read.parquet(s"$memo/report").head())
   }
@@ -752,6 +745,9 @@ object Pipeline {
     * stage CTEs, so any byte the release writers lose, duplicate or
     * misroute moves some row. The written release is app-scoped and
     * deleted after the result is localized (the q106 rule).
+    *
+    * Contract: exact dedup assumes `doc_id` is a key of `documents`
+    * (the [[prepareCorpus]] contract, via q125's prepared corpus).
     */
   def q126CorpusRelease(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxDocs: Long = 5000, nShards: Int = 8): DataFrame = {

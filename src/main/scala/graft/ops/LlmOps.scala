@@ -439,21 +439,13 @@ object LlmOps {
         // only the declared seal + flat-append tail here (the
         // q114/q120 memo-clone pattern, extended with per-batch
         // outputs because this fold's RESULT accumulates per batch).
-        val memo = dedupPrefixMemoPathOf(spark, dir, nBatches, prefix,
-          threshold)
-        val memoRoot = new org.apache.hadoop.fs.Path(memo)
-        if (!fs.exists(memoRoot)) {
-          val staging = new org.apache.hadoop.fs.Path(
-            memo + "__tmp_" + spark.sparkContext.applicationId)
-          fs.delete(staging, true)
-          val pre = runBatches(s"$staging/index", 0, prefix,
-            sealHere = false)
-          pre.reduce(_.unionByName(_))
+        val memo = Memo.ensure(spark, Memo.DedupPrefix, dir,
+            dedupMemoParams(nBatches, prefix, threshold)) { staging =>
+          runBatches(s"$staging/index", 0, prefix, sealHere = false)
+            .reduce(_.unionByName(_))
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$staging/admitted")
-          Sinks.installMemo(fs, staging, memoRoot)
-          gcStaleMemos(spark, "graft_dedup_prefix_memo_", dir, "documents")
-        } else Sinks.repairNestedStaging(fs, memoRoot)
+        }
         if (fs.exists(new org.apache.hadoop.fs.Path(s"$memo/index")))
           Sinks.copyDir(fs, s"$memo/index", indexPath,
             spark.sparkContext.hadoopConfiguration)
@@ -470,16 +462,13 @@ object LlmOps {
     out
   }
 
-  /** Memo path of the q119 pre-seal ingest prefix (index state +
-    * admitted rows after the first `prefix` stamped batches) — the
-    * [[stampedAnnMemoPathOf]] convention for the dedup family.
+  /** [[Memo.DedupPrefix]] params of the LSH index state + admitted
+    * rows after the first `prefix` of `nBatches` stamped batches
+    * (q119's pre-seal prefix; q131's full ingest at prefix = nBatches).
     */
-  private[graft] def dedupPrefixMemoPathOf(spark: SparkSession,
-      dir: String, nBatches: Int, prefix: Int,
+  private def dedupMemoParams(nBatches: Int, prefix: Int,
       threshold: Double): String =
-    s"${Sinks.indexRoot}/graft_dedup_prefix_memo_" +
-      memoDirKey(dir) + "_s" + tableSignature(spark, dir, "documents") +
-      s"_b${nBatches}_p${prefix}_t${(threshold * 1e6).round}_$IndexMemoFormat"
+    s"_b${nBatches}_p${prefix}_t${(threshold * 1e6).round}"
 
   /** #86 Paragraph-level exact dedup (the C4/RefinedWeb boilerplate
     * strip): segment each document into fixed-width token chunks
@@ -1776,34 +1765,6 @@ object LlmOps {
     (cents, cb)
   }
 
-  /** Drop every memoized trainer fit. The caches assume a corpus dir
-    * is immutable for the JVM's lifetime (a re-materialized corpus is
-    * a new dir/version — the `Bpe.fitCached` contract); a caller that
-    * DOES rewrite a dir in place calls this first, or the next fit
-    * would silently describe the old contents.
-    */
-  /** Disk-memo key for a corpus dir: the sanitized name for
-    * readability PLUS a 16-hex hash of the RAW dir string — two
-    * distinct dirs that sanitize identically ("/a-b" vs "/a_b")
-    * must NEVER share a memo, or one corpus would silently serve the
-    * other's labels/index. The hash also makes [[invalidateMemosFor]]
-    * matching exact rather than a prefix heuristic. 64 bits like
-    * [[tableSignature]] (two independently-seeded 32-bit murmurs):
-    * the dir key is the OTHER half of every memo path's identity,
-    * and a 32-bit truncation here would reopen exactly the birthday
-    * collision the signature widened away — two corpus roots
-    * colliding on the key prefix cross-serve each other's memos
-    * (round-11 advice). Pre-widening memos (8-hex names) are
-    * unreachable by any current lookup — lookups only ever resolve
-    * through this one definition — and [[gcStaleMemos]]'s legacy-stem
-    * sweep reclaims them (round-12 advice).
-    */
-  private def memoDirKey(dir: String): String = {
-    val hi = scala.util.hashing.MurmurHash3.stringHash(dir) & 0xFFFFFFFFL
-    val lo = scala.util.hashing.MurmurHash3.stringHash(dir, 0x9E3779B9) & 0xFFFFFFFFL
-    dir.replaceAll("[^a-zA-Z0-9]", "_") + "_h" + f"${(hi << 32) | lo}%016x"
-  }
-
   /** Signature of a corpus table's on-disk state: a hash of the
     * SORTED list of its parquet files' (path, length, mtime) triples,
     * folded in that canonical order. Disk memos embed it so a
@@ -1842,362 +1803,16 @@ object LlmOps {
     f"$acc%016x"
   }
 
-  /** Memo path of [[q61DedupClustersCached]] — exposed package-wide so
-    * specs locate memos through the ONE definition instead of
-    * hand-mirroring the key arithmetic.
-    */
-  private[graft] def clusterMemoPathOf(spark: SparkSession, dir: String,
-      threshold: Double, maxDocs: Long): String =
-    s"${Sinks.indexRoot}/graft_cluster_memo_" +
-      memoDirKey(dir) + "_s" + tableSignature(spark, dir, "documents") +
-      s"_t${(threshold * 1e6).round}_d$maxDocs"
-
-  /** Memo path for q125's CORPUS-PIPELINE cluster labels — the
-    * [[clusterMemoPathOf]] convention with the paragraph-strip config
-    * in the key (`cp<w>`): q125 clusters the PARA-CLEANED exact
-    * survivors, so its labels differ from q61's raw-text labels and
-    * must never share a path. Every input the labels depend on is in
-    * the key: corpus dir + on-disk signature, id bound, Jaccard
-    * threshold, para window, AND the pair-source mode (`ex` exact
-    * n-gram Jaccard / `lsh` banded MinHash — the two detectors keep
-    * DIFFERENT survivor sets, so a shared path would serve one
-    * algorithm's labels to the other's caller).
-    */
-  private[graft] def corpusLabelsMemoPathOf(spark: SparkSession,
-      dir: String, threshold: Double, maxDocs: Long,
-      paraTokens: Int, exactPairs: Boolean): String =
-    clusterMemoPathOf(spark, dir, threshold, maxDocs) +
-      s"_cp${paraTokens}${if (exactPairs) "ex" else "lsh"}"
-
-  /** Memo path for q125's PREPARED CORPUS (the cleaned relation +
-    * CorpusReport counters after the full prepareCorpus chain) — the
-    * q114/q119 memo-clone convention applied to the corpus-prep
-    * front half: the chain is a pure function of (corpus state,
-    * declared config), every one of its stages already carries its
-    * own bench line (q36/q86/q61/q77/q100/q81), and re-running all
-    * of them inside every timed q125 round would re-pay costs the
-    * bench already measures. `cfgTag` names the declared config —
-    * bump it whenever ANY q125 stage parameter changes, or a stale
-    * prepared corpus would serve under a new declaration.
-    */
-  private[graft] def corpusPrepMemoPathOf(spark: SparkSession,
-      dir: String, maxDocs: Long, cfgTag: String): String =
-    s"${Sinks.indexRoot}/graft_corpus_prep_memo_" +
-      memoDirKey(dir) + "_s" + tableSignature(spark, dir, "documents") +
-      s"_d${maxDocs}_$cfgTag"
-
-  /** On-disk FORMAT tag for persisted INDEX memos. The corpus
-    * signature catches a regenerated corpus; this catches regenerated
-    * CODE: bump it whenever any index layout a memo stores changes
-    * (stamp scheme, partition columns, codebook encoding, the
-    * dedup-prefix admitted schema), so new code never clones or
-    * probes bytes an older format wrote. Rides every index-memo
-    * path; stale-format memos are orphaned and garbage-collected by
-    * the next same-family install ([[gcStaleMemos]]) or any
-    * [[invalidateMemosFor]] on their dir.
-    * f2: inverted-index stats gained the `n_buckets` column (probes
-    * read the hash modulus from the index, round-11). The round-12
-    * `__nb_<n>` modulus sentinel is deliberately NOT a format bump:
-    * it is additive — old f2 memos stay byte-valid, readers ignore
-    * the extra file, and the append guard falls back to the stats
-    * footers when the sentinel is absent (recreating it on the next
-    * append).
-    * f3: the quantizer refine loops moved driver-side over the
-    * collected bounded sample (round 14) — summation order changed,
-    * so persisted ANN memos built under the distributed trainers
-    * carry (harmlessly but confusingly) different centroid floats;
-    * the bump rebuilds them under the one live trainer.
-    */
-  private[graft] val IndexMemoFormat = "f3"
-
-  /** Garbage-collect STALE siblings of a memo family for `dir` at
-    * install time: every memo of the same family and corpus dir
-    * whose embedded table signature differs from the CURRENT one is
-    * unreachable by construction (the signature is part of every
-    * lookup key) and would otherwise accumulate one index-sized tmp
-    * directory per regenerated corpus state forever (round-10
-    * advice). Memos with the current signature but a different
-    * trailing format tag are likewise dead code's bytes and go too.
-    * Live same-signature memos under OTHER parameters are kept —
-    * concurrent sessions may be mid-read on them; deleting a
-    * CURRENT-signature memo is [[invalidateMemosFor]]'s job only.
-    * Staging dirs (`__tmp_*`) of stale memos match the same prefix
-    * rule and are swept with them.
-    *
-    * Stale candidates are swept TWO-PHASE: the first GC pass that
-    * sees one only drops a zero-byte tombstone marker beside it
-    * (`<memo>__stale_marker`, starting its grace clock); a later
-    * pass deletes the memo once the MARKER is older than
-    * [[MemoGcGraceMs]]. The clock must start at first-SEEN-stale,
-    * not at the memo's install mtime: "unreachable by construction"
-    * holds only for sessions that see the CURRENT corpus state — a
-    * concurrent session that resolved its memo path just before the
-    * corpus was regenerated can still be mid-read on a now-stale
-    * memo (however long ago it was installed), and on HDFS/object
-    * stores a delete fails such a reader mid-stream (round-11
-    * advice; the install-mtime shortcut left any memo older than the
-    * window exposed — round-12 review). A read that began before the
-    * regeneration finishes well inside marker-age + grace; markers
-    * orphaned by [[invalidateMemosFor]] are swept opportunistically.
-    *
-    * The marker CARRIES the live signature it was dropped under, and
-    * the sweep deletes only when that signature still matches the
-    * current live one: a marker left behind by a signature FLIP-FLOP
-    * (memo went stale, corpus returned to its state, then moved on
-    * again — possibly with no GC pass while it was live) is thereby
-    * re-tombstoned instead of trusted, so the grace clock restarts
-    * for the NEW staleness context rather than deleting instantly
-    * under a reader (round-12 review; the residual hole needs two
-    * regenerations inside one grace window with no intervening
-    * same-family install, at which point the race contract's
-    * loser-reads-winner discipline is the backstop). Marker reads
-    * and deletes tolerate concurrent sweeps: a marker that vanishes
-    * between the listing and its read is re-dropped, not crashed on.
-    */
-  /** [[gcStaleMemos]] re-sweep throttle: nanoTime of the last sweep
-    * per (family stem + live signature). Not once-per-JVM: the GC is
-    * TWO-PHASE (tombstone at first sighting, delete a grace period
-    * later — [[MemoGcGraceMs]]), so a long-lived driver must keep
-    * re-sweeping or phase 2 never runs; once per minute preserves
-    * that (the grace is 15 min) at a fraction of the listing cost.
-    */
-  private val gcSweepLast =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Minimum interval between whole-root GC sweeps of one family. */
-  private[graft] val GcResweepNs: Long = 60L * 1000 * 1000 * 1000
-
-  /** Test hook: forget sweep history so a spec can force the next
-    * ensure call to sweep immediately.
-    */
-  private[graft] def gcSweepReset(): Unit = gcSweepLast.clear()
-
-  /** Test hook: age every recorded sweep window by `ns`, so a spec
-    * can simulate a steady ensure cadence crossing [[GcResweepNs]]
-    * without sleeping through it.
-    */
-  private[graft] def gcSweepBackdate(ns: Long): Unit =
-    gcSweepLast.replaceAll((_, v) => java.lang.Long.valueOf(v.longValue() - ns))
-
-  private[graft] def gcStaleMemos(spark: SparkSession, familyPrefix: String,
-      dir: String, table: String): Unit = {
-    val stem = s"$familyPrefix${memoDirKey(dir)}_s"
-    val liveSig = tableSignature(spark, dir, table)
-    val live = stem + liveSig
-    // Throttled to one sweep per family per [[GcResweepNs]]: the
-    // sweep lists the WHOLE memo root, and Hadoop LocalFileSystem
-    // stats every entry (~ms each) — on a root that has accumulated
-    // hundreds of scratch dirs across runs, re-sweeping on every
-    // ensure call was measured to add tens of seconds to a full
-    // bench. Within one JVM the table signature is stable, so the
-    // only thing a repeat sweep adds is phase-2 completion — which a
-    // once-a-minute cadence still delivers well inside the grace.
-    val sweepKey = s"$stem|$liveSig"
-    val now = System.nanoTime()
-    // The window timestamp is recorded ONLY when a sweep actually
-    // proceeds: an unconditional put would slide the window forward
-    // on every throttled call, so a steady ensure cadence below
-    // GcResweepNs would sweep once and then never again — phase-2
-    // tombstone deletion would never complete in a long-lived driver
-    // (round-15 advice, medium). putIfAbsent/replace keep the claim
-    // race-safe: exactly one concurrent caller wins the window.
-    val prev = gcSweepLast.get(sweepKey)
-    if (prev != null && now - prev.longValue() < GcResweepNs) return
-    val claimed =
-      if (prev == null)
-        gcSweepLast.putIfAbsent(sweepKey, java.lang.Long.valueOf(now)) == null
-      else gcSweepLast.replace(sweepKey, prev, java.lang.Long.valueOf(now))
-    if (!claimed) return
-    val tmp = Sinks.indexRoot
-    val fs = Sinks.fsFor(spark, tmp)
-    val root = new org.apache.hadoop.fs.Path(tmp)
-    if (!fs.exists(root)) return
-    // The grace clock compares MARKER mtimes, which the FILESYSTEM
-    // stamped — on HDFS/object stores (the exact concurrent-reader
-    // scenario the grace exists for) the server clock can skew from
-    // this client's, silently shrinking or inflating the window
-    // (round-12 advice). So "now" comes from the same filesystem: a
-    // freshly-created probe file's mtime. Lazy — sweeps that meet no
-    // marker never pay the round-trip.
-    lazy val cutoff: Long = {
-      val probe = new org.apache.hadoop.fs.Path(root,
-        ".graft_gc_clock_probe_" + java.util.UUID.randomUUID().toString)
-      val fsNow = try {
-        fs.create(probe, true).close()
-        fs.getFileStatus(probe).getModificationTime
-      } catch { case _: java.io.IOException => System.currentTimeMillis() }
-      finally { try fs.delete(probe, false) catch { case _: java.io.IOException => } }
-      fsNow - MemoGcGraceMs
-    }
-    // Legacy stem: memos written before memoDirKey widened to 16 hex
-    // (round 12) carry an 8-hex dir hash — unreachable by any current
-    // lookup (the key arithmetic changed), so they'd otherwise sit in
-    // tmp forever. Sweep them through the same two-phase tombstone
-    // path as stale-signature memos. Exactly 8 hex then `_s` cannot
-    // match a current 16-hex name (whose 9th hash char is hex, not
-    // `_`).
-    val legacyRe = (java.util.regex.Pattern.quote(
-      s"$familyPrefix${dir.replaceAll("[^a-zA-Z0-9]", "_")}_h") +
-      "[0-9a-f]{8}_s.*").r.pattern
-    val entries = fs.listStatus(root).filter { st =>
-      val n = st.getPath.getName
-      // `__lease`/`__reclaim_*` files ([[Sinks.withWriterLease]])
-      // share the family stem prefix when the lease guards a memo
-      // staging build, but they are lifecycle state, not memos: a
-      // HELD lease on a stale-signature build would otherwise be
-      // tombstoned and — once the build outlives the grace — deleted,
-      // silently breaking the single-writer guarantee (round-15
-      // advice). Excluded entirely: orphans are reclaimed at the next
-      // acquisition's dead-pid check, and indexRoot's contract
-      // already leaves rare lease debris to the deployment's own
-      // retention sweep.
-      !n.endsWith("__lease") && !n.contains("__reclaim_") &&
-        (n.startsWith(stem) || legacyRe.matcher(n).matches)
-    }
-    val names = entries.map(_.getPath.getName).toSet
-    def dropMarker(marker: org.apache.hadoop.fs.Path): Unit = {
-      val out = fs.create(marker, true)
-      try out.write(liveSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    // (age, tombstoning-context signature) of a marker; None = the
-    // marker vanished under a concurrent sweep — treat as unseen
-    def readMarker(marker: org.apache.hadoop.fs.Path)
-        : Option[(Long, String)] =
-      try {
-        val mtime = fs.getFileStatus(marker).getModificationTime
-        val in = fs.open(marker)
-        val sig = try {
-          val buf = new Array[Byte](64)
-          val k = in.read(buf)
-          if (k <= 0) "" else new String(buf, 0, k,
-            java.nio.charset.StandardCharsets.UTF_8).trim
-        } finally in.close()
-        Some((mtime, sig))
-      } catch { case _: java.io.FileNotFoundException => None }
-    entries.foreach { st =>
-      val n = st.getPath.getName
-      if (n.endsWith(StaleMarkerSuffix)) {
-        // orphan marker: its memo is already gone (invalidateMemosFor
-        // or a prior sweep's partial failure) — nothing to grace
-        if (!names.contains(n.stripSuffix(StaleMarkerSuffix)))
-          fs.delete(st.getPath, false)
-      } else if (!n.startsWith(live) || isStaleFormat(n)) {
-        val marker = new org.apache.hadoop.fs.Path(tmp,
-          n + StaleMarkerSuffix)
-        if (!names.contains(n + StaleMarkerSuffix)) {
-          dropMarker(marker) // first sighting: clock starts
-        } else readMarker(marker) match {
-          case Some((mtime, sig)) if sig == liveSig && mtime < cutoff =>
-            fs.delete(st.getPath, true)
-            fs.delete(marker, false); ()
-          case Some((_, sig)) if sig != liveSig =>
-            // stale-context marker (flip-flop leftover, or a pre-sig
-            // format): restart the grace clock under THIS context
-            dropMarker(marker)
-          case _ => () // mid-grace, or vanished under a peer's sweep
-        }
-      } else if (names.contains(n + StaleMarkerSuffix)) {
-        // a memo that is LIVE again (the corpus signature flip-flopped
-        // back to a prior state) must shed its old tombstone — left in
-        // place, the next genuine staleness would skip its grace and
-        // delete instantly under a reader
-        fs.delete(new org.apache.hadoop.fs.Path(tmp,
-          n + StaleMarkerSuffix), false); ()
-      }
-    }
-  }
-
-  /** Grace window for [[gcStaleMemos]]: a stale-signature memo is
-    * only swept once its tombstone marker (dropped at first sighting)
-    * is this old, so a reader that resolved it against the PREVIOUS
-    * corpus state finishes before the delete lands. Sized generously
-    * above any single memo read.
-    */
-  private[graft] val MemoGcGraceMs: Long = 15 * 60 * 1000L
-
-  /** Tombstone suffix [[gcStaleMemos]] drops beside a stale memo at
-    * first sighting; the marker's mtime is the grace clock.
-    */
-  private[graft] val StaleMarkerSuffix: String = "__stale_marker"
-
-  /** A memo name carries a stale format tag iff it ends (before any
-    * staging suffix) in `_f<digits>` that is not [[IndexMemoFormat]].
-    * Families without format tags (cluster memos) never match.
-    */
-  private def isStaleFormat(name: String): Boolean = {
-    val base = name.replaceFirst("__tmp_.*$", "")
-    val m = "_f([0-9]+)$".r.findFirstIn(base)
-    m.exists(_ != s"_$IndexMemoFormat")
-  }
-
-  /** Memo path of [[q118SimsearchServing]]'s index (the
-    * [[clusterMemoPathOf]] convention for the vector family).
-    */
-  private[graft] def annIndexMemoPathOf(spark: SparkSession, dir: String,
-      nCells: Int, kmeansIters: Int, m: Int, kCodes: Int,
-      pqIters: Int): String =
-    s"${Sinks.indexRoot}/graft_ann_index_memo_" +
-      memoDirKey(dir) + "_s" + tableSignature(spark, dir, "embeddings") +
-      s"_c${nCells}i${kmeansIters}m${m}k${kCodes}p${pqIters}_$IndexMemoFormat"
-
-  /** Memo path of the BATCH-STAMPED ANN ingest — the shared read-only
-    * input q114 (seal) and q120 (retrain) clone before mutating (the
-    * [[annIndexMemoPathOf]] convention, keyed additionally by the
-    * batch split, which changes the stamp layout byte-for-byte).
-    */
-  private[graft] def stampedAnnMemoPathOf(spark: SparkSession, dir: String,
-      nBatches: Int, nCells: Int, kmeansIters: Int, m: Int, kCodes: Int,
-      pqIters: Int): String =
-    s"${Sinks.indexRoot}/graft_ann_stamped_memo_" +
-      memoDirKey(dir) + "_s" + tableSignature(spark, dir, "embeddings") +
-      s"_b${nBatches}_c${nCells}i${kmeansIters}m${m}k${kCodes}p${pqIters}_$IndexMemoFormat"
-
-  /** Corpus-state memo key for `table` under `dir` — [[memoDirKey]] +
-    * the table signature, exposed package-wide so other operator
-    * families (the BM25 stamped-ingest memo in [[graft.ops.Retrieval]])
-    * name their memos through the ONE key definition.
-    */
-  private[graft] def memoKeyFor(spark: SparkSession, dir: String,
-      table: String): String =
-    memoDirKey(dir) + "_s" + tableSignature(spark, dir, table)
-
-  /** Every disk-memo family's path prefix, in one place: a memo
-    * participates in [[invalidateMemosFor]] iff its name starts with
-    * one of these followed by [[memoDirKey]] — forget to list a new
-    * family here and corpus-rewrite invalidation silently skips it.
-    */
-  private val MemoPrefixes = Seq(
-    "graft_cluster_memo_", "graft_ann_index_memo_",
-    "graft_ann_stamped_memo_", "graft_dedup_prefix_memo_",
-    "graft_bm25_stamped_memo_", "graft_bm25_index_memo_",
-    "graft_corpus_prep_memo_")
-
-  /** Retire every persisted memo derived from `dir` — cluster-label
-    * memos, serving indexes and stamped-ingest memos — regardless of
-    * which session wrote them: memo names embed [[memoDirKey]]
-    * (sanitized dir + a hash of the raw dir), so a caller that
-    * rewrites a corpus IN PLACE (ScaleProbe's replica rebuild is the
-    * canonical case) can invalidate by name without having created
-    * the memos itself, and the hash guarantees only `dir`'s own memos
-    * match. In-JVM trainer fits are dropped ONLY for this dir (the
-    * (dir, …)-keyed fit caches are filtered, not cleared — unrelated
+  /** Retire every persisted memo derived from `dir` — every memo
+    * family, whichever session wrote it ([[Memo.retire]] matches the
+    * name shape, so a caller that rewrites a corpus IN PLACE, such as
+    * ScaleProbe's replica rebuild, invalidates by name without having
+    * created the memos) — and this dir's in-JVM trainer fits (the
+    * (dir, …)-keyed fit caches are filtered, not cleared: unrelated
     * corpora keep their fits and memos).
     */
   def invalidateMemosFor(spark: SparkSession, dir: String): Unit = {
-    val key = memoDirKey(dir)
-    val tmp = Sinks.indexRoot
-    val fs = Sinks.fsFor(spark, tmp)
-    val root = new org.apache.hadoop.fs.Path(tmp)
-    if (fs.exists(root)) {
-      fs.listStatus(root).map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          MemoPrefixes.exists(pre => n.startsWith(s"$pre${key}_"))
-        }
-        .foreach(fs.delete(_, true))
-    }
-    // targeted in-JVM retirement: only this dir's entries
+    Memo.retire(spark, dir)
     centroidCache.keySet.removeIf(_._1 == dir)
     pqCbCache.keySet.removeIf(_._1 == dir)
     ngramLmCache.keySet.removeIf(_._1 == dir)
@@ -2924,17 +2539,11 @@ object LlmOps {
       // bytes a fresh ingest would have produced (deterministic
       // trainers, deterministic assignment), while the bench line
       // times the lifecycle step itself.
-      val memo = stampedAnnMemoPathOf(spark, dir, nBatches, nCells,
-        kmeansIters, m, kCodes, pqIters)
-      val memoRoot = new org.apache.hadoop.fs.Path(memo)
-      if (!fs.exists(memoRoot)) {
-        val staging = new org.apache.hadoop.fs.Path(
-          memo + "__tmp_" + spark.sparkContext.applicationId)
-        fs.delete(staging, true)
-        ingestInto(staging.toString)
-        Sinks.installMemo(fs, staging, memoRoot)
-        gcStaleMemos(spark, "graft_ann_stamped_memo_", dir, "embeddings")
-      } else Sinks.repairNestedStaging(fs, memoRoot)
+      // (keyed additionally by the batch split, which changes the
+      // stamp layout byte-for-byte)
+      val memo = Memo.ensure(spark, Memo.AnnStamped, dir,
+        s"_b${nBatches}_c${nCells}i${kmeansIters}m${m}k${kCodes}p${pqIters}")(
+        staging => ingestInto(staging.toString))
       Sinks.copyDir(fs, memo, indexPath,
         spark.sparkContext.hadoopConfiguration)
     }
@@ -3392,35 +3001,24 @@ object LlmOps {
 
   /** Ensure the FULL-ingest LSH index memo for `dir` (index state +
     * admitted rows after ALL `nBatches` stamped batches — the
-    * [[dedupPrefixMemoPathOf]] family at prefix = nBatches; its build
+    * [[Memo.DedupPrefix]] family at prefix = nBatches; its build
     * path is exactly the loop q87's oracle gates fresh): q131 clones
     * it per run and pays only the declared delete lifecycle.
     */
   private def ensureDedupFullMemo(spark: SparkSession, dir: String,
-      nBatches: Int, threshold: Double): String = {
-    val memo = dedupPrefixMemoPathOf(spark, dir, nBatches, nBatches, threshold)
-    val fs = Sinks.fsFor(spark, memo)
-    val memoRoot = new org.apache.hadoop.fs.Path(memo)
-    if (!fs.exists(memoRoot)) {
+      nBatches: Int, threshold: Double): String =
+    Memo.ensure(spark, Memo.DedupPrefix, dir,
+        dedupMemoParams(nBatches, nBatches, threshold)) { staging =>
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val maxId = docMaxId(docs)
-      val bSize = math.max(1L, maxId / nBatches + 1)
-      val staging = new org.apache.hadoop.fs.Path(
-        memo + "__tmp_" + spark.sparkContext.applicationId)
-      fs.delete(staging, true)
-      val admitted = (0 until nBatches).map { b =>
+      val bSize = math.max(1L, docMaxId(docs) / nBatches + 1)
+      (0 until nBatches).map { b =>
         dedupIngestBatch(spark,
           docs.filter(expr(s"doc_id DIV $bSize") === b),
           s"$staging/index", b.toLong, threshold)
           .select(col("doc_id"), lit(b.toLong).as("batch_id"))
-      }
-      admitted.reduce(_.unionByName(_)).coalesce(1)
+      }.reduce(_.unionByName(_)).coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/admitted")
-      Sinks.installMemo(fs, staging, memoRoot)
-      gcStaleMemos(spark, "graft_dedup_prefix_memo_", dir, "documents")
-    } else Sinks.repairNestedStaging(fs, memoRoot)
-    memo
-  }
+    }
 
   /** #131 Deletion through the persisted LSH dedup index — the q129
     * retention/takedown lifecycle for the dedup family (reference
@@ -3493,31 +3091,17 @@ object LlmOps {
     } finally fs.delete(root, true)
   }
 
-  /** Memo path of the q132 full paragraph-index ingest (the
-    * [[dedupPrefixMemoPathOf]] convention for the paragraph family).
-    */
-  private[graft] def paraFullMemoPathOf(spark: SparkSession, dir: String,
-      nBatches: Int, paraTokens: Int): String =
-    s"${Sinks.indexRoot}/graft_para_full_memo_" +
-      memoDirKey(dir) + "_s" + tableSignature(spark, dir, "documents") +
-      s"_b${nBatches}_w${paraTokens}_$IndexMemoFormat"
-
-  /** Ensure the full-ingest paragraph index memo for `dir` — the
-    * build path is exactly q94's oracle-gated loop; its cleaned
-    * outputs are q94's gate, only the index state is memoized here.
+  /** Ensure the full-ingest paragraph index memo for `dir`
+    * ([[Memo.ParaFull]]) — the build path is exactly q94's
+    * oracle-gated loop; its cleaned outputs are q94's gate, only the
+    * index state is memoized here.
     */
   private def ensureParaFullMemo(spark: SparkSession, dir: String,
-      nBatches: Int, paraTokens: Int): String = {
-    val memo = paraFullMemoPathOf(spark, dir, nBatches, paraTokens)
-    val fs = Sinks.fsFor(spark, memo)
-    val memoRoot = new org.apache.hadoop.fs.Path(memo)
-    if (!fs.exists(memoRoot)) {
+      nBatches: Int, paraTokens: Int): String =
+    Memo.ensure(spark, Memo.ParaFull, dir,
+        s"_b${nBatches}_w${paraTokens}") { staging =>
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val maxId = docMaxId(docs)
-      val bSize = math.max(1L, maxId / nBatches + 1)
-      val staging = new org.apache.hadoop.fs.Path(
-        memo + "__tmp_" + spark.sparkContext.applicationId)
-      fs.delete(staging, true)
+      val bSize = math.max(1L, docMaxId(docs) / nBatches + 1)
       (0 until nBatches).foreach { b =>
         // the index append inside is the eager action; the returned
         // cleaned frame is q94's declared output, not needed here
@@ -3525,11 +3109,7 @@ object LlmOps {
           docs.filter(expr(s"doc_id DIV $bSize") === b),
           s"$staging/index", b.toLong, paraTokens)
       }
-      Sinks.installMemo(fs, staging, memoRoot)
-      gcStaleMemos(spark, "graft_para_full_memo_", dir, "documents")
-    } else Sinks.repairNestedStaging(fs, memoRoot)
-    memo
-  }
+    }
 
   /** #132 Deletion through the persisted paragraph-dedup index — the
     * [[q131DedupIndexDelete]] lifecycle at paragraph granularity: a
@@ -3937,37 +3517,28 @@ object LlmOps {
     }
 
   /** Ensure the parameter-keyed PERSISTED flat serving index for
-    * `dir` exists ([[annIndexMemoPathOf]], staged build + race-
-    * tolerant install — the q61 memo discipline) and return its path;
-    * None for an empty corpus. ONE definition serves q118's pruned
-    * probe and the q115 hybrid dense leg, so neither re-pays the
-    * index build the other already installed.
+    * `dir` exists ([[Memo.AnnIndex]] through [[Memo.ensure]]) and
+    * return its path; None for an empty corpus. ONE definition serves
+    * q118's pruned probe and the q115 hybrid dense leg, so neither
+    * re-pays the index build the other already installed.
     */
   private[graft] def ensureServingIndexMemo(spark: SparkSession,
       dir: String, nCells: Int = 16, kmeansIters: Int = 3, m: Int = 8,
-      kCodes: Int = 16, pqIters: Int = 2): Option[String] = {
-    val memoIdx = annIndexMemoPathOf(spark, dir, nCells, kmeansIters,
-      m, kCodes, pqIters)
-    val fs = Sinks.fsFor(spark, memoIdx)
-    val root = new org.apache.hadoop.fs.Path(memoIdx)
-    if (!fs.exists(root)) {
+      kCodes: Int = 16, pqIters: Int = 2): Option[String] =
+    Some(Memo.ensure(spark, Memo.AnnIndex, dir,
+        s"_c${nCells}i${kmeansIters}m${m}k${kCodes}p${pqIters}") { staging =>
       val emb = Tables.embeddings(spark, dir)
         .withColumn("nsq", dotProduct(col("embedding"), col("embedding")))
         .localCheckpoint()
+      // empty corpus: return from ensureServingIndexMemo itself, so
+      // nothing is installed and only the cold path pays the check
       if (emb.isEmpty) return None
       val (cents, cbPre) = cachedIndexFits(dir, emb, nCells, kmeansIters,
         m, kCodes, pqIters)
-      val staging = new org.apache.hadoop.fs.Path(
-        memoIdx + "__tmp_" + spark.sparkContext.applicationId)
       annIndexWrite(spark, emb.drop("nsq"), staging.toString, nCells,
         kmeansIters, m = m, kCodes = kCodes, pqIters = pqIters,
         centsPre = Some(cents), cbPre = cbPre)
-      // race-tolerant install (see Sinks.installMemo)
-      Sinks.installMemo(fs, staging, root)
-      gcStaleMemos(spark, "graft_ann_index_memo_", dir, "embeddings")
-    } else Sinks.repairNestedStaging(fs, root)
-    Some(memoIdx)
-  }
+    })
 
   // -- text analysis ------------------------------------------------
 
@@ -4832,10 +4403,8 @@ object LlmOps {
     */
   def q61DedupClustersCached(spark: SparkSession, dir: String,
       threshold: Double = 0.5, maxDocs: Long = 5000): DataFrame = {
-    val memoPath = clusterMemoPathOf(spark, dir, threshold, maxDocs)
-    val fs = Sinks.fsFor(spark, memoPath)
-    val dst = new org.apache.hadoop.fs.Path(memoPath)
-    if (!fs.exists(dst)) {
+    val memo = Memo.ensure(spark, Memo.Cluster, dir,
+        clusterMemoParams(threshold, maxDocs)) { staging =>
       val labels = q61DedupClusters(spark, dir, threshold, maxDocs)
         .select("doc_id", "cluster_id")
         .localCheckpoint() // count + write must see the same rows
@@ -4845,17 +4414,17 @@ object LlmOps {
           s"q61DedupClustersCached: $cnt labels exceed the declared bound " +
             s"$maxDocs — the memo tier assumes bounded cluster maps; raise " +
             "maxDocs deliberately or skip the cache")
-      val staging = new org.apache.hadoop.fs.Path(
-        memoPath + "__tmp_" + spark.sparkContext.applicationId)
       labels.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      // race-tolerant install (losers read the winner's identical
-      // memo; the local-FS rename-onto-existing copy fallback is
-      // repaired inside — see Sinks.installMemo)
-      Sinks.installMemo(fs, staging, dst)
-      gcStaleMemos(spark, "graft_cluster_memo_", dir, "documents")
-    } else Sinks.repairNestedStaging(fs, dst)
-    spark.read.parquet(memoPath)
+    }
+    spark.read.parquet(memo)
   }
+
+  /** [[Memo.Cluster]] params of [[q61DedupClustersCached]]'s labels;
+    * q125's para-cleaned labels extend them with their `_cp` tag.
+    */
+  private[graft] def clusterMemoParams(threshold: Double,
+      maxDocs: Long): String =
+    s"_t${(threshold * 1e6).round}_d$maxDocs"
 
   /** #99 Declared resolution query — [[dedupResolve]] over q61's
     * EXACT n-gram-Jaccard clusters (round-8 change; previously rode

@@ -1009,18 +1009,8 @@ object Retrieval {
       // query's bench line times its own declared lifecycle step (the
       // seal), not a re-payment of q109's ingest (the
       // LlmOps.simsearchIngestProbe memo-clone pattern).
-      val memo = s"${Sinks.indexRoot}/graft_bm25_stamped_memo_" +
-        LlmOps.memoKeyFor(spark, dir, "documents") +
-        s"_b${nBatches}_${LlmOps.IndexMemoFormat}"
-      val memoRoot = new org.apache.hadoop.fs.Path(memo)
-      if (!fs.exists(memoRoot)) {
-        val staging = new org.apache.hadoop.fs.Path(
-          memo + "__tmp_" + spark.sparkContext.applicationId)
-        fs.delete(staging, true)
-        ingestInto(staging.toString)
-        Sinks.installMemo(fs, staging, memoRoot)
-        LlmOps.gcStaleMemos(spark, "graft_bm25_stamped_memo_", dir, "documents")
-      } else Sinks.repairNestedStaging(fs, memoRoot)
+      val memo = Memo.ensure(spark, Memo.Bm25Stamped, dir,
+        s"_b$nBatches")(staging => ingestInto(staging.toString))
       Sinks.copyDir(fs, memo, indexPath,
         spark.sparkContext.hadoopConfiguration)
     }
@@ -1221,8 +1211,7 @@ object Retrieval {
   }
 
   /** Ensure the PERSISTED flat inverted-index memo for `dir` exists
-    * ([[invIndexWrite]] layout at a parameter-keyed path, staged
-    * build + race-tolerant install — the
+    * ([[invIndexWrite]] layout as a [[Memo.Bm25Index]] memo, the
     * LlmOps.ensureServingIndexMemo discipline applied to the lexical
     * family) and return its path. Serves [[q108HybridRrfIndexed]]'s
     * lexical leg, which must not re-pay a per-run index build the
@@ -1230,22 +1219,10 @@ object Retrieval {
     * q106 (fresh per run, shares q104's oracle).
     */
   private[graft] def ensureInvIndexMemo(spark: SparkSession, dir: String,
-      nBuckets: Int = 64): String = {
-    val memo = s"${Sinks.indexRoot}/graft_bm25_index_memo_" +
-      LlmOps.memoKeyFor(spark, dir, "documents") +
-      s"_n${nBuckets}_${LlmOps.IndexMemoFormat}"
-    val fs = Sinks.fsFor(spark, memo)
-    val root = new org.apache.hadoop.fs.Path(memo)
-    if (!fs.exists(root)) {
-      val staging = new org.apache.hadoop.fs.Path(
-        memo + "__tmp_" + spark.sparkContext.applicationId)
-      fs.delete(staging, true)
+      nBuckets: Int = 64): String =
+    Memo.ensure(spark, Memo.Bm25Index, dir, s"_n$nBuckets") { staging =>
       invIndexWrite(tokenizedDocs(spark, dir), staging.toString, nBuckets)
-      Sinks.installMemo(fs, staging, root)
-      LlmOps.gcStaleMemos(spark, "graft_bm25_index_memo_", dir, "documents")
-    } else Sinks.repairNestedStaging(fs, root)
-    memo
-  }
+    }
 
   /** #115 (declared since round 9) — [[q108HybridRrf]] with BOTH legs
     * served from PERSISTED indexes: the dense leg from the PQ-coded

@@ -461,34 +461,6 @@ object Sinks {
     fs.delete(tmp, true)
   }
 
-  /** Install a staged memo directory at its final path, tolerating a
-    * cross-session race: only the first installer's rename lands; a
-    * loser deletes its staging. The subtlety this helper exists for:
-    * on the LOCAL filesystem, Hadoop's rename onto an EXISTING
-    * non-empty directory falls back to copy-then-delete INTO the
-    * destination (returning true!), which would nest the loser's
-    * staging dir inside the winner's memo and corrupt every
-    * subsequent parquet read at two directory depths. We pre-check
-    * existence AND repair the nested-copy case after the fact, so the
-    * installed memo is clean whichever interleaving happened.
-    */
-  private[graft] def installMemo(fs: org.apache.hadoop.fs.FileSystem,
-      staging: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Unit = {
-    if (fs.exists(dst) || !fs.rename(staging, dst))
-      fs.delete(staging, true)
-    val nested = new org.apache.hadoop.fs.Path(dst, staging.getName)
-    if (fs.exists(nested)) fs.delete(nested, true)
-    // a GENUINE failure — rename refused and no concurrent winner
-    // installed either — must throw, not fall through: the caller
-    // would otherwise read a nonexistent memo, and probe paths with
-    // missing-directory tolerance (annIncremental) would degrade to
-    // an EMPTY answer with no error signal
-    if (!fs.exists(dst))
-      throw new java.io.IOException(
-        s"installMemo: could not install $dst (rename failed, no concurrent winner)")
-  }
-
   /** Future on the global pool with a `blocking` marker — every
     * concurrent driver-thread job chain in this library BLOCKS on a
     * Spark action, and the fixed-size global fork-join pool must be
@@ -1088,22 +1060,6 @@ object Sinks {
         f, scala.concurrent.duration.Duration.Inf).value.get)
       done.foreach { case scala.util.Failure(e) => throw e; case _ => () }
     } finally pool.shutdown()
-  }
-
-  /** Read-side companion of [[installMemo]]: drop any `__tmp_`-named
-    * child nested inside an installed memo. The in-install repair
-    * only runs when installMemo is CALLED — a racing session killed
-    * mid-copy-fallback leaves partial nested staging that every later
-    * consumer (which sees the memo exists and skips the build branch)
-    * would otherwise read as garbage rows forever. One listStatus;
-    * call before reading a memo that already exists.
-    */
-  private[graft] def repairNestedStaging(fs: org.apache.hadoop.fs.FileSystem,
-      dst: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(dst)) return
-    fs.listStatus(dst).map(_.getPath)
-      .filter(_.getName.contains("__tmp_"))
-      .foreach(fs.delete(_, true))
   }
 
   /** Root-relative path → CONTENT signature (file count, total bytes,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.LlmOps
+import graft.ops.{LlmOps, Memo}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -655,7 +655,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // the memo index is ON DISK at its parameter-keyed path, and a
     // second call returns identical rows without rebuilding (same
     // persisted quantizers + codes)
-    val memo = graft.ops.LlmOps.annIndexMemoPathOf(spark, sf, 16, 3, 8, 16, 2)
+    val memo = Memo.pathOf(spark, Memo.AnnIndex, sf, "_c16i3m8k16p2")
     assert(new java.io.File(s"$memo/centroids").isDirectory)
     assert(LlmOps.q118SimsearchServing(spark, sf).collect().map(_.toString).toSeq ===
       got.collect().map(_.toString).toSeq)
@@ -706,7 +706,8 @@ class LlmOpsSpec extends AnyFunSuite {
     // a threshold no other test/declared query uses, so this test
     // owns its memo path end-to-end
     val t = 0.51
-    val memo = graft.ops.LlmOps.clusterMemoPathOf(spark, sf, t, 5000)
+    val memo = Memo.pathOf(spark, Memo.Cluster, sf,
+      LlmOps.clusterMemoParams(t, 5000))
     def rmMemo(): Unit = {
       val d = new java.io.File(memo)
       Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
@@ -816,8 +817,10 @@ class LlmOpsSpec extends AnyFunSuite {
     // dirA: a self-cancelling PAIR of identical triples; dirB: none
     val a = mk("a", Seq("p=1", "p=2"))
     val b = mk("b", Seq())
-    val pathA = graft.ops.LlmOps.clusterMemoPathOf(spark, a, 0.5, 5000)
-    val pathB = graft.ops.LlmOps.clusterMemoPathOf(spark, b, 0.5, 5000)
+    val pathA = Memo.pathOf(spark, Memo.Cluster, a,
+      LlmOps.clusterMemoParams(0.5, 5000))
+    val pathB = Memo.pathOf(spark, Memo.Cluster, b,
+      LlmOps.clusterMemoParams(0.5, 5000))
     // strip the dir-key component (differs trivially); compare the
     // signature segment, which under XOR read identically ("both
     // empty") for these two states
@@ -826,21 +829,43 @@ class LlmOpsSpec extends AnyFunSuite {
       s"duplicate-pair state signed as empty: $pathA vs $pathB")
     // and one MORE copy of the same triple must change it again
     val c = mk("c", Seq("p=1", "p=2", "p=3"))
-    val pathC = graft.ops.LlmOps.clusterMemoPathOf(spark, c, 0.5, 5000)
+    val pathC = Memo.pathOf(spark, Memo.Cluster, c,
+      LlmOps.clusterMemoParams(0.5, 5000))
     assert(sig(pathC) !== sig(pathA))
     assert(sig(pathC) !== sig(pathB))
   }
 
   test("invalidateMemosFor retires a corpus dir's persisted memos by name") {
     val t = 0.52 // this test's own memo key
-    val memo = graft.ops.LlmOps.clusterMemoPathOf(spark, sf, t, 5000)
-    LlmOps.gcSweepReset() // each trigger below must sweep NOW, not throttle
+    val memo = Memo.pathOf(spark, Memo.Cluster, sf,
+      LlmOps.clusterMemoParams(t, 5000))
+    Memo.gcSweepReset() // each trigger below must sweep NOW, not throttle
     LlmOps.q61DedupClustersCached(spark, sf, t).collect()
     assert(new java.io.File(memo).isDirectory)
     // the cross-session form: retire by corpus dir, not by JVM-local
     // path registry (an in-place corpus rewrite is the use case)
     LlmOps.invalidateMemosFor(spark, sf)
     assert(!new java.io.File(memo).exists)
+    // every family, by name shape: fabricated memos (with a staging
+    // dir and a tombstone each) of a corpus dir go, and those of a
+    // sibling dir that sanitizes to the SAME name survive
+    val scratch = java.nio.file.Files.createTempDirectory("graft_inval_fam")
+    val dir = s"$scratch/corp-a"
+    val sibling = s"$scratch/corp_a"
+    def fabricated(d: String): Seq[(String, java.io.File)] =
+      Memo.Families.flatMap { f =>
+        val p = Memo.pathOf(spark, f, d, "_inval")
+        Seq(p, p + "__tmp_app_1", p + Memo.StaleMarkerSuffix)
+          .map { n => val file = new java.io.File(n); file.mkdirs(); f.name -> file }
+      }
+    val mine = fabricated(dir)
+    val theirs = fabricated(sibling)
+    LlmOps.invalidateMemosFor(spark, dir)
+    val kept = mine.filter(_._2.exists).map(_._1).distinct
+    assert(kept.isEmpty, s"families not retired: ${kept.mkString(", ")}")
+    val lost = theirs.filterNot(_._2.exists).map(_._1).distinct
+    assert(lost.isEmpty, s"sibling dir's memos retired: ${lost.mkString(", ")}")
+    LlmOps.invalidateMemosFor(spark, sibling)
     // in-JVM trainer fits of the dir go too, Bpe's merge tables
     // included — on a scratch copy, so other suites' fits stay warm
     val copy = java.nio.file.Files.createTempDirectory("graft_inval")
@@ -1583,7 +1608,8 @@ class LlmOpsSpec extends AnyFunSuite {
     // a same-signature sibling under OTHER params (must survive —
     // concurrent sessions may be mid-read on it)
     val t = 0.53 // this test's own memo key
-    val live = graft.ops.LlmOps.clusterMemoPathOf(spark, sf, t, 5000)
+    val live = Memo.pathOf(spark, Memo.Cluster, sf,
+      LlmOps.clusterMemoParams(t, 5000))
     val liveName = new java.io.File(live).getName
     val sigStart = liveName.lastIndexOf("_s") + 2
     val sigEnd = liveName.indexOf('_', sigStart)
@@ -1598,8 +1624,8 @@ class LlmOpsSpec extends AnyFunSuite {
     // including the live memo (File.delete() below is a no-op on a
     // non-empty dir) and hidden checksum sidecars.
     def scrub(name: String): Unit = Seq(
-      name, name + LlmOps.StaleMarkerSuffix,
-      "." + name + LlmOps.StaleMarkerSuffix + ".crc").foreach { n =>
+      name, name + Memo.StaleMarkerSuffix,
+      "." + name + Memo.StaleMarkerSuffix + ".crc").foreach { n =>
       val f = new java.io.File(tmp, n)
       if (f.isDirectory) f.listFiles().foreach(_.delete())
       f.delete()
@@ -1609,7 +1635,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val stale = mkdir(staleName)
     val keepOther = mkdir(otherParams)
     val staleStaging = mkdir(staleName + "__tmp_app_123")
-    LlmOps.gcSweepReset() // each trigger below must sweep NOW, not throttle
+    Memo.gcSweepReset() // each trigger below must sweep NOW, not throttle
     LlmOps.q61DedupClustersCached(spark, sf, t).collect()
     assert(new java.io.File(live).isDirectory)
     // TWO-PHASE sweep: the first GC pass only drops a tombstone
@@ -1618,17 +1644,17 @@ class LlmOpsSpec extends AnyFunSuite {
     // — however old the memo — is never deleted mid-read); the memo
     // itself must survive pass 1
     def markerOf(d: java.io.File) =
-      new java.io.File(tmp, d.getName + LlmOps.StaleMarkerSuffix)
+      new java.io.File(tmp, d.getName + Memo.StaleMarkerSuffix)
     assert(stale.isDirectory, "stale sibling swept before its grace")
     assert(staleStaging.isDirectory, "stale staging swept before its grace")
     assert(markerOf(stale).exists, "no tombstone from GC pass 1")
     assert(markerOf(staleStaging).exists, "no staging tombstone")
     // age the MARKERS past the window; a second pass sweeps both
-    val aged = System.currentTimeMillis() - LlmOps.MemoGcGraceMs - 60000L
+    val aged = System.currentTimeMillis() - Memo.MemoGcGraceMs - 60000L
     markerOf(stale).setLastModified(aged)
     markerOf(staleStaging).setLastModified(aged)
-    LlmOps.gcSweepReset()
-    LlmOps.gcStaleMemos(spark, "graft_cluster_memo_", sf, "documents")
+    Memo.gcSweepReset()
+    Memo.gcStaleMemos(spark, Memo.Cluster, sf)
     assert(!stale.exists, "stale-signature sibling survived aged GC")
     assert(!staleStaging.exists, "stale staging dir survived aged GC")
     assert(!markerOf(stale).exists, "tombstone not cleaned with its memo")
@@ -1643,8 +1669,8 @@ class LlmOpsSpec extends AnyFunSuite {
     val leftover = markerOf(keepOther)
     leftover.createNewFile()
     leftover.setLastModified(aged)
-    LlmOps.gcSweepReset()
-    LlmOps.gcStaleMemos(spark, "graft_cluster_memo_", sf, "documents")
+    Memo.gcSweepReset()
+    Memo.gcStaleMemos(spark, Memo.Cluster, sf)
     assert(keepOther.isDirectory, "live memo deleted via leftover marker")
     assert(!leftover.exists, "live memo kept its stale tombstone")
     keepOther.delete()
@@ -1656,8 +1682,8 @@ class LlmOpsSpec extends AnyFunSuite {
     val m2 = markerOf(stale2)
     java.nio.file.Files.writeString(m2.toPath, "not_the_live_signature")
     m2.setLastModified(aged)
-    LlmOps.gcSweepReset()
-    LlmOps.gcStaleMemos(spark, "graft_cluster_memo_", sf, "documents")
+    Memo.gcSweepReset()
+    Memo.gcStaleMemos(spark, Memo.Cluster, sf)
     assert(stale2.isDirectory,
       "stale memo deleted on a wrong-context (flip-flop) marker")
     assert(m2.exists && m2.lastModified > aged,
@@ -1665,25 +1691,22 @@ class LlmOpsSpec extends AnyFunSuite {
     stale2.delete(); m2.delete()
     // format-tagged families: a sibling with the CURRENT signature
     // but a stale _f<N> tag is dead code's bytes and goes too
-    val annLive = graft.ops.LlmOps.annIndexMemoPathOf(spark, sf,
-      16, 3, 8, 16, 2)
+    val annLive = Memo.pathOf(spark, Memo.AnnIndex, sf, "_c16i3m8k16p2")
     val annName = new java.io.File(annLive).getName
-    assert(annName.endsWith("_" + graft.ops.LlmOps.IndexMemoFormat))
-    scrub(annName.stripSuffix(graft.ops.LlmOps.IndexMemoFormat) + "f0")
+    assert(annName.endsWith("_" + Memo.IndexMemoFormat))
+    scrub(annName.stripSuffix(Memo.IndexMemoFormat) + "f0")
     val oldFormat = mkdir(annName.stripSuffix(
-      graft.ops.LlmOps.IndexMemoFormat) + "f0")
-    LlmOps.gcSweepReset()
-    graft.ops.LlmOps.gcStaleMemos(spark, "graft_ann_index_memo_", sf,
-      "embeddings") // pass 1: tombstone only
+      Memo.IndexMemoFormat) + "f0")
+    Memo.gcSweepReset()
+    Memo.gcStaleMemos(spark, Memo.AnnIndex, sf) // pass 1: tombstone only
     assert(oldFormat.isDirectory, "format sibling swept before grace")
     val fmtMarker = new java.io.File(tmp,
-      oldFormat.getName + LlmOps.StaleMarkerSuffix)
+      oldFormat.getName + Memo.StaleMarkerSuffix)
     assert(fmtMarker.exists, "no tombstone for stale-format sibling")
     fmtMarker.setLastModified(
-      System.currentTimeMillis() - LlmOps.MemoGcGraceMs - 60000L)
-    LlmOps.gcSweepReset()
-    graft.ops.LlmOps.gcStaleMemos(spark, "graft_ann_index_memo_", sf,
-      "embeddings")
+      System.currentTimeMillis() - Memo.MemoGcGraceMs - 60000L)
+    Memo.gcSweepReset()
+    Memo.gcStaleMemos(spark, Memo.AnnIndex, sf)
     assert(!oldFormat.exists, "stale-format sibling survived aged GC")
     assert(!fmtMarker.exists, "format tombstone not cleaned")
   }
@@ -1698,15 +1721,16 @@ class LlmOpsSpec extends AnyFunSuite {
     // the anchor a FULL window old and sweep.
     val tmp = System.getProperty("java.io.tmpdir")
     val t = 0.59 // this test's own memo key
-    val live = graft.ops.LlmOps.clusterMemoPathOf(spark, sf, t, 5100)
+    val live = Memo.pathOf(spark, Memo.Cluster, sf,
+      LlmOps.clusterMemoParams(t, 5100))
     val liveName = new java.io.File(live).getName
     val sigStart = liveName.lastIndexOf("_s") + 2
     val sigEnd = liveName.indexOf('_', sigStart)
     val staleName = liveName.substring(0, sigStart) + "feedc0defeedc0de" +
       liveName.substring(sigEnd)
     def scrub(name: String): Unit = Seq(
-      name, name + LlmOps.StaleMarkerSuffix,
-      "." + name + LlmOps.StaleMarkerSuffix + ".crc").foreach { n =>
+      name, name + Memo.StaleMarkerSuffix,
+      "." + name + Memo.StaleMarkerSuffix + ".crc").foreach { n =>
       val f = new java.io.File(tmp, n)
       if (f.isDirectory) f.listFiles().foreach(_.delete())
       f.delete()
@@ -1714,22 +1738,22 @@ class LlmOpsSpec extends AnyFunSuite {
     scrub(staleName)
     val stale = new java.io.File(tmp, staleName)
     stale.mkdirs()
-    val marker = new java.io.File(tmp, staleName + LlmOps.StaleMarkerSuffix)
-    LlmOps.gcSweepReset()
-    LlmOps.gcStaleMemos(spark, "graft_cluster_memo_", sf, "documents")
+    val marker = new java.io.File(tmp, staleName + Memo.StaleMarkerSuffix)
+    Memo.gcSweepReset()
+    Memo.gcStaleMemos(spark, Memo.Cluster, sf)
     assert(marker.exists, "pass 1 dropped no tombstone")
     // age the tombstone past grace; from here only the THROTTLE
     // stands between the memo and deletion
     marker.setLastModified(
-      System.currentTimeMillis() - LlmOps.MemoGcGraceMs - 60000L)
+      System.currentTimeMillis() - Memo.MemoGcGraceMs - 60000L)
     // steady cadence at half the window: two throttled-call rounds
     // span one full window, so the SECOND call must sweep (under the
     // sliding-window bug it never would, at ANY number of rounds)
-    LlmOps.gcSweepBackdate(LlmOps.GcResweepNs / 2)
-    LlmOps.gcStaleMemos(spark, "graft_cluster_memo_", sf, "documents")
+    Memo.gcSweepBackdate(Memo.GcResweepNs / 2)
+    Memo.gcStaleMemos(spark, Memo.Cluster, sf)
     assert(stale.exists, "mid-window call swept (throttle broken)")
-    LlmOps.gcSweepBackdate(LlmOps.GcResweepNs / 2)
-    LlmOps.gcStaleMemos(spark, "graft_cluster_memo_", sf, "documents")
+    Memo.gcSweepBackdate(Memo.GcResweepNs / 2)
+    Memo.gcStaleMemos(spark, Memo.Cluster, sf)
     assert(!stale.exists,
       "steady sub-window cadence starved the sweep: the throttle " +
         "window slid instead of staying anchored")
@@ -1742,7 +1766,8 @@ class LlmOpsSpec extends AnyFunSuite {
     // after grace silently breaks the single-writer guarantee
     val tmp = System.getProperty("java.io.tmpdir")
     val t = 0.61
-    val live = graft.ops.LlmOps.clusterMemoPathOf(spark, sf, t, 5200)
+    val live = Memo.pathOf(spark, Memo.Cluster, sf,
+      LlmOps.clusterMemoParams(t, 5200))
     val liveName = new java.io.File(live).getName
     val sigStart = liveName.lastIndexOf("_s") + 2
     val sigEnd = liveName.indexOf('_', sigStart)
@@ -1752,23 +1777,23 @@ class LlmOpsSpec extends AnyFunSuite {
     val reclaim = new java.io.File(tmp,
       staleStem + "__lease.__reclaim_1_2_3")
     Seq(lease, reclaim).foreach { f =>
-      new java.io.File(tmp, f.getName + LlmOps.StaleMarkerSuffix).delete()
+      new java.io.File(tmp, f.getName + Memo.StaleMarkerSuffix).delete()
       f.delete()
     }
     java.nio.file.Files.writeString(lease.toPath, "op=test pid=1 host=x")
     java.nio.file.Files.writeString(reclaim.toPath, "op=test pid=1 host=x")
-    val aged = System.currentTimeMillis() - LlmOps.MemoGcGraceMs - 60000L
+    val aged = System.currentTimeMillis() - Memo.MemoGcGraceMs - 60000L
     lease.setLastModified(aged); reclaim.setLastModified(aged)
     // two aged passes: enough to tombstone AND delete any entry the
     // sweep classifies as stale
     (1 to 2).foreach { _ =>
-      LlmOps.gcSweepReset()
-      LlmOps.gcStaleMemos(spark, "graft_cluster_memo_", sf, "documents")
+      Memo.gcSweepReset()
+      Memo.gcStaleMemos(spark, Memo.Cluster, sf)
     }
     assert(lease.exists, "sweep deleted a held writer lease")
     assert(reclaim.exists, "sweep deleted a reclaim claim file")
     assert(!new java.io.File(tmp,
-      lease.getName + LlmOps.StaleMarkerSuffix).exists,
+      lease.getName + Memo.StaleMarkerSuffix).exists,
       "sweep tombstoned a writer lease")
     lease.delete(); reclaim.delete()
   }

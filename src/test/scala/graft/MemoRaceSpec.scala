@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Two REAL JVMs race [[ops.Sinks.installMemo]] on one memoRoot —
+/** Two REAL JVMs race [[ops.Memo.install]] on one memoRoot —
   * the cross-session scenario the race-loser contract exists for
   * (every in-JVM spec can only interleave threads over one
   * FileSystem object; the production hazard is two Spark SESSIONS).

@@ -3,7 +3,7 @@ package graft
 /** Standalone JVM worker for the CROSS-PROCESS memo-install race
   * spec (MemoRaceSpec): two of these processes are launched against
   * ONE memoRoot, synchronize on a barrier file, and race
-  * [[ops.Sinks.installMemo]] — the scenario the race-loser contract
+  * [[ops.Memo.install]] — the scenario the race-loser contract
   * exists for, which an in-JVM spec can only approximate. No
   * SparkSession: installMemo operates on a Hadoop FileSystem and the
   * staged content's format is irrelevant to the rename race, so the
@@ -37,7 +37,7 @@ object MemoRaceWorker {
     fs.create(new org.apache.hadoop.fs.Path(staging, s"OWNER_$id")).close()
     // barrier: both processes finish staging, then fire together
     while (!new java.io.File(barrier).exists()) Thread.sleep(1)
-    ops.Sinks.installMemo(fs, staging, dst)
+    ops.Memo.install(fs, staging, dst)
     // whoever lost must now be reading the WINNER's installed bytes;
     // both assert the memo is complete and name the owner they see
     val entries = fs.listStatus(dst).map(_.getPath.getName).sorted

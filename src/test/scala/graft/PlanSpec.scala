@@ -404,7 +404,8 @@ class PlanSpec extends AnyFunSuite {
     // cell partition filters (static prune — probed cells are
     // driver-known), never a full-index scan
     graft.ops.LlmOps.q118SimsearchServing(spark, sf).collect()
-    val memo = graft.ops.LlmOps.annIndexMemoPathOf(spark, sf, 16, 3, 8, 16, 2)
+    val memo = graft.ops.Memo.pathOf(spark, graft.ops.Memo.AnnIndex, sf,
+      "_c16i3m8k16p2")
     val emb = Tables.embeddings(spark, sf)
     val probe = graft.ops.LlmOps.annIncremental(spark,
       emb.filter(org.apache.spark.sql.functions.col("vec_id") < 2)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Sinks
+import graft.ops.{Memo, Sinks}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -279,7 +279,7 @@ class SinksSpec extends AnyFunSuite {
     // writes distinguishable rows to prove which install survived
     val staging = new org.apache.hadoop.fs.Path(s"$base/memo__tmp_loser")
     Seq((1L, "loser")).toDF("id", "who").write.parquet(staging.toString)
-    Sinks.installMemo(fs, staging, dst)
+    Memo.install(fs, staging, dst)
     assert(!fs.exists(staging), "loser staging must be deleted")
     val rows = spark.read.parquet(dst.toString).collect()
     assert(rows.length === 1 && rows.head.getString(1) === "winner")
@@ -291,7 +291,7 @@ class SinksSpec extends AnyFunSuite {
     fs.mkdirs(nested)
     val out = fs.create(new org.apache.hadoop.fs.Path(nested, "junk.parquet"))
     out.write(Array[Byte](9, 9, 9)); out.close()
-    Sinks.repairNestedStaging(fs, dst)
+    Memo.repairNestedStaging(fs, dst)
     assert(!fs.exists(nested), "nested staging must be repaired away")
     val rows2 = spark.read.parquet(dst.toString).collect()
     assert(rows2.length === 1 && rows2.head.getString(1) === "winner")
@@ -300,7 +300,7 @@ class SinksSpec extends AnyFunSuite {
     val badDst = new org.apache.hadoop.fs.Path(s"$base/nope/deep/memo")
     val ghost = new org.apache.hadoop.fs.Path(s"$base/ghost_staging")
     intercept[java.io.IOException] {
-      Sinks.installMemo(fs, ghost, badDst) // staging doesn't even exist
+      Memo.install(fs, ghost, badDst) // staging doesn't even exist
     }
   }
 
