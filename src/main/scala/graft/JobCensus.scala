@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 
 /** Scratch job-census harness (dev tool beside [[Verify]]'s
   * `SPARK_GRAFT_VERIFY_ONLY` subset dump): run ONE
@@ -28,10 +29,12 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   */
 object JobCensus {
   /** One job: its interval (ns on the census clock), the root SQL
-    * execution it ran under (None outside SQL), its call site.
+    * execution it ran under (None outside SQL), its call site and its
+    * description (`spark.job.description`; Spark's leaf-file listing
+    * jobs set one, its parquet schema-inference jobs do not).
     */
   final case class Job(id: Int, startNs: Long, endNs: Long,
-      root: Option[Long], site: String)
+      root: Option[Long], site: String, description: Option[String])
 
   /** What [[census]] saw: wall time, jobs, every SQL execution as
     * id → (root id, action call site), and every started process's
@@ -115,15 +118,22 @@ object JobCensus {
     val jobs = scala.collection.mutable.ArrayBuffer[Job]()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val execs = new java.util.concurrent.ConcurrentHashMap[Long, (Long, String)]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val p = Option(js.properties)
         def prop(k: String) = p.flatMap(ps => Option(ps.getProperty(k)))
+        // a driver pool thread inherits the local properties of the
+        // thread that created it, so a job run outside SQL there can
+        // carry the id of an execution that has already ended (or ran
+        // before the census): only a live execution places a job in SQL
+        val live = prop("spark.sql.execution.id").map(_.toLong)
+          .filter(e => execs.containsKey(e) && !ended.contains(e))
         starts.put(js.jobId, Job(js.jobId, System.nanoTime() - t0, 0L,
-          prop("spark.sql.execution.root.id")
-            .orElse(prop("spark.sql.execution.id")).map(_.toLong),
+          live.map(e => execs.get(e)._1),
           js.stageInfos.lastOption.map(_.name)
-            .orElse(prop("callSite.short")).getOrElse("?")))
+            .orElse(prop("callSite.short")).getOrElse("?"),
+          prop("spark.job.description")))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         Option(starts.get(je.jobId)).foreach { j =>
@@ -141,6 +151,7 @@ object JobCensus {
             .find(f => f.startsWith("graft.") && !f.contains(s"($file:"))
           execs.put(s.executionId, (s.rootExecutionId.getOrElse(s.executionId),
             s.description + caller.fold("")(" <- " + _)))
+        case e: SparkListenerSQLExecutionEnd => ended.add(e.executionId); ()
         case _ =>
       }
     }

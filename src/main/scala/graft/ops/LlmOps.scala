@@ -2627,15 +2627,18 @@ object LlmOps {
   def annIndexApplyDeletes(spark: SparkSession, indexPath: String): Boolean =
     Sinks.withWriterLease(spark, indexPath, "ann-index-apply") {
     // cell cardinality for pinned write parallelism (one bounded read,
-    // shared lazily by both subdir rewrites); None on a centroid-less
-    // index — then the kept rows' own distinct cells are counted.
-    // Pinned numPartitions because with AQE coalescing set to
+    // shared lazily by both subdir rewrites); None on an index with no
+    // centroids/ dir — then the kept rows' own distinct cells are
+    // counted. A centroids/ dir that exists but cannot be read fails
+    // loudly. Pinned numPartitions because with AQE coalescing set to
     // parallelismFirst=false a bare repartition(col) shrinks the
     // KB-scale exchange to ONE task that writes every cell directory
     // serially — the fix every cell/band/bucket write got (round 13).
-    lazy val centroidCells: Option[Int] =
-      try Some(spark.read.parquet(s"$indexPath/centroids").count().toInt)
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    lazy val centroidCells: Option[Int] = {
+      val cents = s"$indexPath/centroids"
+      if (!Sinks.fsFor(spark, cents).exists(new org.apache.hadoop.fs.Path(cents))) None
+      else Some(spark.read.parquet(cents).count().toInt)
+    }
     applyIdDeletes(spark, indexPath, "vec_id", Seq("vectors", "codes"), {
       case (_, kept) =>
         val nCells = centroidCells

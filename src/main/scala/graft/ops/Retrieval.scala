@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.Tables
 
@@ -200,26 +202,23 @@ object Retrieval {
   // ----- persisted inverted index (the q49/q87 index-at-rest story
   // ----- applied to lexical retrieval) -----
 
-  /** Build (or extend) a persisted inverted index under `indexPath`:
-    *
-    *   postings/tb=<bucket>/  (tok, doc_id, tf, dl) — every posting
-    *     of a term lives in the ONE parquet partition its
-    *     `pmod(xxhash64(tok), nBuckets)` bucket names, so a probe
-    *     prunes the scan to the buckets of its query terms and never
-    *     touches the rest of the corpus (the q49 cell-pruning rule,
-    *     term-hash instead of k-means cell).
-    *   stats/  one (n_docs, total_tokens) row PER WRITE — appends add
-    *     a row instead of rewriting; readers SUM, so `append` never
-    *     has to read-modify-write shared state (the q87 batch rule).
-    *
-    * df is deliberately NOT materialized: a term's document frequency
-    * is the row count of its own postings, recomputed inside the
-    * pruned buckets at probe time — which keeps `append` trivially
-    * correct (new docs only add postings; no df merge step, no stale
-    * df reads) at the cost of counting rows the probe already scans.
-    * Caller contract for `append`: batches must be disjoint doc sets
-    * (same as [[graft.ops.LlmOps.dedupIndexAppendBatch]]).
+  /** Declared schemas of the index's three persisted relations
+    * (ARCHITECTURE.md "BM25 index format"). Every read below names
+    * one, so no read pays a schema-inference job or depends on which
+    * footer Spark happens to open; the partition columns (`tb`,
+    * `__batch_id`) are discovered from directory names and appended.
     */
+  private val StatsSchema = StructType(Seq(StructField("n_docs", LongType),
+    StructField("total_tokens", LongType), StructField("n_buckets", IntegerType)))
+  private val PostingsSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("dl", LongType), StructField("tok", StringType),
+    StructField("tf", LongType)))
+  private val DeletesSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("dl", LongType)))
+
+  private def postingsAt(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(PostingsSchema).parquet(path)
+
   /** The (doc_id, dl, tok, tf, tb) posting rows of `docs` — the ONE
     * definition both index layouts write, so the flat and
     * batch-stamped paths can never desynchronize their tokenization
@@ -232,19 +231,11 @@ object Retrieval {
       .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
       .withColumn("tb", pmod(xxhash64(col("tok")), lit(nBuckets)))
 
-  /** (n_docs, total_tokens) of `docs` as one driver-side row. */
-  private def statsOf(docs: DataFrame): (Long, Long) = {
-    val st = docs.agg(count(lit(1)).as("n"),
-      sum(size(col("toks")).cast("long")).as("total")).head()
-    (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-  }
-
-  /** [[statsOf]] as an IN-PLAN one-row relation (n_docs,
-    * total_tokens, n_buckets) — writers land it in the same job that
-    * computes it instead of paying a separate head() job (round-18).
-    * coalesce(sum, 0) mirrors statsOf's null-to-zero on an empty
-    * batch; the int cast keeps n_buckets the schema statsOf's
-    * Seq.toDF produced.
+  /** One (n_docs, total_tokens, n_buckets) stats row of `docs` as an
+    * IN-PLAN relation — writers land it in the same job that computes
+    * it instead of paying a separate head() job (round-18).
+    * coalesce(sum, 0) keeps an empty batch's total at zero; the int
+    * cast keeps n_buckets at [[StatsSchema]]'s type.
     */
   private def statsRowOf(docs: DataFrame, nBuckets: Int): DataFrame =
     docs.agg(count(lit(1)).as("n_docs"),
@@ -253,166 +244,131 @@ object Retrieval {
       .select(col("n_docs"), col("total_tokens"),
         lit(nBuckets).cast("int").as("n_buckets"))
 
-  /** The single recorded bucket count of an index's stats relation:
-    * Some(n) when every stats row that records one agrees, None when
-    * none records one (a pre-f2 index — the caller falls back to its
-    * parameter). Mixed recorded counts abort loudly: postings hashed
-    * with two moduli in one directory cannot be probed correctly.
+  /** (n_docs, total_tokens, hash modulus) of the index from ONE
+    * aggregate over its stats rows. The `n_buckets` value every stats
+    * row records is the only authority for the modulus; it is None
+    * only when no stats row exists yet. `tombstones` (doc_id, dl)
+    * rows subtract one doc and their dl each in the same job (NULL dl
+    * subtracts nothing). A stats row that records no modulus (an
+    * index written before the column existed) or two rows that
+    * record different ones abort loudly: postings hashed with an
+    * unknown or a second modulus cannot be probed correctly, and a
+    * rebuild is the only repair.
     */
-  private def indexBucketCount(stDf: DataFrame): Option[Int] =
-    if (!stDf.columns.contains("n_buckets")) None
-    else {
-      // a NULL row means a pre-f2 write whose hash modulus nobody
-      // recorded — next to RECORDED rows that is a mixed-provenance
-      // index whose early postings may sit in wrong buckets, and
-      // accepting the recorded value would validate exactly the
-      // silent-incomplete-probe failure this column exists to stop
-      val rows = stDf.select("n_buckets").distinct().collect()
-      val (nulls, vals) = rows.partition(_.isNullAt(0))
-      val counts = vals.map(_.getInt(0)).sorted
-      if (counts.length > 1 || (counts.nonEmpty && nulls.nonEmpty))
-        throw new IllegalStateException(
-          s"inverted index mixes bucket provenance (recorded: " +
-            s"${counts.mkString(",")}${if (nulls.nonEmpty) " + unrecorded pre-f2 writes" else ""}) — " +
-            "one index, one hash modulus; rebuild the index")
-      counts.headOption
-    }
-
-  // stats written batch-stamped (invIndexAppendBatch) carry
-  // `__batch_id=` partition directories; flat writes (invIndexWrite,
-  // or a sealed index) don't. The two directory depths cannot mix —
-  // parquet partition discovery requires one. guardAppendBuckets
-  // checks this against its own single listing (one listStatus per
-  // append, not two).
-
-  /** JVM-local (indexPath → validated bucket count): a long-lived
-    * stream appends one stats file per micro-batch, so re-merge-
-    * reading ALL stats footers per batch would cost O(batches) per
-    * append — quadratic over the stream's life. The first successful
-    * guard pins the count for this JVM; later appends compare against
-    * the pin in O(1). Cross-JVM writers re-validate on their own
-    * first append.
-    */
-  private val guardedBuckets =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
+  private def indexStats(spark: SparkSession, indexPath: String,
+      tombstones: Option[DataFrame] = None): (Long, Long, Option[Int]) = {
+    val stats = spark.read.schema(StatsSchema).parquet(s"$indexPath/stats")
+      .select("n_docs", "total_tokens", "n_buckets")
+    // a tombstone row has n_docs = -1; stats rows never go below 0
+    val rows = tombstones.fold(stats)(t => stats.unionByName(
+      t.filter(col("dl").isNotNull).select(lit(-1L).as("n_docs"),
+        (-col("dl")).as("total_tokens"), lit(null).cast("int").as("n_buckets"))))
+    val st = rows.agg(
+      coalesce(sum("n_docs"), lit(0L)),
+      coalesce(sum("total_tokens"), lit(0L)),
+      countDistinct(col("n_buckets")),
+      max(col("n_buckets")),
+      count(when(col("n_buckets").isNull && col("n_docs") >= 0, 1))).head()
+    val (moduli, unrecorded) = (st.getLong(2), st.getLong(4))
+    if (unrecorded > 0 || moduli > 1)
+      throw new IllegalStateException(
+        s"BM25 index $indexPath: " +
+          (if (unrecorded > 0) s"$unrecorded stats row(s) record no hash modulus"
+           else s"stats rows record $moduli different hash moduli") +
+          " — one index, one modulus; rebuild the index")
+    (st.getLong(0), st.getLong(1), if (st.isNullAt(3)) None else Some(st.getInt(3)))
+  }
 
   /** Refuse a write that would mix hash moduli OR directory layouts
-    * in one index: an append whose `nBuckets` differs from the count
-    * the existing stats record, an append onto a pre-f2 index that
-    * records none (unprovable layout), or a stamped append onto a
-    * flat index (and vice versa — the depths break partition
-    * discovery) aborts BEFORE any bytes land, instead of poisoning
-    * every later probe. Check-then-act caveat: two CONCURRENT FIRST
-    * appends to a brand-new path both see no stats and pass — the
-    * guard assumes one pipeline configures one index (the documented
-    * concurrent-batch case shares one config); a mixed-modulus index
-    * born that way is still caught loudly at the next guard or read.
+    * in one index, BEFORE any bytes land: an append whose `nBuckets`
+    * differs from the modulus the stats rows record, or a stamped
+    * append onto a flat index (and vice versa — the depths break
+    * partition discovery). ONE listing per append carries both
+    * checks: the layout, and the `__nb_<n>` sentinel — the guard's
+    * cache of the recorded modulus, trusted when present. A missing
+    * sentinel (a seal rewrote the stats dir, or a concurrent first
+    * append has not written it yet) is rebuilt from one
+    * declared-schema stats read ([[indexStats]]). Check-then-act
+    * caveat: two CONCURRENT FIRST appends to a brand-new path both
+    * see no stats and pass — the guard assumes one pipeline
+    * configures one index (the documented concurrent-batch case
+    * shares one config); a mixed-modulus index born that way is still
+    * caught loudly at the next guard or probe.
     */
   private def guardAppendBuckets(spark: SparkSession, indexPath: String,
       nBuckets: Int, stamped: Boolean): Unit = {
-    // the pin covers (path, LAYOUT): a stamped append must never ride
-    // a pin the flat writer earned (or vice versa), and sealing —
-    // which changes the layout in place — retires the path's pins
-    val pinKey = s"$indexPath|stamped=$stamped"
     val statsPath = new org.apache.hadoop.fs.Path(s"$indexPath/stats")
     val fs = Sinks.fsFor(spark, statsPath.toString)
-    if (!fs.exists(statsPath)) {
-      // brand-new (or deleted-and-recreated) index: any pin this JVM
-      // held for the old incarnation is meaningless — drop it so the
-      // next append after re-creation revalidates from the new stats
-      guardedBuckets.remove(pinKey); return
-    }
-    // ONE listing per append, pinned or not — the pin only amortizes
-    // the O(batches) stats-FOOTER read, never this listStatus. The
-    // listing carries both cross-JVM invalidation signals: directory
-    // LAYOUT (another JVM may have sealed or rebuilt the index since
-    // the pin was earned — stamped appends onto a flat layout mix
-    // directory depths that break partition discovery) and the
-    // MODULUS SENTINEL (`__nb_<n>`, a zero-byte marker every writer
-    // maintains — an overwrite rebuild under a different bucket count
-    // keeps the layout but changes the sentinel, which a stale pin
-    // would otherwise never see; round-12 review).
-    val entries = fs.listStatus(statsPath)
-    if (entries.exists(_.getPath.getName.startsWith("__batch_id=")) != stamped &&
-        entries.nonEmpty) {
-      guardedBuckets.remove(pinKey)
+    if (!fs.exists(statsPath)) return // brand-new index
+    val names = fs.listStatus(statsPath).map(_.getPath.getName)
+    // layout from the parquet-visible entries only (Spark's rule: a
+    // `_`/`.`-led name without `=` is hidden) — a concurrent first
+    // append's `.spark-staging-*` dir or `_SUCCESS` marker shows no
+    // layout yet
+    val data = names.filter(n => n.contains("=") ||
+      !(n.startsWith("_") || n.startsWith(".")))
+    if (data.nonEmpty && data.exists(_.startsWith("__batch_id=")) != stamped)
       throw new IllegalArgumentException(
         s"${if (stamped) "batch-stamped" else "flat"} append onto " +
           s"$indexPath whose existing layout is " +
           s"${if (stamped) "flat" else "batch-stamped"} — the directory " +
           "depths don't mix (seal the index or use the matching writer)")
-    }
     // digits-only: a stray non-numeric `__nb_*` file is NOT a
     // sentinel this writer ever produced — corruption or foreign
     // litter — so it fails the guard loudly instead of throwing a
     // bare NumberFormatException (round-12 advice)
-    val nbNames = entries.map(_.getPath.getName).filter(_.startsWith("__nb_"))
+    val nbNames = names.filter(_.startsWith("__nb_"))
     val malformed = nbNames.filterNot(_.stripPrefix("__nb_").matches("[0-9]+"))
-    if (malformed.nonEmpty) {
-      guardedBuckets.remove(pinKey)
+    if (malformed.nonEmpty)
       throw new IllegalArgumentException(
         s"append onto $indexPath: unparsable bucket-count sentinel(s) " +
           s"${malformed.mkString(", ")} in stats/ — the modulus cannot be " +
           "validated; remove the stray file(s) or rebuild the index")
-    }
     val sentinel = nbNames.map(_.stripPrefix("__nb_").toInt)
     val mismatched = sentinel.filter(_ != nBuckets)
-    if (mismatched.nonEmpty) {
-      guardedBuckets.remove(pinKey)
+    if (mismatched.nonEmpty)
       throw new IllegalArgumentException(
         s"append with nBuckets=$nBuckets onto $indexPath whose postings " +
           s"are hashed with ${mismatched.distinct.mkString("/")} buckets — " +
           "rebuild the index instead")
-    }
-    val pinned = guardedBuckets.get(pinKey)
-    if (pinned != null) {
-      if (pinned.intValue != nBuckets) throw new IllegalArgumentException(
-        s"append with nBuckets=$nBuckets onto $indexPath validated at " +
-          s"$pinned buckets this session — one index, one hash modulus")
-      return
-    }
-    // a matching sentinel IS a validation (it is written only after a
-    // write under that modulus): pin and skip the footer read
-    if (sentinel.nonEmpty) {
-      guardedBuckets.put(pinKey, Int.box(nBuckets)); return
-    }
-    val stDf =
-      try spark.read.option("mergeSchema", "true").parquet(statsPath.toString)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("UNABLE_TO_INFER_SCHEMA") =>
-          return // empty stats dir: nothing recorded yet
-      }
-    indexBucketCount(stDf) match {
+    if (sentinel.isEmpty) indexStats(spark, indexPath)._3 match {
       case Some(n) if n != nBuckets => throw new IllegalArgumentException(
         s"append with nBuckets=$nBuckets onto $indexPath whose postings " +
           s"are hashed with $n buckets — rebuild the index instead")
-      case None if !stDf.isEmpty => throw new IllegalArgumentException(
-        s"append onto $indexPath whose stats record no bucket count " +
-          "(pre-f2 layout) — the hash modulus cannot be validated; " +
-          "rebuild the index")
-      case Some(_) =>
-        guardedBuckets.put(pinKey, Int.box(nBuckets)); ()
-      case _ => ()
+      case Some(_) => ensureModulusSentinel(spark, indexPath, nBuckets)
+      case None => () // no stats row yet: this write records the first
     }
   }
 
+  /** Build (or extend) a persisted inverted index under `indexPath`:
+    *
+    *   postings/tb=<bucket>/  (doc_id, dl, tok, tf) — every posting
+    *     of a term lives in the ONE parquet partition its
+    *     `pmod(xxhash64(tok), nBuckets)` bucket names, so a probe
+    *     prunes the scan to the buckets of its query terms and never
+    *     touches the rest of the corpus (the q49 cell-pruning rule,
+    *     term-hash instead of k-means cell).
+    *   stats/  one (n_docs, total_tokens, n_buckets) row PER WRITE —
+    *     appends add a row instead of rewriting; readers SUM, so
+    *     `append` never has to read-modify-write shared state (the
+    *     q87 batch rule). `n_buckets` is the index's one record of
+    *     its hash modulus; `stats/__nb_<n>` caches it for the append
+    *     guard.
+    *
+    * df is deliberately NOT materialized: a term's document frequency
+    * is the row count of its own postings, recomputed inside the
+    * pruned buckets at probe time — which keeps `append` trivially
+    * correct (new docs only add postings; no df merge step, no stale
+    * df reads) at the cost of counting rows the probe already scans.
+    * Caller contract for `append`: batches must be disjoint doc sets
+    * (same as [[graft.ops.LlmOps.dedupIndexAppendBatch]]).
+    */
   def invIndexWrite(docs: DataFrame, indexPath: String,
       nBuckets: Int = 64, mode: String = "overwrite"): Unit =
     Sinks.withWriterLease(docs.sparkSession, indexPath, "inv-index-write") {
     val spark = docs.sparkSession
-    import spark.implicits._
     if (mode == "append")
       guardAppendBuckets(spark, indexPath, nBuckets, stamped = false)
-    else {
-      // overwrite rebuilds the index in place — possibly with a new
-      // bucket count or layout — so retire this JVM's append-guard
-      // pins exactly as invIndexSeal does: a later append must
-      // revalidate against the REBUILT stats, not the pin the old
-      // incarnation earned (round-11 advice)
-      guardedBuckets.remove(s"$indexPath|stamped=true")
-      guardedBuckets.remove(s"$indexPath|stamped=false")
-    }
     // postings/ and stats/ are disjoint subdirs off one input with no
     // commit-order contract (the invIndexAppendBatch rule), so the two
     // writes run as concurrent driver-thread jobs; the stats agg is
@@ -440,15 +396,13 @@ object Retrieval {
   /** Maintain the `__nb_<n>` modulus sentinel in the stats dir — a
     * zero-byte, underscore-prefixed marker (parquet-invisible: Spark
     * hides `_`-led files WITHOUT an `=` in the name — an `=` would
-    * read as a partition value and break footer merges)
-    * every writer leaves after landing stats under modulus `n`. The
-    * append guard reads it from the ONE directory listing it already
-    * pays, so cross-JVM modulus validation costs no extra RPC and no
-    * stats-footer read — and an overwrite rebuild under a DIFFERENT
-    * bucket count (which keeps the directory layout and so would
-    * otherwise ride a stale JVM-local pin) is caught at the next
-    * append (round-12 review). Sentinels are recreated after any
-    * whole-dir rewrite (overwrite stats write, seal).
+    * read as a partition value) that caches the modulus the stats
+    * rows record. The append guard reads it from the ONE directory
+    * listing it already pays, so cross-JVM modulus validation costs
+    * no stats read — and an overwrite rebuild under a DIFFERENT
+    * bucket count replaces the sentinel, which the next append sees
+    * (round-12 review). A whole-dir stats rewrite that drops it (a
+    * seal) costs the next append one stats read to rebuild it.
     */
   private def ensureModulusSentinel(spark: SparkSession,
       indexPath: String, nBuckets: Int): Unit = {
@@ -462,75 +416,35 @@ object Retrieval {
     * [[bm25TopK]], but the posting scan is PRUNED to the partitions
     * of the query terms' buckets — cost scales with those terms'
     * posting lists, never the indexed corpus. Corpus stats are the
-    * SUM of the stats rows (one per write), so an appended index
-    * scores with its true N and avgdl. The bucket count used to hash
-    * query terms is READ FROM THE INDEX (the `n_buckets` stats
-    * column each write records), never guessed from a parameter: a
-    * probe hashing with a different modulus than the postings layout
-    * silently returns incomplete results. `nBuckets` survives only
-    * as the fallback for pre-f2 indexes whose stats lack the column,
-    * and mixed per-write bucket counts abort loudly.
+    * SUM of the stats rows (one per write) less the pending
+    * tombstones, so an appended or tombstoned index scores with its
+    * true N and avgdl. Query terms are hashed with the modulus the
+    * stats rows record ([[indexStats]]), never with a guess: a probe
+    * hashing with a different modulus than the postings layout would
+    * silently return incomplete results. An index whose stats record
+    * no modulus, or more than one, is refused with a "rebuild the
+    * index" error.
     */
   def bm25Indexed(spark: SparkSession, queries: DataFrame,
-      indexPath: String, nBuckets: Int = 64, k: Int = 10,
+      indexPath: String, k: Int = 10,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // mergeSchema: a stats dir whose files span the pre-f2 (no
-    // n_buckets column) and f2 layouts must surface the column with
-    // nulls for the old rows, not whichever single footer Spark
-    // happened to pick — a footer race here either NPEs or silently
-    // reverts to the parameter against a differently-hashed layout
-    val stDf = spark.read.option("mergeSchema", "true")
-      .parquet(s"$indexPath/stats")
-    // ONE aggregate job carries everything the probe needs from the
-    // stats relation (round 13; previously the sums and the modulus
-    // validation were separate jobs): N, total tokens, the distinct
-    // recorded-modulus set (count-distinct + max reconstructs
-    // indexBucketCount's single-modulus check exactly — >1 distinct
-    // or a NULL row next to recorded rows is the same mixed-
-    // provenance abort) — and the q129 tombstone correction rides the
-    // SAME job as a unioned negative contribution (dl was captured at
-    // delete time, so the common case stays a bounded-file read; the
-    // rare NULL-dl tombstone pays resolveTombstoneDl's one
-    // broadcast-filtered postings pass first — see its scaladoc; df
-    // needs no correction — it is the row count of the anti-joined
-    // postings below). No tombstones ⇒ no union branch.
-    val hasNb = stDf.columns.contains("n_buckets")
-    val statRows = stDf.select(col("n_docs"), col("total_tokens"),
-      (if (hasNb) col("n_buckets") else lit(null).cast("int")).as("nb"))
     // NULL-dl tombstones (deleted-before-ingest docs that have since
     // been appended) are resolved against current postings BEFORE the
     // correction, so the probe's N/avgdl match rebuild-without-deleted
     // even in the delete-then-append case; ids for the anti-join below
-    // are unaffected by resolution
+    // are unaffected by resolution. The common case (every tombstone
+    // carries its dl) reads no postings here — see resolveTombstoneDl
     val delsOpt = readInvDeletes(spark, indexPath).map(d =>
       resolveTombstoneDl(spark, indexPath, d, readPostings(spark, indexPath)))
-    val unioned = delsOpt match {
-      case None => statRows
-      case Some(dels) => statRows.unionByName(
-        dels.filter(col("dl").isNotNull)
-          .select(lit(-1L).as("n_docs"), (-col("dl")).as("total_tokens"),
-            // a tombstone row must not look like a pre-f2 NULL-modulus
-            // stats row to the provenance check — give it the max nb
-            // marker by keeping it NULL and excluding it below via
-            // n_docs < 0
-            lit(null).cast("int").as("nb")))
-    }
-    // the stats aggregate and the query-term hash collect are
+    // the stats aggregate (N, total tokens, modulus and the tombstone
+    // correction in ONE job) and the query-term hash collect are
     // independent (the bucket MODULUS is applied driver-side below,
     // after the stats reveal it), so the probe's two driver waves run
     // concurrently — max(), not sum() (round-18, guide §2.6). Hashes
     // are collected PRE-mod: pmod(h, nb) over the distinct hash set
     // driver-side yields exactly the bucket set the in-plan
     // pmod+distinct produced.
-    val stF = Sinks.bFuture {
-      unioned.agg(
-        coalesce(sum("n_docs"), lit(0L)),
-        coalesce(sum("total_tokens"), lit(0L)),
-        countDistinct(col("nb")),
-        max(col("nb")),
-        coalesce(sum(when(col("nb").isNull && col("n_docs") >= 0, 1L)), lit(0L)))
-        .head()
-    }
+    val stF = Sinks.bFuture { indexStats(spark, indexPath, delsOpt) }
     val qHashF = Sinks.bFuture {
       queries.select(xxhash64(col("tok")).as("h"))
         .distinct().collect().map(_.getLong(0)).toIndexedSeq
@@ -538,25 +452,17 @@ object Retrieval {
     Sinks.awaitAllOrThrow(Seq(stF, qHashF))
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    val st = Await.result(stF, Duration.Inf)
+    val (nDocs, totalTokens, modulus) = Await.result(stF, Duration.Inf)
     val qHashes = Await.result(qHashF, Duration.Inf)
-    val nDocs = st.getLong(0)
     // empty index: the postings dir holds no parquet files (an empty
     // partitioned write emits none), so don't even try to read it
     if (nDocs <= 0) return emptyResult(queries)
-    val avgdl = st.getLong(1).toDouble / nDocs
-    val nbDistinct = st.getLong(2)
-    val nbNulls = st.getLong(4)
-    if (nbDistinct > 1 || (nbDistinct == 1 && nbNulls > 0))
-      throw new IllegalStateException(
-        "inverted index mixes bucket provenance (recorded moduli: " +
-          s"$nbDistinct distinct${if (nbNulls > 0) " + unrecorded pre-f2 writes" else ""}) — " +
-          "one index, one hash modulus; rebuild the index")
-    val nb: Int = if (nbDistinct == 1) st.getInt(3) else nBuckets
+    val avgdl = totalTokens.toDouble / nDocs
+    val nb = modulus.get // nDocs > 0: some stats row recorded it
     // driver-side pmod of the pre-collected distinct hashes — the same
     // ((h % nb) + nb) % nb arithmetic the in-plan pmod applies
     val buckets = qHashes.map(h => ((h % nb) + nb) % nb).distinct
-    val pruned0 = spark.read.parquet(s"$indexPath/postings")
+    val pruned0 = postingsAt(spark, s"$indexPath/postings")
       .filter(col("tb").isin(buckets: _*))
     val pruned = delsOpt match {
       case Some(dels) =>
@@ -644,10 +550,9 @@ object Retrieval {
   private[graft] def invIndexAppendBatchHeld(docs: DataFrame,
       indexPath: String, batchId: Long, nBuckets: Int = 64): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    // same modulus guard as the flat append (first append per JVM
-    // pays one stats read; later ones hit the session pin — a
-    // replayed batch trivially passes, it recorded this count itself)
+    // same modulus guard as the flat append (a listing, plus one stats
+    // read when the sentinel is missing — a replayed batch trivially
+    // passes, it recorded this count itself)
     guardAppendBuckets(spark, indexPath, nBuckets, stamped = true)
     // postings/ and stats/ are disjoint subdirs off one batch, with
     // NO commit-order contract between them (contrast the ANN
@@ -657,8 +562,6 @@ object Retrieval {
     // interim probe merely mis-weights one batch either way. So the
     // big postings write and the stats aggregate+write run as
     // concurrent driver-thread jobs (the dedup-append rule).
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
     Sinks.awaitAllOrThrow(Seq(
       Sinks.bFuture {
         postingsOf(docs, nBuckets)
@@ -670,8 +573,7 @@ object Retrieval {
       Sinks.bFuture {
         // stats agg fused INTO the write plan: one job computes and
         // lands the row, where head()+literal-write paid two (round-18,
-        // guide §2.3 one-pass stats). Same columns, same values —
-        // coalesce(sum, 0) is exactly statsOf's null-to-zero rule.
+        // guide §2.3 one-pass stats).
         statsRowOf(docs, nBuckets)
           .withColumn("__batch_id", lit(batchId))
           .coalesce(1).write
@@ -681,14 +583,7 @@ object Retrieval {
     ensureModulusSentinel(spark, indexPath, nBuckets)
   }
 
-  /** Seal a streaming-ingested ([[invIndexAppendBatch]]) inverted
-    * index into [[invIndexWrite]]'s flat layout — the
-    * [[graft.ops.LlmOps.annIndexSeal]] contract: run at quiesce,
-    * probes unchanged (postings keep their `tb` pruning dirs; the
-    * per-batch stats rows keep summing at read), per-batch directory
-    * fan-out gone, flat appends from here on.
-    */
-  /** Explicit-schema read of the inverted index's tombstone dir —
+  /** Declared-schema read of the inverted index's tombstone dir —
     * None when no delete was ever recorded. Rows are (doc_id, dl):
     * the tombstone CARRIES the deleted doc's length (captured from
     * its own postings at delete time, NULL for ids absent from the
@@ -697,35 +592,32 @@ object Retrieval {
     */
   private def readInvDeletes(spark: SparkSession,
       indexPath: String): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
     val p = new org.apache.hadoop.fs.Path(s"$indexPath/deletes")
     if (!Sinks.fsFor(spark, indexPath).exists(p)) None
-    else Some(spark.read.schema(StructType(Seq(
-      StructField("doc_id", LongType), StructField("dl", LongType))))
-      .parquet(p.toString))
+    else Some(spark.read.schema(DeletesSchema).parquet(p.toString))
   }
 
-  /** Explicit-None read of the postings dir — None when the index has
-    * no postings files yet (an empty partitioned write emits none, so
-    * schema inference fails rather than yielding an empty frame) or
-    * when an apply-deletes emptied the index (postings-less root).
-    * A missing index ROOT stays FATAL: every caller probes or mutates
-    * an index that must already exist, so tolerating it would turn a
-    * mistyped/unmounted indexPath into silently empty results
-    * (round-15 advice) — the missing-path tolerance of
-    * [[Sinks.readParquetIfAny]] is reserved for merge-on-read sinks
-    * that genuinely start absent.
+  /** Declared-schema read of the postings dir — None when the index
+    * root has no postings dir (an apply-deletes that emptied the index
+    * installs a postings-less root); a postings dir without data files
+    * (an empty partitioned write emits none) reads as an empty
+    * relation, with no schema inference to fail. A missing index ROOT
+    * stays FATAL: every caller probes or mutates an index that must
+    * already exist, so tolerating it would turn a mistyped/unmounted
+    * indexPath into silently empty results (round-15 advice) — the
+    * missing-path tolerance of [[Sinks.readParquetIfAny]] is reserved
+    * for merge-on-read sinks that genuinely start absent.
     */
   private def readPostings(spark: SparkSession,
       indexPath: String): Option[DataFrame] = {
-    val out = Sinks.readParquetIfAny(spark, s"$indexPath/postings")
-    if (out.isEmpty && !Sinks.fsFor(spark, indexPath)
-        .exists(new org.apache.hadoop.fs.Path(indexPath)))
-      throw new IllegalArgumentException(
-        s"BM25 index root not found: $indexPath — build it first " +
-          "(invIndexWrite / invIndexAppend); probe-side reads fail " +
-          "loud on a missing index rather than returning empty results")
-    out
+    val fs = Sinks.fsFor(spark, indexPath)
+    val p = new org.apache.hadoop.fs.Path(s"$indexPath/postings")
+    if (fs.exists(p)) Some(postingsAt(spark, p.toString))
+    else if (fs.exists(new org.apache.hadoop.fs.Path(indexPath))) None
+    else throw new IllegalArgumentException(
+      s"BM25 index root not found: $indexPath — build it first " +
+        "(invIndexWrite / invIndexAppend); probe-side reads fail " +
+        "loud on a missing index rather than returning empty results")
   }
 
   /** Resolve NULL-dl tombstones against CURRENT postings. A NULL dl
@@ -804,12 +696,11 @@ object Retrieval {
     * the deleted docs and the stats as ONE corrected row, installed
     * by a count-validated whole-root park-rename swap; `deletes/` is
     * gone in the installed root. The rewrite flattens a stamped
-    * layout (this IS a compaction — the seal contract), so JVM
-    * append-guard pins are retired and the modulus sentinel is
-    * recreated. No-op without tombstones; an index emptied by the
-    * delete installs a postings-less root (probes read nDocs 0 and
-    * return empty). Crash between the two renames is repaired at the
-    * next call's entry recovery.
+    * layout (this IS a compaction — the seal contract) and recreates
+    * the modulus sentinel. No-op without tombstones; an index emptied
+    * by the delete installs a postings-less root (probes read nDocs 0
+    * and return empty). Crash between the two renames is repaired at
+    * the next call's entry recovery.
     */
   def invIndexApplyDeletes(spark: SparkSession, indexPath: String): Boolean =
     Sinks.withWriterLease(spark, indexPath, "inv-index-apply") {
@@ -831,15 +722,13 @@ object Retrieval {
     // partition, replacing eager-checkpoint + isEmpty with ONE job
     val dels = delsOpt.get.localCheckpoint(false)
     if (dels.count() == 0) { fs.delete(p(s"$indexPath/deletes"), true); return false }
-    val stDf = spark.read.option("mergeSchema", "true")
-      .parquet(s"$indexPath/stats")
     val posted = readPostings(spark, indexPath)
-    // Three INDEPENDENT bounded reads — the stats sums + bucket count,
-    // the tombstone stats correction, and the surviving-postings pin +
-    // count — previously ran as four serial job waves; they share no
-    // state beyond the already-materialized `dels` checkpoint, so they
-    // run as concurrent driver-thread jobs and the step pays max(),
-    // not sum() (round-18, guide §2.6 — the q129 fixed-latency cut).
+    // Two INDEPENDENT bounded reads — the tombstone-corrected stats
+    // with the modulus (one aggregate, see indexStats), and the
+    // surviving-postings pin + count — share no state beyond the
+    // already-materialized `dels` checkpoint, so they run as
+    // concurrent driver-thread jobs and the step pays max(), not
+    // sum() (round-18, guide §2.6 — the q129 fixed-latency cut).
     // NULL-dl tombstones are resolved against the postings that exist
     // NOW (delete-before-ingest docs appended since the delete must be
     // subtracted from the compacted stats — see resolveTombstoneDl).
@@ -847,26 +736,17 @@ object Retrieval {
       _.drop("__batch_id").join(dels.select("doc_id"), Seq("doc_id"), "left_anti")
         .localCheckpoint(false)) // lazy pin: its count() materializes it
     val stF = Sinks.bFuture {
-      val st = stDf.agg(sum("n_docs"), sum("total_tokens")).head()
-      val nb = indexBucketCount(stDf).getOrElse(throw new IllegalArgumentException(
-        s"invIndexApplyDeletes: $indexPath records no bucket count (pre-f2 " +
-          "layout) — rebuild the index instead"))
-      (st, nb)
-    }
-    val corrF = Sinks.bFuture {
-      resolveTombstoneDl(spark, indexPath, dels, posted)
-        .filter(col("dl").isNotNull)
-        .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+      indexStats(spark, indexPath,
+        Some(resolveTombstoneDl(spark, indexPath, dels, posted)))
     }
     val keptF = Sinks.bFuture { kept.map(_.count()).getOrElse(0L) }
-    Sinks.awaitAllOrThrow(Seq(stF, corrF, keptF))
+    Sinks.awaitAllOrThrow(Seq(stF, keptF))
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    val (st, nb) = Await.result(stF, Duration.Inf)
-    val corr = Await.result(corrF, Duration.Inf)
+    val (nDocs, total, modulus) = Await.result(stF, Duration.Inf)
     val expected = Await.result(keptF, Duration.Inf)
-    val nDocs = st.getLong(0) - corr.getLong(0)
-    val total = st.getLong(1) - corr.getLong(1)
+    val nb = modulus.getOrElse(throw new IllegalStateException(
+      s"invIndexApplyDeletes: $indexPath has no stats row; rebuild the index"))
     val tmp = indexPath + "__del_tmp"
     if (expected > 0) {
       kept.get.repartition(nb, col("tb"))
@@ -877,7 +757,7 @@ object Retrieval {
     // a count mismatch the whole tmp root is discarded exactly as
     // before, so the concurrently-written stats never survive.
     val actF = Sinks.bFuture {
-      if (expected > 0) spark.read.parquet(s"$tmp/postings").count() else 0L
+      if (expected > 0) postingsAt(spark, s"$tmp/postings").count() else 0L
     }
     val stWrF = Sinks.bFuture {
       Seq((nDocs, total, nb)).toDF("n_docs", "total_tokens", "n_buckets")
@@ -893,13 +773,18 @@ object Retrieval {
     }
     Sinks.swapInstall(fs, p(tmp), root, "__del_old")
     ensureModulusSentinel(spark, indexPath, nb)
-    // layout changed in place (flattened, postings rewritten): retire
-    // this JVM's append-guard pins, exactly as invIndexSeal does
-    guardedBuckets.remove(s"$indexPath|stamped=true")
-    guardedBuckets.remove(s"$indexPath|stamped=false")
     true
   }
 
+  /** Seal a streaming-ingested ([[invIndexAppendBatch]]) inverted
+    * index into [[invIndexWrite]]'s flat layout — the
+    * [[graft.ops.LlmOps.annIndexSeal]] contract: run at quiesce,
+    * probes unchanged (postings keep their `tb` pruning dirs; the
+    * per-batch stats rows keep summing at read), per-batch directory
+    * fan-out gone, flat appends from here on. A seal that rewrites
+    * the stats dir drops the modulus sentinel; the next append's
+    * guard rebuilds it from the sealed stats rows.
+    */
   def invIndexSeal(spark: SparkSession, indexPath: String): Unit =
     Sinks.withWriterLease(spark, indexPath, "inv-index-seal") {
     // quiesce-time compaction applies pending tombstones FIRST (the
@@ -911,19 +796,6 @@ object Retrieval {
     Sinks.sealBatchStampedAll(spark, Seq(
       s"$indexPath/postings" -> Some("tb"),
       s"$indexPath/stats" -> None))
-    // the layout just changed in place: retire this JVM's append-guard
-    // pins so the next append revalidates against the sealed layout
-    guardedBuckets.remove(s"$indexPath|stamped=true")
-    guardedBuckets.remove(s"$indexPath|stamped=false")
-    // the seal rewrote the stats dir wholesale — restore the modulus
-    // sentinel from the sealed stats' own recorded count (one bounded
-    // read at quiesce time). Guarded: sealing is contractually a
-    // no-op on an index that was never written (zero-batch stream),
-    // whose stats dir is missing or schema-less — nothing to restore
-    try indexBucketCount(spark.read.option("mergeSchema", "true")
-        .parquet(s"$indexPath/stats"))
-      .foreach(n => ensureModulusSentinel(spark, indexPath, n))
-    catch { case _: org.apache.spark.sql.AnalysisException => () }
   }
 
   /** #109 Batch twin of the streaming inverted-index ingest: split

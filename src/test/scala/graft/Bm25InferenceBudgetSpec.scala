@@ -1,0 +1,72 @@
+package graft
+
+import graft.ops.{Retrieval, Sinks}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Budget: the BM25 index lifecycle reads its persisted relations with
+  * declared schemas, so it runs no schema-inference job from
+  * `Retrieval.scala`. An inferring `spark.read.parquet` costs one Spark
+  * job per read (ROADMAP item 1), and a relation whose files disagree
+  * would be read with whichever footer Spark opened.
+  *
+  * A schema-inference job is a job outside any SQL execution whose
+  * call site is a `parquet at <file>:<line>` read and which is not one
+  * of Spark's leaf-file listing jobs (those carry a "Listing leaf
+  * files" description; a declared-schema read of a many-bucket
+  * postings dir still pays them).
+  *
+  * Out of scope, still inferring (ROADMAP item 1(b)): the shared
+  * `Sinks.sealBatchStamped` reads that `invIndexSeal` runs for postings
+  * and stats (`parquet at Sinks.scala`). The spec requires the census
+  * to see exactly those two, which also shows the predicate matches:
+  * any other inferring read, in Retrieval.scala or in a shared helper
+  * it calls (such as `Sinks.readParquetIfAny`), fails it.
+  */
+class Bm25InferenceBudgetSpec extends AnyFunSuite {
+  lazy val spark = SharedSpark.spark
+
+  private def inference(j: JobCensus.Job): Boolean =
+    j.root.isEmpty && j.site.matches("""parquet at \S+\.scala:\d+""") &&
+      !j.description.exists(_.startsWith("Listing leaf files"))
+
+  test("BM25 write/append/probe/delete/apply/seal/append: no schema-inference job in Retrieval.scala") {
+    val docs = Tables.documents(spark, SharedSpark.sfTiny)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .localCheckpoint()
+    val queries = docs.filter(col("doc_id") % 97 === 0)
+      .orderBy("doc_id").limit(4)
+      .select(col("doc_id").as("query_id"),
+        explode(slice(col("toks"), 1, 4)).as("tok"))
+      .distinct().localCheckpoint()
+    val ids = docs.select("doc_id").filter(col("doc_id") % 5 === 2)
+    val root = java.nio.file.Files.createTempDirectory("graft_bm25_budget").toString
+    val flat = s"$root/flat"
+    val idx = s"$root/stamped"
+    val fs = Sinks.fsFor(spark, root)
+    // 8 buckets, not the default 64: a tenth of the files, same reads
+    val nb = 8
+    val c = JobCensus.census(spark) {
+      Retrieval.invIndexWrite(docs, flat, nb)
+      Retrieval.invIndexAppendBatch(docs.filter(col("doc_id") < 250), idx, 0L, nb)
+      Retrieval.invIndexAppendBatch(docs.filter(col("doc_id") >= 250), idx, 1L, nb)
+      Retrieval.bm25Indexed(spark, queries, idx).collect()
+      Retrieval.invIndexDelete(spark, idx, ids)
+      Retrieval.bm25Indexed(spark, queries, idx).collect()
+      Retrieval.invIndexApplyDeletes(spark, idx)
+      Retrieval.invIndexSeal(spark, idx)
+      // without its sentinel the flat append's guard reads the stats
+      // rows (the cache-rebuild read), so that read is budgeted too
+      fs.delete(new org.apache.hadoop.fs.Path(s"$idx/stats/__nb_$nb"), false)
+      Retrieval.invIndexWrite(docs.limit(0), idx, nb, mode = "append")
+    }
+    val (retrieval, other) = c.jobs.filter(inference)
+      .partition(_.site.contains(" at Retrieval.scala:"))
+    assert(retrieval.isEmpty,
+      s"schema-inference jobs in Retrieval.scala:\n${retrieval.mkString("\n")}")
+    // the only inference left is the seal's two shared Sinks reads
+    // (postings, stats); seeing them also shows the predicate matches
+    assert(other.map(_.site.replaceAll(""":\d+$""", "")) ===
+      Seq.fill(2)("parquet at Sinks.scala"), other.mkString("\n"))
+  }
+}

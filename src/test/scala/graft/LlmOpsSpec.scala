@@ -954,6 +954,28 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(declared === exact)
   }
 
+  test("ANN apply-deletes: an unreadable centroids/ dir fails loudly, tombstones kept") {
+    // the centroid count sizes the rewrite's partitioning; only a
+    // MISSING centroids/ dir may fall back to counting the kept rows'
+    // cells — one that exists but holds no readable parquet is damage
+    // and must not be papered over
+    val emb = Tables.embeddings(spark, sf).localCheckpoint()
+    val idx = java.nio.file.Files.createTempDirectory("graft_ann_badcent").toString
+    LlmOps.annIndexWrite(spark, emb, idx)
+    assert(LlmOps.annIndexDelete(spark, idx,
+      emb.select("vec_id").filter(pmod(col("vec_id"), lit(5)) === 2)) > 0L)
+    val fs = graft.ops.Sinks.fsFor(spark, idx)
+    val cents = new org.apache.hadoop.fs.Path(s"$idx/centroids")
+    fs.delete(cents, true)
+    fs.mkdirs(cents)
+    fs.create(new org.apache.hadoop.fs.Path(cents, "_SUCCESS"), true).close()
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      LlmOps.annIndexApplyDeletes(spark, idx)
+    }
+    assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA"), e.getMessage)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/deletes")))
+  }
+
   test("ANN flat append after seal: a sealed index extends via annIndexWrite(append) and answers exactly") {
     // the q119 contract for the vector family: once sealed, the index
     // re-enters the flat append world — new vectors land through

@@ -379,12 +379,12 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("bm25Indexed reads the hash modulus from the index, not its parameter") {
-    // build with a deliberately NON-default bucket count, probe with
-    // the default parameter: before round 11 the probe hashed query
-    // terms with ITS OWN default (64) against a 7-bucket layout and
-    // silently returned incomplete results; now the n_buckets stats
-    // column is authoritative and the parameter is only a pre-f2
-    // fallback.
+    // build with a deliberately NON-default bucket count and probe:
+    // before round 11 the probe hashed query terms with ITS OWN
+    // default (64) against a 7-bucket layout and silently returned
+    // incomplete results; now the n_buckets stats column is the only
+    // authority for the modulus and the probe takes no bucket
+    // parameter at all.
     val docs = Tables.documents(spark, SharedSpark.sfTiny)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     val idx = java.nio.file.Files
@@ -491,5 +491,118 @@ class RetrievalSpec extends AnyFunSuite {
       Retrieval.invIndexWrite(docs.filter(col("doc_id") >= 200), idxC,
         nBuckets = 64, mode = "append")
     }
+  }
+
+  test("format epoch: stats recording no or two hash moduli are refused loudly, files untouched") {
+    // an index's stats rows are its one record of the hash modulus;
+    // one whose rows record none (written before the column existed)
+    // or two cannot be probed or extended correctly, so every reader
+    // and writer refuses it with a "rebuild the index" error and
+    // leaves every file where it was
+    val docs = Tables.documents(spark, SharedSpark.sfTiny)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val queries = docs.filter(col("doc_id") % 97 === 0)
+      .orderBy("doc_id").limit(4)
+      .select(col("doc_id").as("query_id"),
+        explode(slice(col("toks"), 1, 4)).as("tok"))
+      .distinct()
+    val root = java.nio.file.Files.createTempDirectory("graft_inv_epoch").toString
+    val flat = s"$root/flat"
+    val stamped = s"$root/stamped"
+    Retrieval.invIndexWrite(docs, flat, nBuckets = 8)
+    assert(Retrieval.invIndexDelete(spark, flat,
+      docs.select("doc_id").filter(col("doc_id") % 5 === 2)) > 0L)
+    Retrieval.invIndexAppendBatch(docs, stamped, 0L, nBuckets = 8)
+    val fs = graft.ops.Sinks.fsFor(spark, root)
+    // every file under the test root (both indexes and their
+    // siblings: leases, park and tmp dirs) with its length and mtime
+    def snapshot(): Seq[(String, Long, Long)] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(root), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSeq.sorted
+    }
+    // hand-written stats replace the real ones, with no sentinel, so
+    // the append guard has to read the rows
+    def writeStats(idx: String, rows: org.apache.spark.sql.DataFrame): Unit = {
+      val st = s"$idx/stats"
+      fs.delete(new org.apache.hadoop.fs.Path(st), true)
+      if (idx == stamped)
+        rows.withColumn("__batch_id", lit(0L)).coalesce(1).write
+          .partitionBy("__batch_id").parquet(st)
+      else rows.coalesce(1).write.parquet(st)
+    }
+    def refused(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains("rebuild the index"), e.getMessage)
+    }
+    val defects = Seq(
+      "no modulus" -> Seq((250L, 5000L)).toDF("n_docs", "total_tokens"),
+      "two moduli" -> Seq((250L, 5000L, 64), (250L, 5000L, 7))
+        .toDF("n_docs", "total_tokens", "n_buckets"))
+    for ((defect, rows) <- defects) {
+      Seq(flat, stamped).foreach(writeStats(_, rows))
+      val before = snapshot()
+      withClue(defect) {
+        refused(Retrieval.bm25Indexed(spark, queries, flat).collect())
+        refused(Retrieval.invIndexWrite(docs.limit(0), flat, nBuckets = 8,
+          mode = "append"))
+        refused(Retrieval.invIndexAppendBatch(docs.limit(0), stamped, 1L,
+          nBuckets = 8))
+        refused(Retrieval.invIndexApplyDeletes(spark, flat))
+        assert(snapshot() === before)
+      }
+    }
+  }
+
+  test("concurrent first stamped appends pass the guard; a missing sentinel is rebuilt, never read as no modulus") {
+    val docs = Tables.documents(spark, SharedSpark.sfTiny)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val queries = docs.filter(col("doc_id") % 97 === 0)
+      .orderBy("doc_id").limit(8)
+      .select(col("doc_id").as("query_id"),
+        explode(slice(col("toks"), 1, 4)).as("tok"))
+      .distinct()
+    val direct = Retrieval.q104Bm25TopK(spark, SharedSpark.sfTiny)
+      .as[(Long, Long, Int, Long)].collect().toSeq
+    val root = java.nio.file.Files.createTempDirectory("graft_inv_first").toString
+    val fs = graft.ops.Sinks.fsFor(spark, root)
+    def path(s: String) = new org.apache.hadoop.fs.Path(s)
+    // the q109 shape: N first appends into a brand-new path from
+    // concurrent driver threads under ONE lease (8 buckets keep the
+    // file count small)
+    val idx = s"$root/idx"
+    graft.ops.Sinks.withWriterLease(spark, idx, "inv-index-append") {
+      graft.ops.Sinks.awaitAllOrThrow((0 until 4).map { b =>
+        graft.ops.Sinks.bFuture {
+          Retrieval.invIndexAppendBatchHeld(
+            docs.filter(col("doc_id") % 4 === b), idx, b.toLong, nBuckets = 8)
+        }
+      })
+    }
+    def probe() = Retrieval.bm25Indexed(spark, queries, idx)
+      .as[(Long, Long, Int, Long)].collect().toSeq
+    assert(probe() === direct)
+    // a first append that lists a sibling's in-flight write (its
+    // hidden staging dir, no stats row and no sentinel yet) sees no
+    // layout and passes
+    val idx2 = s"$root/idx2"
+    fs.mkdirs(path(s"$idx2/stats/.spark-staging-inflight"))
+    Retrieval.invIndexAppendBatch(docs.filter(col("doc_id") % 4 === 0), idx2, 0L,
+      nBuckets = 8)
+    // the sentinel is only a cache: without it the guard reads the
+    // recorded modulus from the stats rows — a replayed batch passes
+    // and the sentinel is back; a wrong modulus is still refused
+    val nb8 = path(s"$idx/stats/__nb_8")
+    fs.delete(nb8, false)
+    Retrieval.invIndexAppendBatch(docs.filter(col("doc_id") % 4 === 0), idx, 0L,
+      nBuckets = 8)
+    assert(fs.exists(nb8))
+    fs.delete(nb8, false)
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.invIndexAppendBatch(docs.limit(0), idx, 9L, nBuckets = 13)
+    }
+    assert(e.getMessage.contains("hashed with 8 buckets"), e.getMessage)
+    assert(probe() === direct)
   }
 }
