@@ -183,7 +183,7 @@ object BenchIncremental {
       java.nio.file.Paths.get("bench_incremental.json"), json + "\n")
     println(json)
     // the work dir holds a full LSH + IVF/PQ index per run — delete
-    // it once the record is written (the probeAndClean rule; repeated
+    // it once the record is written (repeated
     // bench passes would otherwise accumulate unbounded /tmp state)
     graft.ops.Sinks.fsFor(spark, work)
       .delete(new org.apache.hadoop.fs.Path(work), true)

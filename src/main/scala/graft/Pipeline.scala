@@ -743,30 +743,18 @@ object Pipeline {
     *
     * The DuckDB oracle recomputes all four families from the q125
     * stage CTEs, so any byte the release writers lose, duplicate or
-    * misroute moves some row. The written release is app-scoped and
-    * deleted after the result is localized (the q106 rule).
+    * misroute moves some row. The release is written to a
+    * [[ops.Scratch]] dir.
     *
     * Contract: exact dedup assumes `doc_id` is a key of `documents`
     * (the [[prepareCorpus]] contract, via q125's prepared corpus).
     */
   def q126CorpusRelease(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxDocs: Long = 5000, nShards: Int = 8): DataFrame = {
-    import spark.implicits._
     val (cleaned, rep) = preparedCorpusCached(spark, dir, maxDocs)
-    val outPath = s"${System.getProperty("java.io.tmpdir")}/graft_q126_release_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
-    val fs = ops.Sinks.fsFor(spark, outPath)
-    fs.delete(new org.apache.hadoop.fs.Path(outPath), true)
-    // a failed write or read-back must not orphan the release tree
-    // under /tmp (the q106 no-leak rule — localizeAndDelete only
-    // cleans up on the SUCCESS path); delete-and-rethrow keeps
-    // repeated bench/probe retries from accumulating tmp state
-    try releaseAndReadBack(spark, cleaned, reportCounters(rep), outPath,
-      nShards)
-    catch { case t: Throwable =>
-      fs.delete(new org.apache.hadoop.fs.Path(outPath), true); throw t
-    }
+    ops.Scratch.run(spark, "q126_release", dir)(outPath =>
+      releaseAndReadBack(spark, cleaned, reportCounters(rep), outPath,
+        nShards))
   }
 
   private def releaseAndReadBack(
@@ -809,11 +797,9 @@ object Pipeline {
       .select(lit("manifest").as("kind"), col("name"),
         lit(-1L).as("doc_id"), lit(-1).cast("int").as("shard"),
         col("value").cast("long").as("pos"))
-    ops.Sinks.localizeAndDelete(spark,
-      shardDocs.unionByName(holdoutDocs).unionByName(cardRows)
-        .unionByName(manifestRows)
-        .orderBy("kind", "name", "doc_id"),
-      outPath)
+    shardDocs.unionByName(holdoutDocs).unionByName(cardRows)
+      .unionByName(manifestRows)
+      .orderBy("kind", "name", "doc_id")
   }
 
   /** Per-stage lineage export — the Catalyst answer to the

@@ -282,12 +282,25 @@ object LlmOps {
     * shipped as both INT32 and INT64 — the [[longOf]] rule), shared by
     * every batch-arithmetic and id-shift site.
     */
-  private def docMaxId(docs: DataFrame): Long =
+  private[graft] def docMaxId(docs: DataFrame): Long =
     docs.agg(max("doc_id")).head().getAs[Any](0) match {
       case null => -1L
       case l: Long => l
       case i: Int => i.toLong
     }
+
+  /** `df` split into `n` ORDERED `idCol` ranges: batch `b` holds the
+    * ids with `id DIV bSize = b`, bSize = max(1, maxId DIV n + 1) — the
+    * oracle's batch arithmetic for every declared ingest. The caller
+    * passes `maxId` (−1 when empty), so a max an earlier job already
+    * computed is reused. A batch is a pushed-down filter over the scan,
+    * cheaper to recompute than to pin.
+    */
+  private[graft] def idRange(df: DataFrame, idCol: String, maxId: Long,
+      n: Int): Int => DataFrame = {
+    val bSize = math.max(1L, maxId / n + 1)
+    b => df.filter(expr(s"$idCol DIV $bSize") === b)
+  }
 
   /** The duplicate doc ids a batch would DROP — against the persisted
     * index when one exists, within itself otherwise: the admission
@@ -397,19 +410,9 @@ object LlmOps {
       nBatches: Int, threshold: Double, seal: Boolean,
       tag: String, reusePrefixMemo: Boolean = false): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val maxId = docMaxId(docs)
-    // same arithmetic as the oracle: bSize = max(doc_id) DIV n + 1
-    val bSize = math.max(1L, maxId / nBatches + 1)
-    // Keyed by data dir AND Spark application id: two sessions
-    // running the ingest over the same dir get disjoint index paths,
-    // so one can't delete/rewrite the index the other is mid-probe on
     // (within one session the ingest loop below is sequential by
-    // construction — batches are a driver-side fold over the index).
-    val indexPath = s"${Sinks.indexRoot}/graft_${tag}_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + spark.sparkContext.applicationId
-    // a fresh ingest run must not probe a previous run's index
-    val fs = Sinks.fsFor(spark, indexPath)
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
+    // construction — batches are a sequential fold over the index)
+    val batch = idRange(docs, "doc_id", docMaxId(docs), nBatches)
     // seal point: before the PENULTIMATE batch (see q119 scaladoc —
     // the final batch must read a flat append, not just write one)
     val sealAt = math.max(0, nBatches - 2)
@@ -417,49 +420,39 @@ object LlmOps {
         sealHere: Boolean): Seq[DataFrame] =
       (from until until).map { b =>
         if (sealHere && b == sealAt) dedupIndexSeal(spark, path)
-        // no checkpoint on the batch itself: it is a trivial
-        // pushed-down filter over the parquet scan, cheaper to
-        // recompute than to materialize (the streaming twin
-        // checkpoints because ITS batch comes from a source that must
-        // not be re-read)
-        val batch = docs.filter(expr(s"doc_id DIV $bSize") === b)
-        dedupIngestBatch(spark, batch, path, b.toLong, threshold,
+        dedupIngestBatch(spark, batch(b), path, b.toLong, threshold,
           flatAppend = sealHere && b >= sealAt)
           .select(col("doc_id"), lit(b.toLong).as("batch_id"))
       }
     val prefix = if (reusePrefixMemo && seal) sealAt else 0
-    val admitted =
-      if (prefix == 0) runBatches(indexPath, 0, nBatches, seal)
-      else {
-        // The pre-seal prefix (stamped appends, no seal yet) is
-        // IDENTICAL between q87 and q119 — a pure function of
-        // (corpus, split, threshold) whose path q87's oracle already
-        // gates. Memoize the post-prefix index state AND the
-        // prefix's admitted rows, clone the index per run, and pay
-        // only the declared seal + flat-append tail here (the
-        // q114/q120 memo-clone pattern, extended with per-batch
-        // outputs because this fold's RESULT accumulates per batch).
-        val memo = Memo.ensure(spark, Memo.DedupPrefix, dir,
-            dedupMemoParams(nBatches, prefix, threshold)) { staging =>
-          runBatches(s"$staging/index", 0, prefix, sealHere = false)
-            .reduce(_.unionByName(_))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/admitted")
+    Scratch.run(spark, s"${tag}_index", dir) { indexPath =>
+      val admitted =
+        if (prefix == 0) runBatches(indexPath, 0, nBatches, seal)
+        else {
+          // The pre-seal prefix (stamped appends, no seal yet) is
+          // IDENTICAL between q87 and q119 — a pure function of
+          // (corpus, split, threshold) whose path q87's oracle already
+          // gates. Memoize the post-prefix index state AND the
+          // prefix's admitted rows, clone the index per run, and pay
+          // only the declared seal + flat-append tail here (the
+          // q114/q120 memo-clone pattern, extended with per-batch
+          // outputs because this fold's RESULT accumulates per batch).
+          val memo = Memo.ensure(spark, Memo.DedupPrefix, dir,
+              dedupMemoParams(nBatches, prefix, threshold)) { staging =>
+            runBatches(s"$staging/index", 0, prefix, sealHere = false)
+              .reduce(_.unionByName(_))
+              .coalesce(1).write.mode("overwrite")
+              .parquet(s"$staging/admitted")
+          }
+          val fs = Sinks.fsFor(spark, indexPath)
+          if (fs.exists(new org.apache.hadoop.fs.Path(s"$memo/index")))
+            Sinks.copyDir(fs, s"$memo/index", indexPath,
+              spark.sparkContext.hadoopConfiguration)
+          spark.read.parquet(s"$memo/admitted") +:
+            runBatches(indexPath, prefix, nBatches, seal)
         }
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$memo/index")))
-          Sinks.copyDir(fs, s"$memo/index", indexPath,
-            spark.sparkContext.hadoopConfiguration)
-        spark.read.parquet(s"$memo/admitted") +:
-          runBatches(indexPath, prefix, nBatches, seal)
-      }
-    // materialize before deleting the throwaway index the plan reads
-    // (the q106 rule — without this every application leaks an
-    // index-sized tmp directory, since the app-id-suffixed path means
-    // the pre-run delete never targets a previous run's state)
-    val out = admitted.reduce(_.unionByName(_)).orderBy("doc_id")
-      .localCheckpoint()
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
-    out
+      admitted.reduce(_.unionByName(_)).orderBy("doc_id")
+    }
   }
 
   /** [[Memo.DedupPrefix]] params of the LSH index state + admitted
@@ -774,8 +767,7 @@ object LlmOps {
     * DuckDB oracle verbatim (the q89/q81 shared-oracle pattern), and
     * that oracle hash-gates the whole ingest loop: index layout,
     * Bloom prefilter, own-identity-excluding probe, replay-safe
-    * append. The built index is deleted once the result is
-    * materialized (the q106 rule — no tmp leak per application).
+    * append. The index lives in a [[Scratch]] dir.
     */
   def q94DedupParagraphIngest(spark: SparkSession, dir: String,
       nBatches: Int = 3, paraTokens: Int = 20): DataFrame = {
@@ -788,23 +780,13 @@ object LlmOps {
     // the loop previously paid one docMaxId job plus one paraBounds
     // job PER batch (round-18, guide §2.3 one-pass stats).
     val bounds = paraBounds(docs, paraTokens)
-    val bSize = math.max(1L, bounds._2 / nBatches + 1)
-    // per-invocation index path (dir + application id): two sessions
-    // on the same dir get disjoint ingest state (the q87 rule)
-    val indexPath = s"${Sinks.indexRoot}/graft_q94_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + spark.sparkContext.applicationId
-    val fs = Sinks.fsFor(spark, indexPath)
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
-    val cleaned = (0 until nBatches).map { b =>
-      val batch = docs.filter(expr(s"doc_id DIV $bSize") === b)
-      paraIngestBatch(spark, batch, indexPath, b.toLong, paraTokens,
-        Some(bounds))
+    val batch = idRange(docs, "doc_id", bounds._2, nBatches)
+    Scratch.run(spark, "q94_index", dir) { indexPath =>
+      (0 until nBatches).map { b =>
+        paraIngestBatch(spark, batch(b), indexPath, b.toLong, paraTokens,
+          Some(bounds))
+      }.reduce(_.unionByName(_)).orderBy("doc_id")
     }
-    // materialize before deleting the throwaway index the plan reads
-    val out = cleaned.reduce(_.unionByName(_)).orderBy("doc_id")
-      .localCheckpoint()
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
-    out
   }
 
   /** Incremental near-dup: check a NEW batch against the persisted
@@ -2491,7 +2473,7 @@ object LlmOps {
     val maxRow = emb.agg(max("vec_id")).head()
     if (maxRow.isNullAt(0))
       return emptyAnnResult(emb.select(col("vec_id"), col("embedding")))
-    val bSize = math.max(1L, longOf(maxRow.get(0)) / nBatches + 1)
+    val batch = idRange(emb, "vec_id", longOf(maxRow.get(0)), nBatches)
     // Post-seed stamped appends are independent (they only READ the
     // persisted quantizers and write disjoint `cell=*/__batch_id=<b>`
     // directories via per-job staging), so the ingest loop seeds
@@ -2510,53 +2492,46 @@ object LlmOps {
           new org.apache.hadoop.fs.Path(s"$path/centroids"))
         var b = 0
         while (b < nBatches && !seeded) {
-          annIndexAppendBatchHeld(spark,
-            emb.filter(expr(s"vec_id DIV $bSize") === b),
+          annIndexAppendBatchHeld(spark, batch(b),
             path, b.toLong, nCells, kmeansIters, m, kCodes, pqIters)
           b += 1
         }
         Sinks.awaitAllOrThrow((b until nBatches).map { i => Sinks.bFuture {
-          annIndexAppendBatchHeld(spark,
-            emb.filter(expr(s"vec_id DIV $bSize") === i),
+          annIndexAppendBatchHeld(spark, batch(i),
             path, i.toLong, nCells, kmeansIters, m, kCodes, pqIters)
         }})
       }
-    // app-scoped work path + per-run state (the q87/q106 rule)
-    val indexPath = s"${Sinks.indexRoot}/graft_${tag}_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
-    val fs = Sinks.fsFor(spark, indexPath)
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
-    if (!reuseIngestMemo) ingestInto(indexPath)
-    else {
-      // The stamped ingest bytes are a pure function of (corpus dir,
-      // params) and the ingest PATH is already q113's oracle gate —
-      // re-running it here would only re-pay q113's cost in front of
-      // this query's own declared lifecycle step. So the post-ingest
-      // index lives as a parameter-keyed memo (the q118/q61 pattern)
-      // and each run CLONES it before mutating: the seal/retrain
-      // still operates on — and the oracle still gates — exactly the
-      // bytes a fresh ingest would have produced (deterministic
-      // trainers, deterministic assignment), while the bench line
-      // times the lifecycle step itself.
-      // (keyed additionally by the batch split, which changes the
-      // stamp layout byte-for-byte)
-      val memo = Memo.ensure(spark, Memo.AnnStamped, dir,
-        s"_b${nBatches}_c${nCells}i${kmeansIters}m${m}k${kCodes}p${pqIters}")(
-        staging => ingestInto(staging.toString))
-      Sinks.copyDir(fs, memo, indexPath,
-        spark.sparkContext.hadoopConfiguration)
-    }
-    if (retrain)
-      annIndexRetrain(spark, indexPath, nCells, kmeansIters, m, kCodes, pqIters)
-    if (seal) annIndexSeal(spark, indexPath)
-    val n = emb.count()
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select("vec_id", "embedding")
-    val candFactor = (((n + k - 1) / k).toInt).max(1)
-    probeIndexAndClean(spark,
+    Scratch.run(spark, s"${tag}_index", dir) { indexPath =>
+      if (!reuseIngestMemo) ingestInto(indexPath)
+      else {
+        // The stamped ingest bytes are a pure function of (corpus dir,
+        // params) and the ingest PATH is already q113's oracle gate —
+        // re-running it here would only re-pay q113's cost in front of
+        // this query's own declared lifecycle step. So the post-ingest
+        // index lives as a parameter-keyed memo (the q118/q61 pattern)
+        // and each run CLONES it before mutating: the seal/retrain
+        // still operates on — and the oracle still gates — exactly the
+        // bytes a fresh ingest would have produced (deterministic
+        // trainers, deterministic assignment), while the bench line
+        // times the lifecycle step itself.
+        // (keyed additionally by the batch split, which changes the
+        // stamp layout byte-for-byte)
+        val memo = Memo.ensure(spark, Memo.AnnStamped, dir,
+          s"_b${nBatches}_c${nCells}i${kmeansIters}m${m}k${kCodes}p${pqIters}")(
+          staging => ingestInto(staging.toString))
+        Sinks.copyDir(Sinks.fsFor(spark, indexPath), memo, indexPath,
+          spark.sparkContext.hadoopConfiguration)
+      }
+      if (retrain)
+        annIndexRetrain(spark, indexPath, nCells, kmeansIters, m, kCodes, pqIters)
+      if (seal) annIndexSeal(spark, indexPath)
+      val n = emb.count()
+      val queries = emb.filter(col("vec_id") < nQueries)
+        .select("vec_id", "embedding")
+      val candFactor = (((n + k - 1) / k).toInt).max(1)
       annIncremental(spark, queries, indexPath, k = k, nProbe = nCells,
-        excludeQueryId = true, candFactor = candFactor), indexPath)
+        excludeQueryId = true, candFactor = candFactor)
+    }
   }
 
   /** Seal a streaming-ingested ([[annIndexAppendBatch]]) ANN index
@@ -3013,11 +2988,10 @@ object LlmOps {
     Memo.ensure(spark, Memo.DedupPrefix, dir,
         dedupMemoParams(nBatches, nBatches, threshold)) { staging =>
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val bSize = math.max(1L, docMaxId(docs) / nBatches + 1)
+      val batch = idRange(docs, "doc_id", docMaxId(docs), nBatches)
       (0 until nBatches).map { b =>
-        dedupIngestBatch(spark,
-          docs.filter(expr(s"doc_id DIV $bSize") === b),
-          s"$staging/index", b.toLong, threshold)
+        dedupIngestBatch(spark, batch(b), s"$staging/index", b.toLong,
+          threshold)
           .select(col("doc_id"), lit(b.toLong).as("batch_id"))
       }.reduce(_.unionByName(_)).coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/admitted")
@@ -3056,15 +3030,9 @@ object LlmOps {
       rem: Int = 2, shift: Long = 10000000L): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val memo = ensureDedupFullMemo(spark, dir, nBatches, threshold)
-    val indexPath = s"${Sinks.indexRoot}/graft_q131_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
-    val fs = Sinks.fsFor(spark, indexPath)
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    fs.delete(root, true)
-    try {
-      Sinks.copyDir(fs, s"$memo/index", indexPath,
-        spark.sparkContext.hadoopConfiguration)
+    Scratch.run(spark, "q131_index", dir) { indexPath =>
+      Sinks.copyDir(Sinks.fsFor(spark, indexPath), s"$memo/index",
+        indexPath, spark.sparkContext.hadoopConfiguration)
       val ingest = spark.read.parquet(s"$memo/admitted")
         .select(lit("ingest").as("kind"), col("doc_id"),
           col("batch_id").cast("long").as("batch_id"))
@@ -3090,8 +3058,8 @@ object LlmOps {
       dedupIndexApplyDeletes(spark, indexPath)
       val compact = admittedAs("compact")
       ingest.unionByName(tomb).unionByName(compact)
-        .orderBy("kind", "doc_id").localCheckpoint()
-    } finally fs.delete(root, true)
+        .orderBy("kind", "doc_id")
+    }
   }
 
   /** Ensure the full-ingest paragraph index memo for `dir`
@@ -3104,13 +3072,12 @@ object LlmOps {
     Memo.ensure(spark, Memo.ParaFull, dir,
         s"_b${nBatches}_w${paraTokens}") { staging =>
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val bSize = math.max(1L, docMaxId(docs) / nBatches + 1)
+      val batch = idRange(docs, "doc_id", docMaxId(docs), nBatches)
       (0 until nBatches).foreach { b =>
         // the index append inside is the eager action; the returned
         // cleaned frame is q94's declared output, not needed here
-        paraIngestBatch(spark,
-          docs.filter(expr(s"doc_id DIV $bSize") === b),
-          s"$staging/index", b.toLong, paraTokens)
+        paraIngestBatch(spark, batch(b), s"$staging/index", b.toLong,
+          paraTokens)
       }
     }
 
@@ -3132,15 +3099,9 @@ object LlmOps {
       rem: Int = 2, shift: Long = 10000000L): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val memo = ensureParaFullMemo(spark, dir, nBatches, paraTokens)
-    val indexPath = s"${Sinks.indexRoot}/graft_q132_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
-    val fs = Sinks.fsFor(spark, indexPath)
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    fs.delete(root, true)
-    try {
-      Sinks.copyDir(fs, s"$memo/index", indexPath,
-        spark.sparkContext.hadoopConfiguration)
+    Scratch.run(spark, "q132_index", dir) { indexPath =>
+      Sinks.copyDir(Sinks.fsFor(spark, indexPath), s"$memo/index",
+        indexPath, spark.sparkContext.hadoopConfiguration)
       paraIndexDelete(spark, indexPath,
         docs.select("doc_id").filter(pmod(col("doc_id"), lit(every)) === rem))
       // effective shift clears max(doc_id) — the q131 collision rule
@@ -3161,19 +3122,9 @@ object LlmOps {
       val tomb = cleanedAs("tomb")
       paraIndexApplyDeletes(spark, indexPath)
       val compact = cleanedAs("compact")
-      tomb.unionByName(compact).orderBy("kind", "doc_id").localCheckpoint()
-    } finally fs.delete(root, true)
+      tomb.unionByName(compact).orderBy("kind", "doc_id")
+    }
   }
-
-  /** Localize a BOUNDED probe result, then delete the demonstration
-    * index it read — [[Sinks.localizeAndDelete]] for the declared
-    * q111/q113 queries (library callers of
-    * [[annIndexWrite]]/[[annIncremental]] manage their own index
-    * lifecycle and are untouched).
-    */
-  private def probeIndexAndClean(spark: SparkSession, result: DataFrame,
-      indexPath: String): DataFrame =
-    Sinks.localizeAndDelete(spark, result, indexPath)
 
   private def readCentroids(spark: SparkSession,
       indexPath: String): Array[(Int, Array[Float])] =
@@ -3468,21 +3419,18 @@ object LlmOps {
       .localCheckpoint()
     val n = emb.count()
     if (n == 0) return emptyAnnResult(emb.select(col("vec_id"), col("embedding")))
-    // app-scoped throwaway index per run (the q87/q106 rule)
-    val indexPath = s"${Sinks.indexRoot}/graft_q111_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
     val (cents, cbPre) = cachedIndexFits(dir, emb, nCells, kmeansIters,
       m, kCodes, pqIters)
-    annIndexWrite(spark, emb.drop("nsq"), indexPath, nCells, kmeansIters,
-      centsPre = Some(cents), cbPre = cbPre)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select("vec_id", "embedding")
     // exhaustive probe (see scaladoc): all cells, lossless prefilter
     val candFactor = (((n + k - 1) / k).toInt).max(1)
-    probeIndexAndClean(spark,
+    Scratch.run(spark, "q111_index", dir) { indexPath =>
+      annIndexWrite(spark, emb.drop("nsq"), indexPath, nCells, kmeansIters,
+        centsPre = Some(cents), cbPre = cbPre)
       annIncremental(spark, queries, indexPath, k = k, nProbe = nCells,
-        excludeQueryId = true, candFactor = candFactor), indexPath)
+        excludeQueryId = true, candFactor = candFactor)
+    }
   }
 
   /** #118 Production-shaped ANN SERVING probe — the declared query

@@ -42,10 +42,6 @@ object Relational {
     * driver's gate proves the CSV write+read loses nothing.
     */
   def q02BulkLoadCsv(spark: SparkSession, dir: String): DataFrame = {
-    // app-scoped path (the q87 rule): concurrent JVMs — a test run
-    // next to a Verify next to a Bench — must not overwrite each
-    // other's staging directories mid-read
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_csv_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${spark.sparkContext.applicationId}"
     val src = Tables.events(spark, dir)
       .select("event_id", "ts_ms", "user_id", "event_type", "value", "props")
     // NULL and empty-string must stay distinct through the text
@@ -59,16 +55,18 @@ object Relational {
     // that is literally the two characters \N reads back as NULL —
     // lossless-for-arbitrary-strings needs an escaping text format
     // (the q51 JSON round-trip), not CSV.
-    src.write.mode("overwrite")
-      .option("header", "true").option("quoteAll", "true")
-      .option("nullValue", "\\N").option("emptyValue", "")
-      .csv(out)
-    spark.read
-      .schema("event_id LONG, ts_ms LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-      .option("header", "true").option("quote", "\"")
-      .option("nullValue", "\\N").option("emptyValue", "")
-      .csv(out)
-      .orderBy("event_id")
+    Scratch.run(spark, "csv", dir) { out =>
+      src.write.mode("overwrite")
+        .option("header", "true").option("quoteAll", "true")
+        .option("nullValue", "\\N").option("emptyValue", "")
+        .csv(out)
+      spark.read
+        .schema("event_id LONG, ts_ms LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+        .option("header", "true").option("quote", "\"")
+        .option("nullValue", "\\N").option("emptyValue", "")
+        .csv(out)
+        .orderBy("event_id")
+    }
   }
 
   /** #3 Partitioned parquet sink. Layout is chosen for partition
@@ -79,22 +77,22 @@ object Relational {
     * read loses no rows (the q109 sink-gate argument).
     */
   def q03SinkParquetPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    // app-scoped path (the q87 rule), as in q02
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_pq_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${spark.sparkContext.applicationId}"
     val staged = Tables.events(spark, dir)
       .withColumn("event_date", to_date(col("ts")))
-    staged
-      // Co-locate each date before the write: one file per partition
-      // dir instead of (#tasks x #dates) small files. At 100 TB use
-      // repartition(n, col) to bound per-date file size instead.
-      .repartition(col("event_date"))
-      .write.mode("overwrite").partitionBy("event_date").parquet(out)
-    // explicit schema on the read-back: an EMPTY source day writes no
-    // files at all, and schema inference on a file-less directory
-    // fails — the sink op must round-trip the empty partition too
-    spark.read.schema(staged.schema).parquet(out)
-      .groupBy("event_date").agg(count(lit(1)).as("n"))
-      .orderBy("event_date")
+    Scratch.run(spark, "pq", dir) { out =>
+      staged
+        // Co-locate each date before the write: one file per partition
+        // dir instead of (#tasks x #dates) small files. At 100 TB use
+        // repartition(n, col) to bound per-date file size instead.
+        .repartition(col("event_date"))
+        .write.mode("overwrite").partitionBy("event_date").parquet(out)
+      // explicit schema on the read-back: an EMPTY source day writes no
+      // files at all, and schema inference on a file-less directory
+      // fails — the sink op must round-trip the empty partition too
+      spark.read.schema(staged.schema).parquet(out)
+        .groupBy("event_date").agg(count(lit(1)).as("n"))
+        .orderBy("event_date")
+    }
   }
 
   /** #127 In-place compaction round-trip — [[graft.ops.Sinks.compact]]
@@ -111,38 +109,25 @@ object Relational {
     * file-count collapse itself is filesystem metadata (SinksSpec's
     * assertion); what the gate adds every round is the BYTES: the
     * swap-installed rewrite serves exactly the original rows. The
-    * app-scoped sink is deleted after localization (the q106 rule).
+    * sink is a [[Scratch]] dir.
     */
   def q127CompactRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_q127_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
     val staged = Tables.events(spark, dir)
       .withColumn("event_date", to_date(col("ts")))
-    // a failed compact or read-back must not orphan the events-sized
-    // sink (plus compact's __compact_tmp/old siblings) under /tmp —
-    // the q126 delete-and-rethrow rule
-    try {
+    Scratch.run(spark, "q127", dir) { out =>
       staged.repartition(8, col("event_id"))
         .write.mode("overwrite").partitionBy("event_date").parquet(out)
       // an all-empty source writes a file-less directory — nothing to
       // compact, and the rewrite's schema inference would fail where
       // zero rows is the correct answer (the q126 read-back rule)
       if (staged.limit(1).count() > 0)
-        graft.ops.Sinks.compact(spark, out, "event_date")
-      graft.ops.Sinks.localizeAndDelete(spark,
-        spark.read.schema(staged.schema).parquet(out)
-          .groupBy("event_date")
-          .agg(count(lit(1)).as("n"),
-            sum("event_id").as("sum_event_id"),
-            sum("user_id").as("sum_user_id"))
-          .orderBy("event_date"),
-        out)
-    } catch { case t: Throwable =>
-      val fs = graft.ops.Sinks.fsFor(spark, out)
-      Seq(out, out + "__compact_tmp", out + "__compact_old").foreach(p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true))
-      throw t
+        Sinks.compact(spark, out, "event_date")
+      spark.read.schema(staged.schema).parquet(out)
+        .groupBy("event_date")
+        .agg(count(lit(1)).as("n"),
+          sum("event_id").as("sum_event_id"),
+          sum("user_id").as("sum_user_id"))
+        .orderBy("event_date")
     }
   }
 
@@ -164,8 +149,7 @@ object Relational {
     * live directory. The oracle recomputes them from the raw slice:
     * a flip that points at a stale/partial version halves a count; a
     * prune that bites the live version empties one; a compaction that
-    * loses a row moves an id-sum. App-scoped root, deleted after
-    * localization (the q106 rule).
+    * loses a row moves an id-sum. The table root is a [[Scratch]] dir.
     *
     * Round-17 leg — PINNED-VERSION READ (time travel): after the v3
     * flip but before the prune, v1 (the superseded HALF state) is
@@ -179,11 +163,6 @@ object Relational {
     * declares (pin within the retention window).
     */
   def q128VersionedLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_q128_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
-    val fs = graft.ops.Sinks.fsFor(spark, root)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
     val staged = Tables.events(spark, dir)
       .filter(pmod(col("user_id"), lit(8)) === 0)
       .withColumn("event_date", to_date(col("ts")))
@@ -200,7 +179,7 @@ object Relational {
         .withColumn("n_v1", lit(0L))
         .withColumn("sum_event_id_v1", lit(-1L))
         .orderBy("event_date")
-    try {
+    Scratch.run(spark, "q128", dir) { root =>
       // v1: a superseded half-state (skipped if the half happens to
       // be empty — a file-less version cannot be count-validated)
       val half = staged.filter(pmod(col("event_id"), lit(2)) === 0)
@@ -227,22 +206,18 @@ object Relational {
       graft.ops.Sinks.pruneVersions(spark, root)
       val live = graft.ops.Sinks.liveVersion(spark, root).getOrElse(
         throw new java.io.FileNotFoundException(s"no MANIFEST under $root"))
-      graft.ops.Sinks.localizeAndDelete(spark,
-        spark.read.schema(staged.schema)
-          .parquet(graft.ops.Sinks.versionDir(root, live))
-          .groupBy("event_date")
-          .agg(count(lit(1)).as("n"),
-            sum("event_id").as("sum_event_id"),
-            sum("user_id").as("sum_user_id"))
-          .join(v1Agg, Seq("event_date"), "left")
-          .select(col("event_date"), col("n"), col("sum_event_id"),
-            col("sum_user_id"),
-            coalesce(col("n_v1"), lit(0L)).as("n_v1"),
-            coalesce(col("sum_event_id_v1"), lit(-1L)).as("sum_event_id_v1"))
-          .orderBy("event_date"),
-        root)
-    } catch { case t: Throwable =>
-      fs.delete(new org.apache.hadoop.fs.Path(root), true); throw t
+      spark.read.schema(staged.schema)
+        .parquet(graft.ops.Sinks.versionDir(root, live))
+        .groupBy("event_date")
+        .agg(count(lit(1)).as("n"),
+          sum("event_id").as("sum_event_id"),
+          sum("user_id").as("sum_user_id"))
+        .join(v1Agg, Seq("event_date"), "left")
+        .select(col("event_date"), col("n"), col("sum_event_id"),
+          col("sum_user_id"),
+          coalesce(col("n_v1"), lit(0L)).as("n_v1"),
+          coalesce(col("sum_event_id_v1"), lit(-1L)).as("sum_event_id_v1"))
+        .orderBy("event_date")
     }
   }
 
@@ -260,14 +235,9 @@ object Relational {
     * parity split: a NULL-fill that hits the wrong rows moves
     * n_valued; a lost pre-evolution row moves n; a miscast moves
     * sum_value_micro (micro-scaled long — the money-sum rule).
-    * App-scoped root, deleted after localization (the q128 rule).
+    * The table root is a [[Scratch]] dir.
     */
   def q136SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_q136_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
-    val fs = graft.ops.Sinks.fsFor(spark, root)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
     val staged = Tables.events(spark, dir)
       .filter(pmod(col("user_id"), lit(8)) === 1)
       .withColumn("event_date", to_date(col("ts")))
@@ -287,7 +257,7 @@ object Relational {
     // declared answer
     if (staged.limit(1).count() == 0)
       return shape(base.withColumn("value_micro", lit(null).cast("long")))
-    try {
+    Scratch.run(spark, "q136", dir) { root =>
       // v1 under the BASE schema (skipped when the half is empty — a
       // file-less version cannot be count-validated; the evolved
       // commit then initializes the table, which is the same public
@@ -299,12 +269,8 @@ object Relational {
         partCol = Some("event_date"))
       val live = graft.ops.Sinks.liveVersion(spark, root).getOrElse(
         throw new java.io.FileNotFoundException(s"no MANIFEST under $root"))
-      graft.ops.Sinks.localizeAndDelete(spark,
-        shape(spark.read.schema(evolved.schema)
-          .parquet(graft.ops.Sinks.versionDir(root, live))),
-        root)
-    } catch { case t: Throwable =>
-      fs.delete(new org.apache.hadoop.fs.Path(root), true); throw t
+      shape(spark.read.schema(evolved.schema)
+        .parquet(graft.ops.Sinks.versionDir(root, live)))
     }
   }
 
@@ -315,18 +281,18 @@ object Relational {
     * schemas, returns their join (row counts must agree).
     */
   def q51SourcesRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    // app-scoped path (the q87 rule), as in q02
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_src_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${spark.sparkContext.applicationId}"
     val src = Tables.events(spark, dir)
       .select("event_id", "ts_ms", "user_id", "event_type", "value")
-    src.write.mode("overwrite").json(s"$base/json")
-    src.write.mode("overwrite").orc(s"$base/orc")
     val schema = "event_id LONG, ts_ms LONG, user_id LONG, event_type STRING, value DOUBLE"
-    val j = spark.read.schema(schema).json(s"$base/json")
-      .groupBy("event_type").agg(count(lit(1)).as("n_json"))
-    val o = spark.read.schema(schema).orc(s"$base/orc")
-      .groupBy("event_type").agg(count(lit(1)).as("n_orc"))
-    j.join(o, "event_type").orderBy("event_type")
+    Scratch.run(spark, "src", dir) { base =>
+      src.write.mode("overwrite").json(s"$base/json")
+      src.write.mode("overwrite").orc(s"$base/orc")
+      val j = spark.read.schema(schema).json(s"$base/json")
+        .groupBy("event_type").agg(count(lit(1)).as("n_json"))
+      val o = spark.read.schema(schema).orc(s"$base/orc")
+        .groupBy("event_type").agg(count(lit(1)).as("n_orc"))
+      j.join(o, "event_type").orderBy("event_type")
+    }
   }
 
   // -- §2.2 projections / filters -----------------------------------

@@ -477,8 +477,8 @@ object Retrieval {
   }
 
   /** #106 Indexed BM25 — [[q104Bm25TopK]]'s exact semantics served
-    * from the persisted inverted index: build (overwrite) under an
-    * app-scoped tmp path, then probe with the same deterministic
+    * from the persisted inverted index: build it in a [[Scratch]]
+    * dir, then probe with the same deterministic
     * query set. Identical arithmetic over identical postings means
     * the result EQUALS q104 row-for-row — which is why this query
     * shares q104's oracle (the q89-shares-q81 structural-exactness
@@ -489,30 +489,11 @@ object Retrieval {
   def q106Bm25Indexed(spark: SparkSession, dir: String, nQueries: Int = 8,
       qLen: Int = 4, k: Int = 10): DataFrame = {
     val docs = tokenizedDocs(spark, dir)
-    // app-scoped path: two sessions on the same dir can't clobber
-    // each other's index mid-probe (the q87 rule)
-    val indexPath = s"${Sinks.indexRoot}/graft_q106_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
-    invIndexWrite(docs, indexPath)
-    probeAndClean(spark,
-      bm25Indexed(spark, querySetOf(docs, nQueries, qLen), indexPath, k = k),
-      indexPath)
+    Scratch.run(spark, "q106_index", dir) { indexPath =>
+      invIndexWrite(docs, indexPath)
+      bm25Indexed(spark, querySetOf(docs, nQueries, qLen), indexPath, k = k)
+    }
   }
-
-  /** Materialize a BOUNDED probe result (≤ nQueries·k rows by
-    * construction), then delete the demonstration index it read —
-    * the declared q106/q109 queries build a throwaway index per run,
-    * and without this a long-lived host accumulates one index-sized
-    * tmp directory per application (library users calling
-    * [[invIndexWrite]]/[[bm25Indexed]] directly manage their own
-    * index lifecycle and are untouched). Localizing the rows first is
-    * what makes the delete safe: the returned frame no longer reads
-    * the files.
-    */
-  private def probeAndClean(spark: SparkSession, result: DataFrame,
-      indexPath: String): DataFrame =
-    Sinks.localizeAndDelete(spark, result, indexPath)
 
   /** Batch-stamped incremental append to the inverted index — the
     * per-micro-batch core of [[graft.ops.Streaming.bm25IndexIngest]]
@@ -845,18 +826,8 @@ object Retrieval {
       seal: Boolean, tag: String,
       reuseIngestMemo: Boolean = false): DataFrame = {
     val docs = tokenizedDocs(spark, dir)
-    val maxId = docs.agg(max("doc_id")).head().getAs[Any](0) match {
-      case null => -1L
-      case l: Long => l
-      case i: Int => i.toLong
-    }
-    val bSize = math.max(1L, maxId / nBatches + 1)
-    // app-scoped path + per-run state (the q87/q106 rule)
-    val indexPath = s"${Sinks.indexRoot}/graft_${tag}_index_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      spark.sparkContext.applicationId
-    val fs = Sinks.fsFor(spark, indexPath)
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
+    val batch = LlmOps.idRange(docs, "doc_id", LlmOps.docMaxId(docs),
+      nBatches)
     // Every stamped append is a pure function of its batch (no probe,
     // no read-modify-write of shared state — the invIndexAppendBatch
     // contract says "batches may even be written CONCURRENTLY"), so
@@ -869,27 +840,26 @@ object Retrieval {
     def ingestInto(path: String): Unit =
       Sinks.withWriterLease(spark, path, "inv-index-append") {
         Sinks.awaitAllOrThrow((0 until nBatches).map { b => Sinks.bFuture {
-          invIndexAppendBatchHeld(
-            docs.filter(expr(s"doc_id DIV $bSize") === b), path, b.toLong)
+          invIndexAppendBatchHeld(batch(b), path, b.toLong)
         }})
       }
-    if (!reuseIngestMemo) ingestInto(indexPath)
-    else {
-      // The stamped ingest is a pure function of (corpus, split) that
-      // q109's oracle already gates — memoize its bytes once
-      // (parameter-keyed, staged install) and CLONE per run, so this
-      // query's bench line times its own declared lifecycle step (the
-      // seal), not a re-payment of q109's ingest (the
-      // LlmOps.simsearchIngestProbe memo-clone pattern).
-      val memo = Memo.ensure(spark, Memo.Bm25Stamped, dir,
-        s"_b$nBatches")(staging => ingestInto(staging.toString))
-      Sinks.copyDir(fs, memo, indexPath,
-        spark.sparkContext.hadoopConfiguration)
+    Scratch.run(spark, s"${tag}_index", dir) { indexPath =>
+      if (!reuseIngestMemo) ingestInto(indexPath)
+      else {
+        // The stamped ingest is a pure function of (corpus, split) that
+        // q109's oracle already gates — memoize its bytes once
+        // (parameter-keyed, staged install) and CLONE per run, so this
+        // query's bench line times its own declared lifecycle step (the
+        // seal), not a re-payment of q109's ingest (the
+        // LlmOps.simsearchIngestProbe memo-clone pattern).
+        val memo = Memo.ensure(spark, Memo.Bm25Stamped, dir,
+          s"_b$nBatches")(staging => ingestInto(staging.toString))
+        Sinks.copyDir(Sinks.fsFor(spark, indexPath), memo, indexPath,
+          spark.sparkContext.hadoopConfiguration)
+      }
+      if (seal) invIndexSeal(spark, indexPath)
+      bm25Indexed(spark, querySetOf(docs, nQueries, qLen), indexPath, k = k)
     }
-    if (seal) invIndexSeal(spark, indexPath)
-    probeAndClean(spark,
-      bm25Indexed(spark, querySetOf(docs, nQueries, qLen), indexPath, k = k),
-      indexPath)
   }
 
   /** #129 Index DELETION propagation — the retention/takedown
@@ -922,14 +892,6 @@ object Retrieval {
       rem: Int = 2): DataFrame = {
     val docs = tokenizedDocs(spark, dir)
     val queries = querySetOf(docs, nQueries, qLen).localCheckpoint()
-    val sanitized = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val app = spark.sparkContext.applicationId
-    val tmpRoot = Sinks.indexRoot
-    val lexPath = s"$tmpRoot/graft_q129_lex_${sanitized}_$app"
-    val annPath = s"$tmpRoot/graft_q129_ann_${sanitized}_$app"
-    val fs = Sinks.fsFor(spark, lexPath)
-    def pp(s: String) = new org.apache.hadoop.fs.Path(s)
-    Seq(lexPath, annPath).foreach(x => fs.delete(pp(x), true))
     // each probe is localized (bounded nQueries·k rows) BEFORE the
     // next lifecycle step mutates the files it read
     def shaped(kind: String, df: DataFrame, rankCol: String,
@@ -938,73 +900,66 @@ object Retrieval {
         col(rankCol).cast("int").as("rank"),
         col(idCol).cast("long").as("id"),
         scoreCol.cast("double").as("score")).localCheckpoint()
-    try {
-      // The two family lifecycles are fully INDEPENDENT (disjoint
-      // paths, disjoint reads), so they run as CONCURRENT job chains
-      // from two driver threads — standard Spark multi-threaded job
-      // submission; each chain's steps stay sequential within itself.
-      // Wall cost is max(lex, ann) instead of their sum — the same
-      // concurrency a production takedown job would use.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val lexF = Sinks.bFuture {
-        Sinks.copyDir(fs, ensureInvIndexMemo(spark, dir), lexPath,
-          spark.sparkContext.hadoopConfiguration)
-        invIndexDelete(spark, lexPath,
-          Tables.documents(spark, dir).select("doc_id")
-            .filter(pmod(col("doc_id"), lit(every)) === rem))
-        val tomb = shaped("bm25_tomb",
-          bm25Indexed(spark, queries, lexPath, k = k), "rank", "doc_id",
-          col("score_micro"))
-        invIndexApplyDeletes(spark, lexPath)
-        Seq(tomb, shaped("bm25_compact",
-          bm25Indexed(spark, queries, lexPath, k = k), "rank", "doc_id",
-          col("score_micro")))
-      }
-      val annF = Sinks.bFuture {
-        LlmOps.ensureServingIndexMemo(spark, dir) match {
-          case None => Nil // empty embedding corpus: no dense rows
-          case Some(memo) =>
-            Sinks.copyDir(fs, memo, annPath,
-              spark.sparkContext.hadoopConfiguration)
-            val emb = Tables.embeddings(spark, dir)
-            LlmOps.annIndexDelete(spark, annPath, emb.select("vec_id")
-              .filter(pmod(col("vec_id"), lit(every)) === rem))
-            val n = emb.count()
-            val annQueries = emb.filter(col("vec_id") < nQueries)
-              .select("vec_id", "embedding")
-            // exhaustive probe (the q111 argument): every cell,
-            // lossless prefilter — the result must equal brute cosine
-            // over the surviving vectors
-            val candFactor = (((n + kAnn - 1) / kAnn).toInt).max(1)
-            def probe() = LlmOps.annIncremental(spark, annQueries,
-              annPath, k = kAnn, nProbe = 16, excludeQueryId = true,
-              candFactor = candFactor)
-            val tomb = shaped("ann_tomb", probe(), "rnk", "neighbor_id",
-              col("cos"))
-            LlmOps.annIndexApplyDeletes(spark, annPath)
-            Seq(tomb, shaped("ann_compact", probe(), "rnk",
-              "neighbor_id", col("cos")))
+    Scratch.run(spark, "q129_lex", dir) { lexPath =>
+      Scratch.run(spark, "q129_ann", dir) { annPath =>
+        val fs = Sinks.fsFor(spark, lexPath)
+        // The two family lifecycles are fully INDEPENDENT (disjoint
+        // paths, disjoint reads), so they run as CONCURRENT job chains
+        // from two threads — standard Spark multi-threaded job
+        // submission; each chain's steps stay sequential within itself.
+        // Wall cost is max(lex, ann) instead of their sum — the same
+        // concurrency a production takedown job would use.
+        val lexF = Sinks.bFuture {
+          Sinks.copyDir(fs, ensureInvIndexMemo(spark, dir), lexPath,
+            spark.sparkContext.hadoopConfiguration)
+          invIndexDelete(spark, lexPath,
+            Tables.documents(spark, dir).select("doc_id")
+              .filter(pmod(col("doc_id"), lit(every)) === rem))
+          val tomb = shaped("bm25_tomb",
+            bm25Indexed(spark, queries, lexPath, k = k), "rank", "doc_id",
+            col("score_micro"))
+          invIndexApplyDeletes(spark, lexPath)
+          Seq(tomb, shaped("bm25_compact",
+            bm25Indexed(spark, queries, lexPath, k = k), "rank", "doc_id",
+            col("score_micro")))
         }
+        val annF = Sinks.bFuture {
+          LlmOps.ensureServingIndexMemo(spark, dir) match {
+            case None => Nil // empty embedding corpus: no dense rows
+            case Some(memo) =>
+              Sinks.copyDir(fs, memo, annPath,
+                spark.sparkContext.hadoopConfiguration)
+              val emb = Tables.embeddings(spark, dir)
+              LlmOps.annIndexDelete(spark, annPath, emb.select("vec_id")
+                .filter(pmod(col("vec_id"), lit(every)) === rem))
+              val n = emb.count()
+              val annQueries = emb.filter(col("vec_id") < nQueries)
+                .select("vec_id", "embedding")
+              // exhaustive probe (the q111 argument): every cell,
+              // lossless prefilter — the result must equal brute cosine
+              // over the surviving vectors
+              val candFactor = (((n + kAnn - 1) / kAnn).toInt).max(1)
+              def probe() = LlmOps.annIncremental(spark, annQueries,
+                annPath, k = kAnn, nProbe = 16, excludeQueryId = true,
+                candFactor = candFactor)
+              val tomb = shaped("ann_tomb", probe(), "rnk", "neighbor_id",
+                col("cos"))
+              LlmOps.annIndexApplyDeletes(spark, annPath)
+              Seq(tomb, shaped("ann_compact", probe(), "rnk",
+                "neighbor_id", col("cos")))
+          }
+        }
+        // Await BOTH chains to COMPLETION (not zipWith, which fails
+        // fast): if one chain throws while the sibling is mid-write, the
+        // scratch cleanup would delete the roots under an in-flight
+        // parquet write — which can recreate the deleted directory and
+        // orphan scratch on exactly the failure path the cleanup exists
+        // for. The first failure is rethrown only after both chains have
+        // stopped touching the roots.
+        Sinks.awaitAllOrThrow(Seq(lexF, annF))
+        Seq(lexF, annF).flatMap(_.value.get.get).reduce(_.unionByName(_))
+          .orderBy("kind", "query_id", "rank")
       }
-      // Await BOTH chains to COMPLETION (not zipWith, which fails
-      // fast): if one chain throws while the sibling is mid-write, the
-      // finally below would delete the tmp roots under an in-flight
-      // parquet write — which can recreate the deleted directory and
-      // orphan tmp state on exactly the failure path the finally
-      // exists to clean (round-13 review). Rethrow the first failure
-      // only after both chains have stopped touching the roots.
-      import scala.concurrent.duration.Duration
-      import scala.util.{Failure, Success}
-      val done = Seq(lexF, annF).map(f => Await.ready(f, Duration.Inf).value.get)
-      val parts = done.map {
-        case Success(p) => p
-        case Failure(e) => throw e
-      }.reduce(_ ++ _)
-      parts.reduce(_.unionByName(_))
-        .orderBy("kind", "query_id", "rank")
-    } finally {
-      Seq(lexPath, annPath).foreach(x => fs.delete(pp(x), true))
     }
   }
 

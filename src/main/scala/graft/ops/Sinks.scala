@@ -94,38 +94,32 @@ object Sinks {
     */
   def compact(spark: SparkSession, path: String, partCol: String,
       targetRowsPerFile: Long = 1000000L): Unit = {
+    val fs = fsFor(spark, path)
+    val dst = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
+    // a kill between the two renames of an earlier compact left the
+    // live data parked: restore it before reading
+    recoverInterrupted(fs, dst, "__compact_old", "__compact_tmp")
     val df = spark.read.parquet(path)
-    val tmp = path.stripSuffix("/") + "__compact_tmp"
+    val tmp = new org.apache.hadoop.fs.Path(dst.toString + "__compact_tmp")
     // rewriteBudgeted already reduced its pinned counts to the total
     // — reuse it rather than re-running the aggregate
-    val expected = rewriteBudgeted(df, partCol, targetRowsPerFile, tmp)
+    val expected = rewriteBudgeted(df, partCol, targetRowsPerFile,
+      tmp.toString)
     // Validate BEFORE the swap: the rewrite must carry every row (the
     // counts total is the independent expectation). A bad rewrite
     // aborts here with the live directory untouched — the swap below
     // only ever installs a verified dataset.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-    val actual = spark.read.parquet(tmp).count()
+    val actual = spark.read.parquet(tmp.toString).count()
     if (actual != expected) {
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      fs.delete(tmp, true)
       throw new java.io.IOException(
         s"compact: rewrite has $actual rows, expected $expected; aborted with $path untouched")
     }
-    // two-step swap, old data parked until the verified rename lands —
-    // never delete-then-hope. On object stores renames are copies and
-    // readers can observe the gap between the two renames below: use
-    // [[compactVersioned]] there, which replaces the swap with a
-    // versioned prefix + one-file manifest flip.
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val trash = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__compact_old")
-    fs.delete(trash, true)
-    if (!fs.rename(dst, trash))
-      throw new java.io.IOException(s"compact: could not park $dst")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      fs.rename(trash, dst) // restore
-      throw new java.io.IOException(s"compact: rename $tmp -> $dst failed; original restored")
-    }
-    fs.delete(trash, true)
+    // On object stores renames are copies and readers can observe the
+    // gap between the swap's two renames: use [[compactVersioned]]
+    // there, which replaces the swap with a versioned prefix + one-file
+    // manifest flip.
+    swapInstall(fs, tmp, dst, "__compact_old")
   }
 
   /** Shared rewrite core for [[compact]]/[[compactVersioned]]: write
@@ -203,22 +197,6 @@ object Sinks {
     fs.listStatus(p).iterator.flatMap { st =>
       if (st.isDirectory) filesUnder(fs, st.getPath) else Iterator.single(st)
     }
-
-  /** Materialize a BOUNDED result, then delete the directory it
-    * read — the shared localize-then-delete discipline of the
-    * declared throwaway-index queries (q106/q109's probeAndClean,
-    * q111/q113's ANN twin): localizing the rows first is what makes
-    * the delete safe, since the returned frame no longer reads the
-    * files. One definition so the cleanup discipline cannot diverge
-    * between the lexical and vector index families.
-    */
-  private[graft] def localizeAndDelete(spark: SparkSession,
-      result: DataFrame, path: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val rows = result.collect().toSeq
-    fsFor(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
-    spark.createDataFrame(rows.asJava, result.schema)
-  }
 
   /** Pin `df` in executor storage with its row count riding the pin's
     * own job: an eager `localCheckpoint()` over `df.observe(count(*)
@@ -306,25 +284,16 @@ object Sinks {
   private[graft] def sealBatchStampedImpl(spark: SparkSession, path: String,
       leadingPart: Option[String], afterSnapshot: () => Unit): Boolean = {
     val fs = fsFor(spark, path)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val staleTrash = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__seal_old")
-    val staleTmp = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__seal_tmp")
+    val dst = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
+    val staleTrash = new org.apache.hadoop.fs.Path(dst.toString + "__seal_old")
+    val staleTmp = new org.apache.hadoop.fs.Path(dst.toString + "__seal_tmp")
     // Crash recovery at entry — the documented "call unconditionally"
     // contract must also CLEAN UP after an interrupted earlier seal:
-    //  - killed between park and install: dst is gone, the live data
-    //    sits in __seal_old — restore it and fall through to re-seal;
-    //  - killed after install but before the trash delete: dst is the
-    //    sealed relation, __seal_old is a full pre-seal copy — without
-    //    this delete the early already-flat return below would leave
-    //    that copy (exactly the storage the seal exists to remove)
-    //    parked forever.
-    if (!fs.exists(dst) && fs.exists(staleTrash)) {
-      if (!fs.rename(staleTrash, dst))
-        throw new java.io.IOException(
-          s"seal: could not restore interrupted seal from $staleTrash")
-    }
-    fs.delete(staleTrash, true)
-    fs.delete(staleTmp, true)
+    // killed between park and install, the live data is restored and
+    // re-sealed; killed after install, the parked pre-seal copy goes
+    // (the early already-flat return below would otherwise leave it
+    // parked forever).
+    recoverInterrupted(fs, dst, "__seal_old", "__seal_tmp")
     if (!fs.exists(dst)) return false
     // snapshot the stamped-directory set BEFORE the read pins its file
     // listing — compared again after the park to catch a concurrent
@@ -333,17 +302,11 @@ object Sinks {
     // (conservative abort); the reverse ordering would let it slip
     // into neither the rewrite nor the guard.
     val preBatches = listBatchDirs(fs, dst)
-    // a directory with no data files (an ingest whose every batch was
-    // empty writes _SUCCESS but no parts) has nothing to seal — it is
-    // trivially flat, not an error
-    val df =
-      try spark.read.parquet(path)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("UNABLE_TO_INFER_SCHEMA") =>
-          return false
-      }
-    if (!df.columns.contains("__batch_id")) return false
+    // no `__batch_id=` dir: already flat, or file-less (an ingest whose
+    // every batch was empty writes _SUCCESS but no parts) — nothing to
+    // seal, decided from the listing without a Spark job
+    if (preBatches.isEmpty) return false
+    val df = spark.read.parquet(path)
     afterSnapshot()
     // ONE evaluation (the commitVersion observe rule, round-18): the
     // expectation count rides the rewrite job as an Observation — the
@@ -368,6 +331,7 @@ object Sinks {
         s"seal: rewrite has $actual rows, expected $expected; aborted with $path untouched")
     }
     val trash = staleTrash
+    fenced(fs, staleTmp, s"seal($dst)")
     if (!fs.rename(dst, trash))
       throw new java.io.IOException(s"seal: could not park $dst")
     // Concurrent-append check AFTER the park: the parked directory is
@@ -402,18 +366,14 @@ object Sinks {
     * (two driver threads submitting Spark jobs — the q129 concurrency
     * note): each [[sealBatchStamped]] swap owns its own directory, so
     * nothing is shared between the seals and wall cost is the slowest
-    * one instead of the sum. Exceptions from either seal propagate.
+    * one instead of the sum. Exceptions from either seal propagate,
+    * once every seal has stopped ([[awaitAllOrThrow]]).
     */
   def sealBatchStampedAll(spark: SparkSession,
-      targets: Seq[(String, Option[String])]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(targets.map { case (path, part) =>
-        bFuture { sealBatchStamped(spark, path, part) }
-      }), scala.concurrent.duration.Duration.Inf)
-    ()
-  }
+      targets: Seq[(String, Option[String])]): Unit =
+    awaitAllOrThrow(targets.map { case (path, part) =>
+      bFuture { sealBatchStamped(spark, path, part) }
+    })
 
   /** Park-rename install of a fully-built replacement directory —
     * the [[compact]]/[[sealBatchStamped]] swap discipline factored for
@@ -428,9 +388,7 @@ object Sinks {
   private[graft] def swapInstall(fs: org.apache.hadoop.fs.FileSystem,
       tmp: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
       trashSuffix: String): Unit = {
-    // fencing: a holder displaced by a TTL reclaim must fail loud
-    // HERE, before the park-rename mutates shared state
-    assertLeasesStillOwned(s"swapInstall($dst)")
+    fenced(fs, tmp, s"swapInstall($dst)")
     val trash = new org.apache.hadoop.fs.Path(dst.toString + trashSuffix)
     fs.delete(trash, true)
     if (!fs.rename(dst, trash))
@@ -442,6 +400,16 @@ object Sinks {
     }
     fs.delete(trash, true)
   }
+
+  /** Fencing before a park-rename: a holder displaced by a TTL reclaim
+    * fails loud HERE, before the swap mutates shared state, and drops
+    * its validated rewrite `tmp` so the displaced attempt leaves the
+    * index as it found it.
+    */
+  private def fenced(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: org.apache.hadoop.fs.Path, context: String): Unit =
+    try assertLeasesStillOwned(context)
+    catch { case e: IllegalStateException => fs.delete(tmp, true); throw e }
 
   /** Entry-time crash recovery for [[swapInstall]] users: if `dst` is
     * gone but its parked copy exists (killed between the two renames),
@@ -468,10 +436,19 @@ object Sinks {
     * submitted from code already running on the pool (the hybrid
     * probe's lex/ann legs) can starve or deadlock on low-core
     * machines (round-14 advice).
+    *
+    * The body runs with the SUBMITTING thread's held leases, so a
+    * chain forked under a lease re-enters it and its destructive steps
+    * are fenced ([[assertLeasesStillOwned]]) like the holder's own.
     */
   private[graft] def bFuture[T](body: => T): scala.concurrent.Future[T] = {
     import scala.concurrent.ExecutionContext.Implicits.global
-    scala.concurrent.Future(scala.concurrent.blocking(body))
+    val held = heldLeases.get
+    scala.concurrent.Future(scala.concurrent.blocking {
+      val prev = heldLeases.get
+      heldLeases.set(held)
+      try body finally heldLeases.set(prev)
+    })
   }
 
   /** Barrier over concurrent driver-thread job chains that rethrows
@@ -498,11 +475,11 @@ object Sinks {
     * that must survive reboots and be shared across drivers cannot
     * live under a JVM's tmpdir.
     *
-    * Scope note: the DECLARED demo queries also build app-scoped
-    * throwaway indexes (`graft_*_index_<dir>_<appId>`) under this
-    * root; they delete themselves per run, but a killed JVM orphans
-    * its tree (and, rarely, a `__lease`/`__reclaim` file) with no GC
-    * beyond tmpdir's OS cleanup — a deployment pointing this at
+    * Scope note: the DECLARED queries' per-run scratch dirs
+    * ([[Scratch]], `graft_<tag>_<dir>_<appId>`) live under this root
+    * too. [[Scratch.run]] removes each one on success and on failure;
+    * only a killed JVM orphans its tree (and, rarely, a
+    * `__lease`/`__reclaim` file). A deployment pointing this at
     * durable storage runs its REAL indexes at caller-chosen paths
     * through the library APIs and should sweep `*_<appId>` debris of
     * dead applications on its own retention schedule (app-scoped

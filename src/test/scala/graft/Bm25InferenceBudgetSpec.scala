@@ -16,12 +16,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * files" description; a declared-schema read of a many-bucket
   * postings dir still pays them).
   *
-  * Out of scope, still inferring (ROADMAP item 1(b)): the shared
-  * `Sinks.sealBatchStamped` reads that `invIndexSeal` runs for postings
-  * and stats (`parquet at Sinks.scala`). The spec requires the census
-  * to see exactly those two, which also shows the predicate matches:
-  * any other inferring read, in Retrieval.scala or in a shared helper
-  * it calls (such as `Sinks.readParquetIfAny`), fails it.
+  * The seal runs after the apply that flattened the index, so
+  * `Sinks.sealBatchStamped` decides "nothing to seal" from its
+  * directory listing and reads nothing. Any inferring read, in
+  * Retrieval.scala or in a shared helper it calls (such as
+  * `Sinks.readParquetIfAny`), fails the spec. One deliberate inferring
+  * read of a file the spec wrote is the positive control: the census
+  * must see exactly that one, which shows the predicate matches.
   */
 class Bm25InferenceBudgetSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -44,6 +45,8 @@ class Bm25InferenceBudgetSpec extends AnyFunSuite {
     val flat = s"$root/flat"
     val idx = s"$root/stamped"
     val fs = Sinks.fsFor(spark, root)
+    val control = s"$root/control"
+    spark.range(1).write.parquet(control)
     // 8 buckets, not the default 64: a tenth of the files, same reads
     val nb = 8
     val c = JobCensus.census(spark) {
@@ -59,14 +62,13 @@ class Bm25InferenceBudgetSpec extends AnyFunSuite {
       // rows (the cache-rebuild read), so that read is budgeted too
       fs.delete(new org.apache.hadoop.fs.Path(s"$idx/stats/__nb_$nb"), false)
       Retrieval.invIndexWrite(docs.limit(0), idx, nb, mode = "append")
+      spark.read.parquet(control)
     }
     val (retrieval, other) = c.jobs.filter(inference)
       .partition(_.site.contains(" at Retrieval.scala:"))
     assert(retrieval.isEmpty,
       s"schema-inference jobs in Retrieval.scala:\n${retrieval.mkString("\n")}")
-    // the only inference left is the seal's two shared Sinks reads
-    // (postings, stats); seeing them also shows the predicate matches
     assert(other.map(_.site.replaceAll(""":\d+$""", "")) ===
-      Seq.fill(2)("parquet at Sinks.scala"), other.mkString("\n"))
+      Seq("parquet at Bm25InferenceBudgetSpec.scala"), other.mkString("\n"))
   }
 }

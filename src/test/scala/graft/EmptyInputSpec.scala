@@ -40,6 +40,14 @@ class EmptyInputSpec extends AnyFunSuite {
     materialize(dst, emptied = tables.toSet)
     val failures = sweep(dst, SparkEntry.queries)
     assert(failures.isEmpty, s"queries failing on empty input:\n${failures.mkString("\n")}")
+    // and no query leaves its per-run scratch behind
+    val key = dst.replaceAll("[^a-zA-Z0-9]", "_")
+    val app = spark.sparkContext.applicationId
+    val leaked = Seq(graft.ops.Sinks.indexRoot,
+        System.getProperty("java.io.tmpdir").stripSuffix("/")).distinct
+      .flatMap(r => Option(new java.io.File(r).list()).getOrElse(Array.empty[String]))
+      .filter(n => n.contains(key) && n.endsWith(s"_$app"))
+    assert(leaked.isEmpty, s"per-run scratch left behind: ${leaked.mkString(", ")}")
   }
 
   test("mixed-table queries survive ONE empty side (docs without embeddings and vice versa)") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The single-writer lease over index/sink roots
   * ([[ops.Sinks.withWriterLease]]) under the races it exists for —
@@ -244,6 +245,48 @@ class LeaseRaceSpec extends AnyFunSuite {
     // the flip never happened: readers still see v1, intact
     assert(graft.ops.Sinks.liveVersion(spark, root) === Some(1L))
     assert(graft.ops.Sinks.readVersioned(spark, root).count() === 1L)
+  }
+
+  test("a displaced holder's concurrent apply and seal chains fail loud, index untouched") {
+    // apply-deletes rewrites and seal swaps run on pool threads
+    // (Sinks.bFuture); the fence must reach them too, not only the
+    // holder's own thread
+    val base = java.nio.file.Files.createTempDirectory("graft_lease_fence_chains").toString
+    val dedup = s"$base/dedup"
+    graft.ops.LlmOps.dedupIndexWrite(
+      Seq((1L, text("a")), (2L, text("b"))).toDF("doc_id", "text"), dedup)
+    graft.ops.LlmOps.dedupIndexDelete(spark, dedup, Seq(1L).toDF("doc_id"))
+    val ann = s"$base/ann"
+    val emb = Tables.embeddings(spark, SharedSpark.sfTiny)
+      .filter(col("vec_id") < 64)
+    (0 until 2).foreach(b => graft.ops.LlmOps.annIndexAppendBatch(spark,
+      emb.filter(col("vec_id") % 2 === b), ann, b.toLong, nCells = 4))
+    def files(root: String): Map[String, (Long, Long)] = {
+      val r = java.nio.file.Paths.get(root)
+      val walk = java.nio.file.Files.walk(r)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => r.relativize(p).toString ->
+          ((java.nio.file.Files.size(p), p.toFile.lastModified())))
+        .toMap
+      finally walk.close()
+    }
+    Seq[(String, () => Any)](
+      dedup -> (() => graft.ops.LlmOps.dedupIndexApplyDeletes(spark, dedup)),
+      ann -> (() => graft.ops.LlmOps.annIndexSeal(spark, ann))
+    ).foreach { case (root, op) =>
+      val before = files(root)
+      val e = intercept[IllegalStateException] {
+        graft.ops.Sinks.withWriterLease(spark, root, "long-lifecycle-op") {
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(graft.ops.Sinks.leasePathOf(root)),
+            "op=usurper pid=999999 host=other-host since=now".getBytes("UTF-8"))
+          op()
+        }
+      }
+      assert(e.getMessage.contains("no longer ours"), e.getMessage)
+      assert(files(root) === before, root)
+    }
+    assert(files(dedup).keys.exists(_.startsWith("deletes/")))
   }
 
   test("TTL unset keeps the fail-loud default: an aged foreign lease still blocks") {

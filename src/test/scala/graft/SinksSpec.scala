@@ -78,6 +78,25 @@ class SinksSpec extends AnyFunSuite {
     assert(filesPerDay().values.forall(_ === 1), filesPerDay().toString)
   }
 
+  test("compact recovers a swap killed between its two renames, then compacts") {
+    val path = tmpDir("compact_crash")
+    spark.range(400)
+      .withColumn("day", when(col("id") % 2 === 0, "2024-01-01").otherwise("2024-01-02"))
+      .repartition(8).write.partitionBy("day").parquet(path)
+    // the crash state: the live data parked, a partial rewrite beside it
+    val old = java.nio.file.Paths.get(path + "__compact_old")
+    val tmp = java.nio.file.Paths.get(path + "__compact_tmp")
+    java.nio.file.Files.move(java.nio.file.Paths.get(path), old)
+    java.nio.file.Files.createDirectories(tmp.resolve("day=2024-01-01"))
+    Sinks.compact(spark, path, "day", targetRowsPerFile = 1000L)
+    assert(spark.read.parquet(path).count() === 400L)
+    assert(!java.nio.file.Files.exists(old) && !java.nio.file.Files.exists(tmp))
+    val files = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("day=")).toSeq
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(files === Seq(1, 1), files)
+  }
+
   test("compactVersioned: old-manifest reader stays complete across the commit") {
     val root = tmpDir("versioned")
     // fragmented initial commit: 20 tasks x 2 days
