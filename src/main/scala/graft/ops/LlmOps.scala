@@ -181,7 +181,7 @@ object LlmOps {
     val withHs = shingleHashSets(docs).localCheckpoint()
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    awaitAllOrThrow(Seq(
+    Sinks.awaitAllOrThrow(Seq(
       Sinks.bFuture {
         bandBuckets(withHs)
           // one writer task per band (the ANN cell-write note: AQE would
@@ -219,7 +219,7 @@ object LlmOps {
     val withHs = shingleHashSets(docs)
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    awaitAllOrThrow(Seq(
+    Sinks.awaitAllOrThrow(Seq(
       Sinks.bFuture {
         bandBuckets(withHs)
           .withColumn("__batch_id", lit(batchId))
@@ -332,7 +332,7 @@ object LlmOps {
     val withHs = shingleHashSets(docs)
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    awaitAllOrThrow(Seq(
+    Sinks.awaitAllOrThrow(Seq(
       Sinks.bFuture {
         bandBuckets(withHs)
           .repartition(16, col("band"))
@@ -2615,20 +2615,21 @@ object LlmOps {
       else Some(spark.read.parquet(cents).count().toInt)
     }
     applyIdDeletes(spark, indexPath, "vec_id", Seq("vectors", "codes"), {
-      case (_, kept) =>
-        val nCells = centroidCells
-          .getOrElse(kept.select("cell").distinct().count().toInt).max(1)
+      case (_, kept0) =>
+        // without centroids/ the kept rows are read twice (their
+        // distinct cells, then the write): lazy pin, materialized by
+        // the first read
+        val (kept, nCells) = centroidCells match {
+          case Some(n) => (kept0, n.max(1))
+          case None =>
+            val pinned = kept0.localCheckpoint(false)
+            (pinned, pinned.select("cell").distinct().count().toInt.max(1))
+        }
         (kept.repartition(nCells, col("cell")),
           Seq("cell") ++
             (if (kept.columns.contains("__batch_id")) Seq("__batch_id") else Nil))
     })
   }
-
-  /** [[Sinks.awaitAllOrThrow]] — re-exported for this file's many
-    * concurrent write/fit sites.
-    */
-  private def awaitAllOrThrow(fs: Seq[scala.concurrent.Future[_]]): Unit =
-    Sinks.awaitAllOrThrow(fs)
 
   /** Quantizer retrain rotation for a persisted ANN index — the drift
     * fix for long-lived ingest: [[annIndexAppendBatch]] seeds
@@ -2656,8 +2657,8 @@ object LlmOps {
     * [[annIndexWrite]] rebuild, which loses the stamp/replay story.)
     *
     * Crash safety: the rotated index is built COMPLETE (centroids,
-    * pq, codes, vectors) under a tmp root, count-validated against
-    * the live vector count, and swapped as ONE directory — a probe
+    * pq, codes, vectors) under a tmp root, its vectors/ validated by
+    * [[Sinks.writeChecked]], and swapped as ONE directory — a probe
     * never observes new codes under old centroids or vice versa; a
     * crash between the two renames is repaired at the next call's
     * entry recovery ([[Sinks.recoverInterrupted]]), and the probe's
@@ -2685,24 +2686,24 @@ object LlmOps {
     val fs = Sinks.fsFor(spark, indexPath)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val root = p(indexPath)
-    Sinks.recoverInterrupted(fs, root, "__retrain_old", "__retrain_tmp")
+    Sinks.recoverInterrupted(fs, root, "retrain")
     if (!fs.exists(p(s"$indexPath/centroids")) ||
         !fs.exists(p(s"$indexPath/vectors"))) return // unseeded: nothing to rotate
     val hadPq = fs.exists(p(s"$indexPath/pq"))
     // the accumulated corpus, quantizer-fit-ready (embedding + nsq
-    // ride in the stored rows); pinned — the Lloyd loops, the
-    // assignment pass and the count validation all replay it, and the
-    // source directory is about to be parked away
+    // ride in the stored rows); pinned — the Lloyd loops and the
+    // assignment pass both replay it, and the source directory is
+    // about to be parked away
     // pending tombstones (q129) are applied BY the rotation: the
     // rewrite excludes them and the whole-root swap below installs a
     // root without deletes/ — rotation doubles as compaction
     // lazy pin + count = one materializing job (round-18, §2.6); the
-    // Lloyd loops, assignment pass and validation all read the pin
+    // count sizes the trainer sample
     val vecs = minusAnnDeletes(spark, indexPath,
       spark.read.parquet(s"$indexPath/vectors")).localCheckpoint(false)
     val stamped = vecs.columns.contains("__batch_id")
-    val expected = vecs.count()
-    if (expected == 0) return
+    val n = vecs.count()
+    if (n == 0) return
     // ONE shared training-sample pass for BOTH quantizer refits
     // (round-13 verdict): the bounded sample is collected once (the
     // count is already paid above, so no extra count job) and both
@@ -2712,19 +2713,19 @@ object LlmOps {
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
     val sample = collectTrainerSample(
-      trainerSampleOf(vecs, expected, TrainerSampleCap))
+      trainerSampleOf(vecs, n, TrainerSampleCap))
     val cents = kmeansRefine(sample, nCells, kmeansIters)
     val cb =
       if (!hadPq || sample.isEmpty) None
       else pqRefine(sample, m, kCodes, sample.head._2.length / m, pqIters)
-    val tmp = indexPath + "__retrain_tmp"
+    val tmp = Sinks.swapTmp(root, "retrain").toString
     import spark.implicits._
     // the quantizer-state writes depend only on the fits; the two big
     // rewrites below depend on `assigned` — so the tiny writes overlap
     // the assignment checkpoint, then codes/ and vectors/ (disjoint
     // subdirs, shared pinned input) rewrite concurrently. On any
-    // failure the tmp root is left for the next entry's
-    // recoverInterrupted, same as the sequential form.
+    // failure the whole tmp root is dropped once every chain has
+    // stopped, so no half-written sibling outlives a refused vectors/.
     val quantF = Sinks.bFuture {
       cents.toSeq.toDF("cid", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
@@ -2750,19 +2751,12 @@ object LlmOps {
       }
     }
     val vecsF = Sinks.bFuture {
-      assigned
-        .repartition(nCells, col("cell"))
-        .write.mode("overwrite").partitionBy(partCols: _*).parquet(s"$tmp/vectors")
+      Sinks.writeChecked(spark, assigned.repartition(nCells, col("cell")),
+        s"$tmp/vectors", "annIndexRetrain", indexPath)(
+        _.write.mode("overwrite").partitionBy(partCols: _*).parquet(_))
     }
-    awaitAllOrThrow(Seq(quantF, codesF, vecsF))
-    val actual = spark.read.parquet(s"$tmp/vectors").count()
-    if (actual != expected) {
-      fs.delete(p(tmp), true)
-      throw new java.io.IOException(
-        s"annIndexRetrain: rewrite has $actual vectors, expected $expected; " +
-          s"aborted with $indexPath untouched")
-    }
-    Sinks.swapInstall(fs, p(tmp), root, "__retrain_old")
+    Sinks.awaitAllOrDiscard(fs, tmp, Seq(quantF, codesF, vecsF))
+    Sinks.swapInstall(fs, root, "retrain")
   }
 
   /** Seal a streaming-ingested ([[dedupIndexAppendBatch]]) LSH dedup
@@ -2847,8 +2841,7 @@ object LlmOps {
       shape: (String, DataFrame) => (DataFrame, Seq[String])): Boolean = {
     val fs = Sinks.fsFor(spark, indexPath)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    subs.foreach(sub =>
-      Sinks.recoverInterrupted(fs, p(s"$indexPath/$sub"), "__del_old", "__del_tmp"))
+    subs.foreach(sub => Sinks.recoverInterrupted(fs, p(s"$indexPath/$sub"), "del"))
     val delsOpt = readIdDeletes(spark, indexPath, keyCol)
     if (delsOpt.isEmpty) return false
     // pinned lazily: the count() is the materializing job (it computes
@@ -2866,33 +2859,19 @@ object LlmOps {
     // exactly the tombstoned rows) and the next apply finishes the
     // rest, the same window the sequential form had between two swaps.
     Sinks.awaitAllOrThrow(subs.map { sub => Sinks.bFuture {
-      val dir = s"$indexPath/$sub"
-      if (fs.exists(p(dir))) {
-        val df = Sinks.readParquetIfAny(spark, dir)
-          .orNull // file-less: nothing to rewrite
-        if (df != null) {
-          // lazy pin + count = one materializing job (round-18, §2.6)
-          val kept = df.join(dels, Seq(keyCol), "left_anti")
-            .localCheckpoint(false)
-          val expected = kept.count()
-          if (expected == 0) {
-            fs.delete(p(dir), true) // emptied: missing dir, not file-less
-          } else {
-            val tmp = dir + "__del_tmp"
-            val (shaped, partCols) = shape(sub, kept)
-            (if (partCols.isEmpty) shaped.write
-             else shaped.write.partitionBy(partCols: _*))
-              .mode("overwrite").parquet(tmp)
-            val actual = spark.read.parquet(tmp).count()
-            if (actual != expected) {
-              fs.delete(p(tmp), true)
-              throw new java.io.IOException(
-                s"applyIdDeletes: rewrite of $sub has $actual rows, " +
-                  s"expected $expected; aborted with $indexPath untouched")
-            }
-            Sinks.swapInstall(fs, p(tmp), p(dir), "__del_old")
-          }
+      val dir = p(s"$indexPath/$sub")
+      // missing or file-less: nothing to rewrite
+      Sinks.readParquetIfAny(spark, dir.toString).foreach { df =>
+        val tmp = Sinks.swapTmp(dir, "del")
+        val (shaped, partCols) =
+          shape(sub, df.join(dels, Seq(keyCol), "left_anti"))
+        val n = Sinks.writeChecked(spark, shaped, tmp.toString,
+            s"applyIdDeletes($sub)", indexPath) { (d, out) =>
+          (if (partCols.isEmpty) d.write else d.write.partitionBy(partCols: _*))
+            .mode("overwrite").parquet(out)
         }
+        if (n > 0) Sinks.swapInstall(fs, dir, "del")
+        else { fs.delete(tmp, true); fs.delete(dir, true) } // emptied: missing dir, not file-less
       }
     }})
     fs.delete(p(s"$indexPath/deletes"), true)
@@ -2969,11 +2948,13 @@ object LlmOps {
     */
   def paraIndexApplyDeletes(spark: SparkSession, indexPath: String): Boolean =
     Sinks.withWriterLease(spark, indexPath, "para-index-apply") {
-    applyIdDeletes(spark, indexPath, "doc_id", Seq("paras"), { case (_, kept) =>
-      if (kept.columns.contains("__batch_id")) {
+    applyIdDeletes(spark, indexPath, "doc_id", Seq("paras"), { case (_, kept0) =>
+      if (kept0.columns.contains("__batch_id")) {
+        // read twice (distinct batches, then the write): lazy pin
+        val kept = kept0.localCheckpoint(false)
         val nb = kept.select("__batch_id").distinct().count().toInt.max(1)
         (kept.repartition(nb, col("__batch_id")), Seq("__batch_id"))
-      } else (kept, Nil)
+      } else (kept0, Nil)
     })
     }
 

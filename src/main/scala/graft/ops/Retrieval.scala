@@ -696,7 +696,7 @@ object Retrieval {
     val fs = Sinks.fsFor(spark, indexPath)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val root = p(indexPath)
-    Sinks.recoverInterrupted(fs, root, "__del_old", "__del_tmp")
+    Sinks.recoverInterrupted(fs, root, "del")
     val delsOpt = readInvDeletes(spark, indexPath)
     if (delsOpt.isEmpty) return false
     // pinned lazily (root is parked below): count() materializes every
@@ -704,55 +704,37 @@ object Retrieval {
     val dels = delsOpt.get.localCheckpoint(false)
     if (dels.count() == 0) { fs.delete(p(s"$indexPath/deletes"), true); return false }
     val posted = readPostings(spark, indexPath)
-    // Two INDEPENDENT bounded reads — the tombstone-corrected stats
-    // with the modulus (one aggregate, see indexStats), and the
-    // surviving-postings pin + count — share no state beyond the
-    // already-materialized `dels` checkpoint, so they run as
-    // concurrent driver-thread jobs and the step pays max(), not
-    // sum() (round-18, guide §2.6 — the q129 fixed-latency cut).
-    // NULL-dl tombstones are resolved against the postings that exist
-    // NOW (delete-before-ingest docs appended since the delete must be
-    // subtracted from the compacted stats — see resolveTombstoneDl).
-    val kept = posted.map(
-      _.drop("__batch_id").join(dels.select("doc_id"), Seq("doc_id"), "left_anti")
-        .localCheckpoint(false)) // lazy pin: its count() materializes it
-    val stF = Sinks.bFuture {
-      indexStats(spark, indexPath,
-        Some(resolveTombstoneDl(spark, indexPath, dels, posted)))
-    }
-    val keptF = Sinks.bFuture { kept.map(_.count()).getOrElse(0L) }
-    Sinks.awaitAllOrThrow(Seq(stF, keptF))
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    val (nDocs, total, modulus) = Await.result(stF, Duration.Inf)
-    val expected = Await.result(keptF, Duration.Inf)
+    // the tombstone-corrected stats with the modulus (one aggregate,
+    // see indexStats); NULL-dl tombstones are resolved against the
+    // postings that exist NOW (delete-before-ingest docs appended
+    // since the delete must be subtracted from the compacted stats —
+    // see resolveTombstoneDl)
+    val (nDocs, total, modulus) = indexStats(spark, indexPath,
+      Some(resolveTombstoneDl(spark, indexPath, dels, posted)))
     val nb = modulus.getOrElse(throw new IllegalStateException(
       s"invIndexApplyDeletes: $indexPath has no stats row; rebuild the index"))
-    val tmp = indexPath + "__del_tmp"
-    if (expected > 0) {
-      kept.get.repartition(nb, col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$tmp/postings")
-    }
-    // the rewrite's validation count and the 1-row stats write are
+    val tmp = Sinks.swapTmp(root, "del").toString
+    // the checked postings rewrite and the 1-row stats write are
     // independent — concurrent, max() not sum() (round-18, §2.6). On
-    // a count mismatch the whole tmp root is discarded exactly as
-    // before, so the concurrently-written stats never survive.
-    val actF = Sinks.bFuture {
-      if (expected > 0) postingsAt(spark, s"$tmp/postings").count() else 0L
+    // any failure the whole tmp root is discarded once both stopped,
+    // so the concurrently-written stats never survive.
+    val postF = Sinks.bFuture {
+      posted.foreach { ps =>
+        val kept = ps.drop("__batch_id")
+          .join(dels.select("doc_id"), Seq("doc_id"), "left_anti")
+        val n = Sinks.writeChecked(spark, kept.repartition(nb, col("tb")),
+          s"$tmp/postings", "invIndexApplyDeletes", indexPath)(
+          _.write.mode("overwrite").partitionBy("tb").parquet(_))
+        // emptied index: install a postings-less root
+        if (n == 0) fs.delete(p(s"$tmp/postings"), true)
+      }
     }
     val stWrF = Sinks.bFuture {
       Seq((nDocs, total, nb)).toDF("n_docs", "total_tokens", "n_buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/stats")
     }
-    Sinks.awaitAllOrThrow(Seq(actF, stWrF))
-    val actual = Await.result(actF, Duration.Inf)
-    if (expected > 0 && actual != expected) {
-      fs.delete(p(tmp), true)
-      throw new java.io.IOException(
-        s"invIndexApplyDeletes: rewrite has $actual postings, expected " +
-          s"$expected; aborted with $indexPath untouched")
-    }
-    Sinks.swapInstall(fs, p(tmp), root, "__del_old")
+    Sinks.awaitAllOrDiscard(fs, tmp, Seq(postF, stWrF))
+    Sinks.swapInstall(fs, root, "del")
     ensureModulusSentinel(spark, indexPath, nb)
     true
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalProperties
 
 /** Production sink patterns for the 100 TB append-only log — the
   * operational half of the reference's load step (upload_to_snowflake
@@ -98,51 +99,36 @@ object Sinks {
     val dst = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
     // a kill between the two renames of an earlier compact left the
     // live data parked: restore it before reading
-    recoverInterrupted(fs, dst, "__compact_old", "__compact_tmp")
-    val df = spark.read.parquet(path)
-    val tmp = new org.apache.hadoop.fs.Path(dst.toString + "__compact_tmp")
-    // rewriteBudgeted already reduced its pinned counts to the total
-    // — reuse it rather than re-running the aggregate
-    val expected = rewriteBudgeted(df, partCol, targetRowsPerFile,
-      tmp.toString)
-    // Validate BEFORE the swap: the rewrite must carry every row (the
-    // counts total is the independent expectation). A bad rewrite
-    // aborts here with the live directory untouched — the swap below
-    // only ever installs a verified dataset.
-    val actual = spark.read.parquet(tmp.toString).count()
-    if (actual != expected) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"compact: rewrite has $actual rows, expected $expected; aborted with $path untouched")
-    }
+    recoverInterrupted(fs, dst, "compact")
+    writeChecked(spark,
+      budgeted(spark.read.parquet(path), partCol, targetRowsPerFile),
+      swapTmp(dst, "compact").toString, "compact", path)(
+      _.write.mode("overwrite").partitionBy(partCol).parquet(_))
     // On object stores renames are copies and readers can observe the
     // gap between the swap's two renames: use [[compactVersioned]]
     // there, which replaces the swap with a versioned prefix + one-file
     // manifest flip.
-    swapInstall(fs, tmp, dst, "__compact_old")
+    swapInstall(fs, dst, "compact")
   }
 
-  /** Shared rewrite core for [[compact]]/[[compactVersioned]]: write
-    * `df` to `dest` with per-partition file budgets (ceil(cnt /
-    * target) files each, skewed hot partitions get more, sparse ones
-    * get one). Returns the total row count from the pinned counts —
-    * the validation expectation. The bucket MUST be a deterministic
-    * function of row content (never monotonically_increasing_id): a
-    * partial map-stage retry re-evaluates it, and a value that
-    * changes across attempts duplicates/drops rows in the rewrite.
-    * Hash only hash-supported columns (maps are unhashable since
-    * Spark 3 — same guard as Skew.rowSalt).
+  /** Shared rewrite plan for [[compact]]/[[compactVersioned]]: `df`
+    * shuffled into per-partition file budgets (ceil(cnt / target)
+    * files each, skewed hot partitions get more, sparse ones get one),
+    * to be written partitioned by `partCol`. The bucket MUST be a
+    * deterministic function of row content (never
+    * monotonically_increasing_id): a partial map-stage retry
+    * re-evaluates it, and a value that changes across attempts
+    * duplicates/drops rows in the rewrite. Hash only hash-supported
+    * columns (maps are unhashable since Spark 3 — same guard as
+    * Skew.rowSalt).
     */
-  private def rewriteBudgeted(df: DataFrame, partCol: String,
-      targetRowsPerFile: Long, dest: String): Long = {
-    // localCheckpoint: the counts feed the broadcast join side AND the
-    // pre-commit validation — pin them so the source is scanned once
-    // for counts, not once per consumer (an extra pass at lake scale)
-    // lazy pin: the broadcast build inside the write below is the
+  private def budgeted(df: DataFrame, partCol: String,
+      targetRowsPerFile: Long): DataFrame = {
+    // lazy pin: the broadcast build inside the write is the
     // materializing pass (a broadcast collects every partition), so
     // the pin costs no separate checkpoint job (round-18, §2.6)
-    val counts = df.groupBy(partCol).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+    val counts = df.groupBy(col(partCol).as("__part"))
+      .agg(count(lit(1)).as("cnt")).localCheckpoint(false)
     val hashCols = df.schema.fields
       .filter(f => Skew.hashSupported(f.dataType)).map(f => col(f.name))
     // refuse rather than degrade: a constant bucket would collapse
@@ -154,15 +140,53 @@ object Sinks {
       "compact: no hash-supported columns to bucket rows by " +
         "(all-map schema?) — project a hashable key column first")
     val rowHash = xxhash64(hashCols.toIndexedSeq: _*)
-    df.join(broadcast(counts), partCol)
+    // null-safe: a NULL partition value (__HIVE_DEFAULT_PARTITION__)
+    // is a group too, and an equi-join would drop its rows before the
+    // checked write could count them
+    df.join(broadcast(counts), col(partCol) <=> col("__part"))
       .withColumn("__files", ceil(col("cnt").cast("double") / lit(targetRowsPerFile.toDouble)).cast("int"))
       .withColumn("__bucket", pmod(rowHash, col("__files").cast("long")))
       .repartition(df.sparkSession.sparkContext.defaultParallelism,
         col(partCol), col("__bucket"))
-      .drop("cnt", "__files", "__bucket")
-      .write.mode("overwrite").partitionBy(partCol).parquet(dest)
-    // coalesce: sum over zero partitions is NULL (empty dataset)
-    counts.agg(coalesce(sum(col("cnt")), lit(0L))).first().getLong(0)
+      .drop("__part", "cnt", "__files", "__bucket")
+  }
+
+  /** The one checked rewrite: write `df` to `out` with `write`, then
+    * show that the written files hold every row the write consumed
+    * before any caller installs them. The row count rides the write
+    * as an Observation placed directly on the frame handed to
+    * `write` (above any shuffle, so AQE never prunes it), and `out`
+    * is read back with `df`'s own schema, so the check runs no
+    * schema-inference job. On a mismatch `out` is deleted and an
+    * IOException names `op` and the untouched `target`. Returns the
+    * row count; 0 is the caller's "emptied" signal.
+    */
+  private[graft] def writeChecked(spark: SparkSession, df: DataFrame,
+      out: String, op: String, target: String)(
+      write: (DataFrame, String) => Unit): Long = {
+    val (counted, obs) = observed(df)
+    write(counted, out)
+    afterCheckedWrite.get()(out)
+    val expected = observedCount(obs)
+    val actual = spark.read.schema(df.schema).parquet(out).count()
+    if (actual != expected) {
+      fsFor(spark, out).delete(new org.apache.hadoop.fs.Path(out), true)
+      throw new java.io.IOException(
+        s"$op: rewrite has $actual rows, expected $expected; aborted with $target untouched")
+    }
+    actual
+  }
+
+  /** Test seam: runs on each [[writeChecked]] output between its write
+    * and its read-back — a spec plants a lost part file here to show
+    * the check refuses the install. A ThreadLocal, so it reaches only
+    * the sites that call [[writeChecked]] on the setting thread
+    * ([[compact]], [[compactVersioned]], [[commitVersion]], the seal);
+    * the [[bFuture]] sites (retrain, the id and BM25 apply-deletes)
+    * never see it.
+    */
+  private[graft] val afterCheckedWrite = new ThreadLocal[String => Unit] {
+    override def initialValue(): String => Unit = _ => ()
   }
 
   // -- versioned table (object-store-safe commit) -------------------
@@ -285,15 +309,13 @@ object Sinks {
       leadingPart: Option[String], afterSnapshot: () => Unit): Boolean = {
     val fs = fsFor(spark, path)
     val dst = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
-    val staleTrash = new org.apache.hadoop.fs.Path(dst.toString + "__seal_old")
-    val staleTmp = new org.apache.hadoop.fs.Path(dst.toString + "__seal_tmp")
     // Crash recovery at entry — the documented "call unconditionally"
     // contract must also CLEAN UP after an interrupted earlier seal:
     // killed between park and install, the live data is restored and
     // re-sealed; killed after install, the parked pre-seal copy goes
     // (the early already-flat return below would otherwise leave it
     // parked forever).
-    recoverInterrupted(fs, dst, "__seal_old", "__seal_tmp")
+    recoverInterrupted(fs, dst, "seal")
     if (!fs.exists(dst)) return false
     // snapshot the stamped-directory set BEFORE the read pins its file
     // listing — compared again after the park to catch a concurrent
@@ -306,58 +328,33 @@ object Sinks {
     // every batch was empty writes _SUCCESS but no parts) — nothing to
     // seal, decided from the listing without a Spark job
     if (preBatches.isEmpty) return false
-    val df = spark.read.parquet(path)
+    val flat = spark.read.parquet(path).drop("__batch_id")
     afterSnapshot()
-    // ONE evaluation (the commitVersion observe rule, round-18): the
-    // expectation count rides the rewrite job as an Observation — the
-    // counted rows are by construction the rows the rewrite consumed,
-    // the source is only renamed away AFTER the write completes, and
-    // the seal sheds the round-17 pin job + count job. The validation
-    // below still re-reads the WRITTEN bytes.
-    val obs = org.apache.spark.sql.Observation()
-    val flat = df.drop("__batch_id").observe(obs, count(lit(1)).as("n"))
-    val tmp = staleTmp.toString
-    leadingPart match {
-      case Some(c) => flat
-        .repartition(spark.sparkContext.defaultParallelism, col(c))
-        .write.mode("overwrite").partitionBy(c).parquet(tmp)
-      case None => flat.write.mode("overwrite").parquet(tmp)
+    // the source is only renamed away AFTER the checked write completes
+    writeChecked(spark,
+      leadingPart.fold(flat)(c =>
+        flat.repartition(spark.sparkContext.defaultParallelism, col(c))),
+      swapTmp(dst, "seal").toString, "seal", path) { (d, out) =>
+      leadingPart.fold(d.write)(d.write.partitionBy(_))
+        .mode("overwrite").parquet(out)
     }
-    val expected = obs.get("n").asInstanceOf[Long]
-    val actual = spark.read.parquet(tmp).count()
-    if (actual != expected) {
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      throw new java.io.IOException(
-        s"seal: rewrite has $actual rows, expected $expected; aborted with $path untouched")
-    }
-    val trash = staleTrash
-    fenced(fs, staleTmp, s"seal($dst)")
-    if (!fs.rename(dst, trash))
-      throw new java.io.IOException(s"seal: could not park $dst")
     // Concurrent-append check AFTER the park: the parked directory is
     // the final pre-install state, so any __batch_id= directory that
     // appeared (or changed) since the pre-rewrite snapshot is a batch
     // the flat rewrite does NOT contain — installing would silently
-    // discard it. Restore and abort instead; the caller re-seals once
-    // ingest is actually quiesced.
-    val postBatches = listBatchDirs(fs, trash)
-    if (postBatches != preBatches) {
-      if (!fs.rename(trash, dst))
-        throw new java.io.IOException(
-          s"seal: concurrent append detected AND restore of $dst failed — data parked at $trash")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      val changed = (postBatches.keySet ++ preBatches.keySet)
-        .filter(k => preBatches.get(k) != postBatches.get(k))
-      throw new IllegalStateException(
-        s"seal: stamped batches changed under $path during the seal " +
-          s"(${changed.mkString(", ")}) — " +
-          "quiesce ingest before sealing; original restored")
-    }
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      fs.rename(trash, dst) // restore
-      throw new java.io.IOException(s"seal: rename $tmp -> $dst failed; original restored")
-    }
-    fs.delete(trash, true)
+    // discard it. The swap restores and rethrows instead; the caller
+    // re-seals once ingest is actually quiesced.
+    swapInstall(fs, dst, "seal", afterPark = { parked =>
+      val postBatches = listBatchDirs(fs, parked)
+      if (postBatches != preBatches) {
+        val changed = (postBatches.keySet ++ preBatches.keySet)
+          .filter(k => preBatches.get(k) != postBatches.get(k))
+        throw new IllegalStateException(
+          s"seal: stamped batches changed under $path during the seal " +
+            s"(${changed.mkString(", ")}) — " +
+            "quiesce ingest before sealing; original restored")
+      }
+    })
     true
   }
 
@@ -375,58 +372,72 @@ object Sinks {
       bFuture { sealBatchStamped(spark, path, part) }
     })
 
-  /** Park-rename install of a fully-built replacement directory —
-    * the [[compact]]/[[sealBatchStamped]] swap discipline factored for
-    * whole-directory replacements (the ANN retrain rotation): park the
-    * live `dst` at `dst<trashSuffix>`, rename `tmp` into place,
-    * restore on failure, drop the parked copy on success. The caller
-    * has already VALIDATED tmp (count checks) — this helper only owns
-    * the never-half-written swap. Callers should also run
-    * [[recoverInterrupted]] at entry so a crash between the two
-    * renames is repaired on the next attempt.
+  /** The validated rewrite of swap `tag` is written here, beside
+    * `dst`: `<dst>__<tag>_tmp`.
+    */
+  private[graft] def swapTmp(dst: org.apache.hadoop.fs.Path,
+      tag: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"${dst}__${tag}_tmp")
+
+  /** Where swap `tag` parks the live `dst`: `<dst>__<tag>_old`. */
+  private def swapOld(dst: org.apache.hadoop.fs.Path,
+      tag: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"${dst}__${tag}_old")
+
+  /** Park-rename install of the fully-built replacement at
+    * [[swapTmp]]`(dst, tag)` — the one swap of every whole-directory
+    * rewrite (compact, seal, retrain, apply-deletes): park the live
+    * `dst` at `<dst>__<tag>_old`, run `afterPark` on the parked copy,
+    * rename tmp into place, drop the parked copy. When `afterPark`
+    * throws (the seal's concurrent-append guard) or the install
+    * rename fails, the parked copy is restored and tmp dropped. The
+    * caller has already VALIDATED tmp ([[writeChecked]]) — this only
+    * owns the never-half-written swap. Callers also run
+    * [[recoverInterrupted]] with the same tag at entry, so a crash
+    * between the two renames is repaired on the next attempt.
     */
   private[graft] def swapInstall(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
-      trashSuffix: String): Unit = {
-    fenced(fs, tmp, s"swapInstall($dst)")
-    val trash = new org.apache.hadoop.fs.Path(dst.toString + trashSuffix)
+      dst: org.apache.hadoop.fs.Path, tag: String,
+      afterPark: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit = {
+    val tmp = swapTmp(dst, tag)
+    val trash = swapOld(dst, tag)
+    // fencing: a holder displaced by a TTL reclaim fails loud HERE,
+    // before the swap mutates shared state, and drops its validated
+    // rewrite so the displaced attempt leaves the index as it found it
+    try assertLeasesStillOwned(s"$tag($dst)")
+    catch { case e: IllegalStateException => fs.delete(tmp, true); throw e }
     fs.delete(trash, true)
     if (!fs.rename(dst, trash))
-      throw new java.io.IOException(s"swapInstall: could not park $dst")
+      throw new java.io.IOException(s"$tag: could not park $dst")
+    def restore(): Unit =
+      if (!fs.rename(trash, dst))
+        throw new java.io.IOException(
+          s"$tag: restore of $dst failed — data parked at $trash")
+    try afterPark(trash)
+    catch { case e: Throwable => restore(); fs.delete(tmp, true); throw e }
     if (!fs.rename(tmp, dst)) {
-      fs.rename(trash, dst) // restore
+      restore()
       throw new java.io.IOException(
-        s"swapInstall: rename $tmp -> $dst failed; original restored")
+        s"$tag: rename $tmp -> $dst failed; original restored")
     }
     fs.delete(trash, true)
   }
 
-  /** Fencing before a park-rename: a holder displaced by a TTL reclaim
-    * fails loud HERE, before the swap mutates shared state, and drops
-    * its validated rewrite `tmp` so the displaced attempt leaves the
-    * index as it found it.
-    */
-  private def fenced(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path, context: String): Unit =
-    try assertLeasesStillOwned(context)
-    catch { case e: IllegalStateException => fs.delete(tmp, true); throw e }
-
-  /** Entry-time crash recovery for [[swapInstall]] users: if `dst` is
-    * gone but its parked copy exists (killed between the two renames),
-    * restore it; then clear any stale parked/tmp directories.
+  /** Entry-time crash recovery for [[swapInstall]]`(…, tag)`: if `dst`
+    * is gone but its parked copy exists (killed between the two
+    * renames), restore it; then clear any stale parked/tmp
+    * directories.
     */
   private[graft] def recoverInterrupted(fs: org.apache.hadoop.fs.FileSystem,
-      dst: org.apache.hadoop.fs.Path, trashSuffix: String,
-      tmpSuffix: String): Unit = {
-    val trash = new org.apache.hadoop.fs.Path(dst.toString + trashSuffix)
-    val tmp = new org.apache.hadoop.fs.Path(dst.toString + tmpSuffix)
+      dst: org.apache.hadoop.fs.Path, tag: String): Unit = {
+    val trash = swapOld(dst, tag)
     if (!fs.exists(dst) && fs.exists(trash)) {
       if (!fs.rename(trash, dst))
         throw new java.io.IOException(
           s"recoverInterrupted: could not restore $dst from $trash")
     }
     fs.delete(trash, true)
-    fs.delete(tmp, true)
+    fs.delete(swapTmp(dst, tag), true)
   }
 
   /** Future on the global pool with a `blocking` marker — every
@@ -439,15 +450,20 @@ object Sinks {
     *
     * The body runs with the SUBMITTING thread's held leases, so a
     * chain forked under a lease re-enters it and its destructive steps
-    * are fenced ([[assertLeasesStillOwned]]) like the holder's own.
+    * are fenced ([[assertLeasesStillOwned]]) like the holder's own. It
+    * also runs with a snapshot of the submitter's Spark local
+    * properties (job group, SQL execution ids): a pool thread would
+    * otherwise keep those of whichever thread created it, filing its
+    * jobs under an ended execution or another caller's job group.
     */
   private[graft] def bFuture[T](body: => T): scala.concurrent.Future[T] = {
     import scala.concurrent.ExecutionContext.Implicits.global
     val held = heldLeases.get
+    val props = LocalProperties.capture()
     scala.concurrent.Future(scala.concurrent.blocking {
       val prev = heldLeases.get
       heldLeases.set(held)
-      try body finally heldLeases.set(prev)
+      try LocalProperties.within(props)(body) finally heldLeases.set(prev)
     })
   }
 
@@ -462,6 +478,17 @@ object Sinks {
       scala.concurrent.Await.ready(f, Duration.Inf).value.get)
     done.foreach { case scala.util.Failure(e) => throw e; case _ => () }
   }
+
+  /** [[awaitAllOrThrow]] for chains that all write under one swap tmp
+    * root: on a failure the whole `tmp` is deleted (every chain has
+    * stopped by then) before the rethrow, so a refused or failed
+    * rewrite leaves none of its siblings behind.
+    */
+  private[graft] def awaitAllOrDiscard(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: String, chains: Seq[scala.concurrent.Future[_]]): Unit =
+    try awaitAllOrThrow(chains)
+    catch { case e: Throwable =>
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true); throw e }
 
   /** Root directory for PERSISTED index and memo state — every
     * `graft_*_index_` / `graft_*_memo_` path builder and the
@@ -496,19 +523,24 @@ object Sinks {
 
   /** Read a parquet relation that may not exist yet (or may be a
     * file-less crash-orphaned directory) — None in both cases, the
-    * one tolerated read failure of every merge-on-read/validation
-    * path. ONE definition so the tolerated error classes cannot
-    * drift between call sites.
+    * one tolerated "nothing to read" of every merge-on-read/validation
+    * path, decided from a listing with Spark's hidden-path rule: names
+    * starting with `_` or `.` are not data, except `=` partition dirs,
+    * so `_SUCCESS` and `_temporary` debris alone read as empty.
     */
   private[graft] def readParquetIfAny(spark: SparkSession,
-      path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if String.valueOf(e.getMessage).contains("UNABLE_TO_INFER_SCHEMA") ||
-            String.valueOf(e.getMessage).contains("PATH_NOT_FOUND") =>
-        None
-    }
+      path: String): Option[DataFrame] = {
+    val fs = fsFor(spark, path)
+    def hasData(p: org.apache.hadoop.fs.Path): Boolean =
+      fs.listStatus(p).exists { st =>
+        val n = st.getPath.getName
+        !(n.startsWith(".") || n.startsWith("_") && !n.contains("=")) &&
+          (!st.isDirectory || hasData(st.getPath))
+      }
+    val root = new org.apache.hadoop.fs.Path(path)
+    if (fs.exists(root) && hasData(root)) Some(spark.read.parquet(path))
+    else None
+  }
 
   /** Thread-local set of lease paths held by the CURRENT thread —
     * reentrancy support for [[withWriterLease]]: a seal's internal
@@ -1166,37 +1198,18 @@ object Sinks {
 
   /** Commit `df` as the next version of a versioned table and flip
     * the manifest. Returns the committed version number. The write is
-    * validated (row count vs the plan's own count) before the flip —
-    * a bad write leaves an unreferenced directory and an untouched
-    * pointer, never a broken table.
+    * validated ([[writeChecked]]) before the flip — a bad write is
+    * removed and the pointer stays untouched, never a broken table.
     */
   def commitVersion(spark: SparkSession, root: String, df: DataFrame,
       partCol: Option[String] = None): Long =
     withWriterLease(spark, root, "commit-version") {
     val v = nextVersion(spark, root)
-    val dir = versionDir(root, v)
-    // ONE evaluation: the expectation count rides the write job itself
-    // as an Observation, so the rows counted are BY CONSTRUCTION the
-    // rows the write wrote — strictly stronger than the round-17
-    // pinned-checkpoint + concurrent-count form (which guaranteed
-    // count==write input via a shared materialization), and the commit
-    // sheds both the full checkpoint pass and the count job (round-18,
-    // guide §2.3: don't pay a second pass for a number the first pass
-    // can emit). The validation below still re-reads the WRITTEN bytes.
-    val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs, count(lit(1)).as("n"))
-    partCol match {
-      case Some(p) => observed
-        .repartition(spark.sparkContext.defaultParallelism, col(p))
-        .write.partitionBy(p).parquet(dir)
-      case None => observed.write.parquet(dir)
-    }
-    val expected = obs.get("n").asInstanceOf[Long]
-    val actual = spark.read.parquet(dir).count()
-    if (actual != expected) {
-      fsFor(spark, root).delete(new org.apache.hadoop.fs.Path(dir), true)
-      throw new java.io.IOException(
-        s"commitVersion: wrote $actual rows, expected $expected; manifest untouched")
+    writeChecked(spark,
+      partCol.fold(df)(p =>
+        df.repartition(spark.sparkContext.defaultParallelism, col(p))),
+      versionDir(root, v), "commitVersion", s"the manifest of $root") {
+      (d, out) => partCol.fold(d.write)(d.write.partitionBy(_)).parquet(out)
     }
     flipManifest(spark, root, v)
     v
@@ -1261,16 +1274,10 @@ object Sinks {
     val live = liveVersion(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(s"no MANIFEST under $root"))
     val v = nextVersion(spark, root)
-    val dir = versionDir(root, v)
-    val df = spark.read.parquet(versionDir(root, live))
-    val expected = rewriteBudgeted(df, partCol, targetRowsPerFile, dir)
-    val actual = spark.read.parquet(dir).count()
-    if (actual != expected) {
-      fsFor(spark, root).delete(new org.apache.hadoop.fs.Path(dir), true)
-      throw new java.io.IOException(
-        s"compactVersioned: rewrite has $actual rows, expected $expected; " +
-          s"manifest still points at v=$live")
-    }
+    writeChecked(spark, budgeted(spark.read.parquet(versionDir(root, live)),
+        partCol, targetRowsPerFile),
+      versionDir(root, v), "compactVersioned", s"the manifest of $root (v=$live)")(
+      _.write.mode("overwrite").partitionBy(partCol).parquet(_))
     flipManifest(spark, root, v)
     v
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Retrieval, Sinks}
+import graft.ops.{LlmOps, Retrieval, Sinks}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -70,5 +70,28 @@ class Bm25InferenceBudgetSpec extends AnyFunSuite {
       s"schema-inference jobs in Retrieval.scala:\n${retrieval.mkString("\n")}")
     assert(other.map(_.site.replaceAll(""":\d+$""", "")) ===
       Seq("parquet at Bm25InferenceBudgetSpec.scala"), other.mkString("\n"))
+  }
+
+  test("ANN delete/apply/seal: five inference jobs, none in a checked read-back") {
+    val emb = Tables.embeddings(spark, SharedSpark.sfTiny)
+      .filter(col("vec_id") < 128)
+    val idx = java.nio.file.Files.createTempDirectory("graft_ann_budget")
+      .resolve("ann").toString
+    (0 until 2).foreach(b => LlmOps.annIndexAppendBatch(spark,
+      emb.filter(col("vec_id") % 2 === b), idx, b.toLong, nCells = 4))
+    val c = JobCensus.census(spark) {
+      LlmOps.annIndexDelete(spark, idx, emb.select("vec_id")
+        .filter(col("vec_id") % 5 === 2))
+      LlmOps.annIndexSeal(spark, idx)
+    }
+    // the source reads that remain infer (ROADMAP item 1 owes them):
+    // - `Sinks.readParquetIfAny` of vectors/ and codes/ in the apply;
+    // - the apply's centroids/ cardinality read (LlmOps.scala);
+    // - the seal's source read of vectors/ and codes/.
+    // The four checked read-backs (two apply, two seal) infer nothing.
+    val sites = c.jobs.filter(inference)
+      .map(_.site.replaceAll(""":\d+$""", "")).sorted
+    assert(sites === Seq("parquet at LlmOps.scala") ++
+      Seq.fill(4)("parquet at Sinks.scala"), sites.mkString("\n"))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.ops.{Memo, Sinks}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Operational sink guarantees: dynamic partition overwrite replaces
   * only touched partitions (idempotent retries), compaction preserves
@@ -95,6 +96,27 @@ class SinksSpec extends AnyFunSuite {
       .filter(_.getName.startsWith("day=")).toSeq
       .map(_.listFiles().count(_.getName.endsWith(".parquet")))
     assert(files === Seq(1, 1), files)
+  }
+
+  test("compact and compactVersioned keep the rows of a NULL partition value") {
+    // a third of the rows land in __HIVE_DEFAULT_PARTITION__
+    val df = spark.range(300)
+      .withColumn("day", when(col("id") % 3 === 0, lit(null).cast("string"))
+        .otherwise("2024-01-01"))
+      .repartition(6)
+    val allIds = (0L until 300L).toSeq
+    val path = tmpDir("compact_null")
+    df.write.partitionBy("day").parquet(path)
+    Sinks.compact(spark, path, "day", targetRowsPerFile = 1000L)
+    val after = spark.read.parquet(path)
+    assert(after.select("id").as[Long].collect().sorted.toSeq === allIds)
+    assert(after.where(col("day").isNull).count() === 100L)
+    val root = tmpDir("versioned_null")
+    Sinks.commitVersion(spark, root, df, partCol = Some("day"))
+    assert(Sinks.compactVersioned(spark, root, "day", targetRowsPerFile = 1000L) === 2L)
+    val v2 = Sinks.readVersioned(spark, root)
+    assert(v2.select("id").as[Long].collect().sorted.toSeq === allIds)
+    assert(v2.where(col("day").isNull).count() === 100L)
   }
 
   test("compactVersioned: old-manifest reader stays complete across the commit") {
@@ -417,6 +439,65 @@ class SinksSpec extends AnyFunSuite {
     Sinks.observedPin(side.join(df.filter(col("id") < 0), "id"))
     val e = intercept[IllegalStateException](Sinks.observedCount(oSide))
     assert(e.getMessage.contains("no count 'n'"))
+  }
+
+  test("writeChecked refuses a lossy write; compact and commitVersion then install nothing") {
+    val fs = Sinks.fsFor(spark, tmpDir("lossy_fs"))
+    // the plant: the write "succeeds" but one part file is lost
+    val loseOnePart: String => Unit = out => {
+      val part = Sinks.filesUnder(fs, new org.apache.hadoop.fs.Path(out))
+        .map(_.getPath).find(_.getName.startsWith("part-")).get
+      assert(fs.delete(part, false))
+    }
+    def bytes(root: String): Map[String, Seq[Byte]] = {
+      val r = java.nio.file.Paths.get(root)
+      val walk = java.nio.file.Files.walk(r)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => r.relativize(f).toString ->
+          java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally walk.close()
+    }
+    val out = tmpDir("lossy")
+    val e = intercept[java.io.IOException] {
+      Sinks.writeChecked(spark, spark.range(100).repartition(4).toDF(), out,
+          "lossy-op", "the target") { (d, o) => d.write.parquet(o); loseOnePart(o) }
+    }
+    assert(e.getMessage.startsWith("lossy-op: rewrite has "), e.getMessage)
+    assert(e.getMessage.contains("expected 100; aborted with the target untouched"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
+
+    val path = tmpDir("lossy_compact")
+    spark.range(400)
+      .withColumn("day", when(col("id") % 2 === 0, "2024-01-01").otherwise("2024-01-02"))
+      .repartition(8).write.partitionBy("day").parquet(path)
+    val root = tmpDir("lossy_versioned")
+    Sinks.commitVersion(spark, root, spark.range(10).repartition(2).toDF())
+    val before = bytes(path)
+    Sinks.afterCheckedWrite.set(loseOnePart)
+    try {
+      val c = intercept[java.io.IOException](
+        Sinks.compact(spark, path, "day", targetRowsPerFile = 1000L))
+      assert(c.getMessage.startsWith("compact: rewrite has "), c.getMessage)
+      assert(bytes(path) === before)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + "__compact_tmp")))
+      val v = intercept[java.io.IOException](
+        Sinks.commitVersion(spark, root, spark.range(10).repartition(2).toDF()))
+      assert(v.getMessage.startsWith("commitVersion: rewrite has "), v.getMessage)
+    } finally Sinks.afterCheckedWrite.remove()
+    assert(Sinks.liveVersion(spark, root) === Some(1L))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(Sinks.versionDir(root, 2))))
+  }
+
+  test("bFuture bodies run with the submitter's Spark local properties") {
+    val sc = spark.sparkContext
+    def groupSeen(): String = scala.concurrent.Await.result(
+      Sinks.bFuture(sc.getLocalProperty("spark.jobGroup.id")),
+      scala.concurrent.duration.Duration.Inf)
+    try Seq("A", "B", "A", "B").foreach { g =>
+      sc.setJobGroup(g, s"group $g")
+      assert(groupSeen() === g)
+    } finally sc.clearJobGroup()
   }
 
 }
