@@ -1299,9 +1299,6 @@ object LlmOps {
     aggregate(zip_with(a, b, (p, q) => p.cast("double") * q.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  def cosine(a: Column, b: Column): Column =
-    dotProduct(a, b) / (sqrt(dotProduct(a, a)) * sqrt(dotProduct(b, b)))
-
   /** cosine with squared norms precomputed per SIDE (N+Q norm passes
     * instead of 3·N·Q flops in the pair loop) — the arithmetic per
     * value is unchanged, so oracle results are identical.
@@ -1309,11 +1306,98 @@ object LlmOps {
   def cosinePrenorm(dot: Column, nsqA: Column, nsqB: Column): Column =
     dot / (sqrt(nsqA) * sqrt(nsqB))
 
-  /** #38 Brute-force cosine top-k neighbors for a fixed query set —
-    * the correctness baseline for ANN (q43 is the scale path). The
-    * tiny query side is broadcast; the big side streams through one
-    * codegen stage; ranking is a per-query window over k·|Q| rows.
+  /** The similarity family's result contract, in two pieces every
+    * vector-search line shares: [[exactCos]] scores a (query,
+    * candidate) pair, [[topKByCos]] ranks the scored pairs. Together
+    * they emit `(query_id, rnk, neighbor_id, cos)` rows — cosine
+    * rounded to 6 places, ties to the lower `neighbor_id`, ordered by
+    * (query_id, rnk) — so an approximate line differs from exact q38
+    * only in which candidates it scores.
+    *
+    * `exactCos` reads the query side as `qe`/`qnsq` and the candidate
+    * side as `embedding`/`nsq`.
     */
+  private[ops] def exactCos: Column =
+    round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
+      col("qnsq"), col("nsq")), 6).as("cos")
+
+  /** Per-query top-`k` of `(query_id, neighbor_id, cos)` pairs — see
+    * [[exactCos]].
+    */
+  private[ops] def topKByCos(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
+      .filter(col("rnk") <= k)
+      .select("query_id", "rnk", "neighbor_id", "cos")
+      .orderBy("query_id", "rnk")
+
+  /** Squared norm of a driver-side vector — the same products in the
+    * same order as [[dotProduct]], so the value is bit-identical to
+    * the in-plan `nsq` column.
+    */
+  private def normSqLocal(v: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
+    s
+  }
+
+  /** Driver-side probe rows of every IVF probe (annIncremental's two
+    * paths, q92, q93): one row per (collected query, probed cell) —
+    * `(query_id, qe, adc_table, qnsq, cell, qc_dot)`, the query's
+    * `nProbe` best cells from [[rankCells]] with their query-centroid
+    * dots, and its ADC table ([[adcTableOf]]) when the index carries
+    * codebooks (empty otherwise). Also returns the distinct probed
+    * cells in probe order: they are driver-known, so a cell filter
+    * over them is a static partition prune. Bounded work: the query
+    * rows come from [[collectBoundedQueries]], `cents` is nCells rows.
+    */
+  private def probeRowsOf(spark: SparkSession,
+      qRows: Array[org.apache.spark.sql.Row], cents: Array[(Int, Array[Float])],
+      nProbe: Int, cb: Option[graft.functions.Pq.Codebooks]): (DataFrame, Seq[Int]) = {
+    import spark.implicits._
+    val rows = qRows.toSeq.flatMap { r =>
+      val q = r.getSeq[Float](1).toArray
+      val qnsq = normSqLocal(q)
+      val table = cb.fold(Seq.empty[Float])(adcTableOf(q, _).toSeq)
+      rankCells(q, qnsq, cents, nProbe).map { case (cell, qcDot) =>
+        (longOf(r.get(0)), q.toSeq, table, qnsq, cell, qcDot)
+      }
+    }
+    (rows.toDF("query_id", "qe", "adc_table", "qnsq", "cell", "qc_dot"),
+      rows.map(_._5).distinct)
+  }
+
+  /** The ADC candidate cut: each query keeps its `keep` best
+    * candidates by approximate cosine `acos` (ties to the lower
+    * `vec_id`) for the exact rerank. [[adcCos]] is the plain-PQ
+    * `acos`; q93 passes its residual one.
+    */
+  private def adcCut(cands: DataFrame, acos: Column, keep: Int): DataFrame =
+    cands.withColumn("acos", acos)
+      .withColumn("arnk", row_number().over(
+        Window.partitionBy("query_id").orderBy(desc("acos"), asc("vec_id"))))
+      .filter(col("arnk") <= keep)
+
+  /** ADC cosine of the packed codes in column `code` against the probe
+    * row's `adc_table`, normed by `qnsq` and the codes' reconstruction
+    * norm (both floored at 1e-12).
+    */
+  private def adcCos(code: String, cb: graft.functions.Pq.Codebooks): Column =
+    graft.functions.PqAdc.ip(col(code), col("adc_table"), cb.m, cb.k) /
+      sqrt(greatest(col("qnsq"), lit(1e-12)) *
+        greatest(graft.functions.PqReconNormSq.normSq(col(code), cb), lit(1e-12)))
+
+  /** Exact rerank of an in-memory PQ search's cut candidates
+    * `(query_id, qe, qnsq, neighbor_id)` against the corpus `emb`
+    * (q91/q92/q93).
+    */
+  private def rerankCandidates(cands: DataFrame, emb: DataFrame,
+      k: Int): DataFrame =
+    topKByCos(broadcast(cands)
+      .join(emb.select(col("vec_id").as("neighbor_id"),
+        col("embedding"), col("nsq")), "neighbor_id")
+      .select(col("query_id"), col("neighbor_id"), exactCos), k)
+
   /** Declared q70: per-label embedding centroids — the class-centroid
     * computation under few-shot classification, cluster seeding (q49's
     * k-means init done right), and embedding-drift monitoring. Shape:
@@ -1336,21 +1420,19 @@ object LlmOps {
         count(lit(1)).as("n"))
       .orderBy("label", "pos")
 
+  /** #38 Brute-force cosine top-k neighbors for a fixed query set —
+    * the correctness baseline for ANN (q43 is the scale path). The
+    * tiny query side is broadcast; the big side streams through one
+    * codegen stage; ranking is a per-query window over k·|Q| rows.
+    */
   def q38SimilarityTopk(spark: SparkSession, dir: String,
       nQueries: Int = 10, k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .withColumn("nsq", dotProduct(col("embedding"), col("embedding")))
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nsq").as("qnsq"))
-    val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-    scored.withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+    topKByCos(emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCos), k)
   }
 
   /** Embedding-cosine near-dup pairs above a threshold for a bounded
@@ -1362,11 +1444,9 @@ object LlmOps {
     val emb = Tables.embeddings(spark, dir)
       .withColumn("nsq", dotProduct(col("embedding"), col("embedding")))
     val probes = emb.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("va"), col("embedding").as("ea"), col("nsq").as("ansq"))
+      .select(col("vec_id").as("va"), col("embedding").as("qe"), col("nsq").as("qnsq"))
     emb.join(broadcast(probes), col("vec_id") > col("va"))
-      .select(col("va"), col("vec_id").as("vb"),
-        round(cosinePrenorm(dotProduct(col("ea"), col("embedding")),
-          col("ansq"), col("nsq")), 6).as("cos"))
+      .select(col("va"), col("vec_id").as("vb"), exactCos)
       .filter(col("cos") >= threshold)
       .orderBy("va", "vb")
   }
@@ -1399,21 +1479,16 @@ object LlmOps {
     */
   def q82SimsearchQuantized(spark: SparkSession, dir: String,
       nQueries: Int = 10, k: Int = 5): DataFrame = {
+    // the dequantized codes take the `embedding` name, so the q38
+    // shape and its exactCos apply unchanged
     val emb = quantizeEmbeddings(Tables.embeddings(spark, dir))
       .select(col("vec_id"),
-        transform(col("qe"), x => x.cast("float")).as("qf"))
-      .withColumn("nsq", dotProduct(col("qf"), col("qf")))
+        transform(col("qe"), x => x.cast("float")).as("embedding"))
+      .withColumn("nsq", dotProduct(col("embedding"), col("embedding")))
     val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("qf").as("pe"), col("nsq").as("qnsq"))
-    emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("pe"), col("qf")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nsq").as("qnsq"))
+    topKByCos(emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCos), k)
   }
 
   /** The pre-fusion HOF bucket expression — `planes` interpreted
@@ -1431,16 +1506,6 @@ object LlmOps {
       acc + when(dotP >= 0, lit(1L << p)).otherwise(lit(0L))
     }
 
-  /** LSH-bucketed approximate nearest neighbors: `nTables`
-    * independent hash tables of `nPlanes` random-hyperplane sign bits
-    * each; a vector is a candidate for a query if they share a bucket
-    * in ANY table (union ∪ dedup), then exact cosine ranks the
-    * candidates. Cost: one shuffle on (table, bucket); per-bucket
-    * population is ~N/2^nPlanes ⇒ tune nPlanes ≈ log2(N/targetBucket)
-    * as the corpus grows (the defaults suit the harness corpus; at
-    * 100 TB raise nPlanes, keep nTables for recall). Recall vs the
-    * exact q38 is asserted in ScalaTest (approximate ⇒ no oracle).
-    */
   /** Hyperplane count for a target expected bucket population:
     * 2^planes buckets ⇒ expected bucket size n/2^planes ≤
     * targetBucket. Floor of 4 planes keeps recall sane on tiny
@@ -1454,6 +1519,16 @@ object LlmOps {
       math.ceil(math.log(math.max(1L, n).toDouble / targetBucket)
         / math.log(2.0)).toInt))
 
+  /** LSH-bucketed approximate nearest neighbors: `nTables`
+    * independent hash tables of `nPlanes` random-hyperplane sign bits
+    * each; a vector is a candidate for a query if they share a bucket
+    * in ANY table (union ∪ dedup), then exact cosine ranks the
+    * candidates. Cost: one shuffle on (table, bucket); per-bucket
+    * population is ~N/2^nPlanes ⇒ tune nPlanes ≈ log2(N/targetBucket)
+    * as the corpus grows (the defaults suit the harness corpus; at
+    * 100 TB raise nPlanes, keep nTables for recall). Recall vs the
+    * exact q38 is asserted in ScalaTest (approximate ⇒ no oracle).
+    */
   def q43SimsearchLshAnn(spark: SparkSession, dir: String,
       nQueries: Int = 10, k: Int = 5, nPlanes: Int = 0, nTables: Int = 4,
       dims: Int = 64): DataFrame = {
@@ -1482,15 +1557,7 @@ object LlmOps {
       .select(col("query_id"), col("qe"), col("qnsq"),
         col("vec_id").as("neighbor_id"), col("embedding"), col("nsq"))
       .dropDuplicates("query_id", "neighbor_id")
-    cand
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+    topKByCos(cand.select(col("query_id"), col("neighbor_id"), exactCos), k)
   }
 
   /** (-score, cid) structs sorted ascending = cells best-first; the
@@ -1513,10 +1580,6 @@ object LlmOps {
   private def bestCellOf(scored: Column): Column = element_at(
     transform(slice(array_sort(scored), 1, 1), x => x.getField("cid")), 1)
 
-  /** Zero-row ANN result with the declared (query_id, rnk,
-    * neighbor_id, cos) schema — the well-defined answer for an empty
-    * corpus or empty centroid set.
-    */
   /** Fixture id columns have shipped as both INT32 and INT64 (the
     * q109 defense); read either width as Long. Callers handle null
     * BEFORE this (isNullAt guards) — fabricating a sentinel here
@@ -1529,6 +1592,10 @@ object LlmOps {
       s"expected an integer id, got $other")
   }
 
+  /** Zero-row ANN result with the declared (query_id, rnk,
+    * neighbor_id, cos) schema — the well-defined answer for an empty
+    * corpus or empty centroid set.
+    */
   private def emptyAnnResult(emb: DataFrame): DataFrame =
     emb.limit(0).select(col("vec_id").as("query_id"),
       lit(1).cast("int").as("rnk"), col("vec_id").as("neighbor_id"),
@@ -1613,7 +1680,7 @@ object LlmOps {
     */
   private def bestCellLocal(v: Array[Float],
       cents: Array[(Int, Array[Float])]): Int = {
-    val nsq = { var s = 0.0; var i = 0; while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }; s }
+    val nsq = normSqLocal(v)
     var best = -1; var bestNeg = 0.0
     cents.foreach { case (cid, c) =>
       var dot = 0.0; var cn = 0.0; var i = 0
@@ -1906,43 +1973,24 @@ object LlmOps {
     val cbOpt = pqCodebooksCached(emb, dir, m, kCodes, subDim, iters)
     if (cbOpt.isEmpty) return emptyAnnResult(emb)
     val cb = cbOpt.get
-    val qRows = emb.filter(col("vec_id") < nQueries)
-      .select("vec_id", "embedding", "nsq").collect()
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val qRows = collectBoundedQueries(emb.filter(col("vec_id") < nQueries),
+      MaxQueryRows)
     if (qRows.isEmpty) return emptyAnnResult(emb)
     // per-query ADC tables ([[adcTableOf]] — bounded driver work)
     val queries = qRows.toSeq.map { r =>
       val q = r.getSeq[Float](1).toArray
-      (longOf(r.get(0)), q.toSeq, adcTableOf(q, cb).toSeq, r.getDouble(2))
+      (longOf(r.get(0)), q.toSeq, adcTableOf(q, cb).toSeq, normSqLocal(q))
     }.toDF("query_id", "qe", "adc_table", "qnsq")
     val codes = emb.select(col("vec_id"),
       graft.functions.PqEncode.codes(col("embedding"), cb).as("codes"))
     // deliberate bounded-broadcast product: nQueries rows × the code
     // scan — the PQ scan shape (IVF cells would prune it further)
-    val approx = codes.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("acos",
-        graft.functions.PqAdc.ip(col("codes"), col("adc_table"), m, cb.k) /
-          sqrt(col("qnsq") *
-            greatest(graft.functions.PqReconNormSq.normSq(col("codes"), cb),
-              lit(1e-12))))
-      .withColumn("arnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("acos"), asc("vec_id"))))
-      .filter(col("arnk") <= candFactor * k)
+    val approx = adcCut(codes.crossJoin(broadcast(queries))
+        .filter(col("vec_id") =!= col("query_id")),
+        adcCos("codes", cb), candFactor * k)
       .select(col("query_id"), col("qe"), col("qnsq"),
         col("vec_id").as("neighbor_id"))
-    // exact rerank of the bounded candidate set
-    broadcast(approx)
-      .join(emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding"), col("nsq")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+    rerankCandidates(approx, emb, k)
   }
 
   /** #92 IVF-PQ composition — the two ANN halves working together,
@@ -1962,7 +2010,6 @@ object LlmOps {
       nQueries: Int = 10, k: Int = 5, nCells: Int = 16, nProbe: Int = 4,
       m: Int = 8, kCodes: Int = 16, dims: Int = 64,
       kmeansIters: Int = 3, pqIters: Int = 2, candFactor: Int = 8): DataFrame = {
-    import spark.implicits._
     val subDim = dims / m
     val emb = Tables.embeddings(spark, dir)
       .withColumn("nsq", dotProduct(col("embedding"), col("embedding")))
@@ -1972,48 +2019,21 @@ object LlmOps {
     val cbOpt = pqCodebooksCached(emb, dir, m, kCodes, subDim, pqIters)
     if (cbOpt.isEmpty) return emptyAnnResult(emb)
     val cb = cbOpt.get
-    val qRows = emb.filter(col("vec_id") < nQueries)
-      .select("vec_id", "embedding", "nsq").collect()
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val qRows = collectBoundedQueries(emb.filter(col("vec_id") < nQueries),
+      MaxQueryRows)
     if (qRows.isEmpty) return emptyAnnResult(emb)
-    val queries = qRows.toSeq.flatMap { r =>
-      val q = r.getSeq[Float](1).toArray
-      val qnsq = r.getDouble(2)
-      val table = adcTableOf(q, cb).toSeq
-      // rank cells by query-centroid cosine, driver-side (bounded:
-      // nQueries × nCells), keep the nProbe best ([[rankCells]])
-      rankCells(q, qnsq, cents, nProbe).map { case (cell, _) =>
-        (longOf(r.get(0)), q.toSeq, table, qnsq, cell)
-      }
-    }.toDF("query_id", "qe", "adc_table", "qnsq", "cell")
+    val (queries, _) = probeRowsOf(spark, qRows, cents, nProbe, Some(cb))
     val codes = emb
       .withColumn("cell", bestCellOf(centroidScores(cents)))
       .select(col("vec_id"), col("cell"),
         graft.functions.PqEncode.codes(col("embedding"), cb).as("codes"))
-    val approx = codes.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("acos",
-        graft.functions.PqAdc.ip(col("codes"), col("adc_table"), m, cb.k) /
-          sqrt(col("qnsq") *
-            greatest(graft.functions.PqReconNormSq.normSq(col("codes"), cb),
-              lit(1e-12))))
-      .withColumn("arnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("acos"), asc("vec_id"))))
-      .filter(col("arnk") <= candFactor * k)
+    val approx = adcCut(codes.join(broadcast(queries), Seq("cell"))
+        .filter(col("vec_id") =!= col("query_id")),
+        adcCos("codes", cb), candFactor * k)
       .select(col("query_id"), col("qe"), col("qnsq"),
         col("vec_id").as("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    broadcast(approx)
-      .join(emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding"), col("nsq")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+    rerankCandidates(approx, emb, k)
   }
 
   /** #93 RESIDUAL-encoded IVF-PQ — q92 plus the standard recall
@@ -2043,7 +2063,6 @@ object LlmOps {
       nQueries: Int = 10, k: Int = 5, nCells: Int = 16, nProbe: Int = 4,
       m: Int = 8, kCodes: Int = 16, dims: Int = 64,
       kmeansIters: Int = 3, pqIters: Int = 2, candFactor: Int = 8): DataFrame = {
-    import spark.implicits._
     val subDim = dims / m
     val emb = Tables.embeddings(spark, dir)
       .withColumn("nsq", dotProduct(col("embedding"), col("embedding")))
@@ -2069,9 +2088,8 @@ object LlmOps {
     val cbOpt = pqCodebooks(residuals, m, kCodes, subDim, pqIters)
     if (cbOpt.isEmpty) return emptyAnnResult(emb)
     val cb = cbOpt.get
-    val qRows = emb.filter(col("vec_id") < nQueries)
-      .select("vec_id", "embedding", "nsq").collect()
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val qRows = collectBoundedQueries(emb.filter(col("vec_id") < nQueries),
+      MaxQueryRows)
     if (qRows.isEmpty) return emptyAnnResult(emb)
     // per-cell cross-term table: cellDot(cell)(mi·k + ki) = <c_mi, cbR(mi,ki)>
     val cellDot: Map[Int, Seq[Float]] = cents.map { case (cid, c) =>
@@ -2086,48 +2104,26 @@ object LlmOps {
     val cellNormSq: Map[Int, Double] = cents.map { case (cid, c) =>
       cid -> c.map(v => v.toDouble * v).sum
     }.toMap
-    val queries = qRows.toSeq.flatMap { r =>
-      val q = r.getSeq[Float](1).toArray
-      val qnsq = r.getDouble(2)
-      val table = adcTableOf(q, cb).toSeq
-      rankCells(q, qnsq, cents, nProbe).map { case (cell, qcDot) =>
-        (longOf(r.get(0)), q.toSeq, table, qnsq, cell, qcDot,
-          cellNormSq(cell), cellDot(cell))
-      }
-    }.toDF("query_id", "qe", "adc_table", "qnsq", "cell", "qc_dot",
-      "cell_nsq", "cell_dot_table")
+    // the probe rows plus each probed cell's cross terms
+    val queries = probeRowsOf(spark, qRows, cents, nProbe, Some(cb))._1
+      .withColumn("cell_nsq", element_at(typedLit(cellNormSq), col("cell")))
+      .withColumn("cell_dot_table", element_at(typedLit(cellDot), col("cell")))
     val codes = assigned.select(col("vec_id"), col("cell"),
       graft.functions.PqEncode.codes(
         residOf(col("embedding"), col("cell")), cb).as("codes"))
-    val approx = codes.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("ip_hat",
-        col("qc_dot") +
-          graft.functions.PqAdc.ip(col("codes"), col("adc_table"), m, cb.k))
-      .withColumn("nsq_hat",
-        col("cell_nsq") +
-          lit(2.0) * graft.functions.PqAdc.ip(col("codes"), col("cell_dot_table"), m, cb.k) +
-          graft.functions.PqReconNormSq.normSq(col("codes"), cb))
-      .withColumn("acos", col("ip_hat") /
-        sqrt(greatest(col("qnsq"), lit(1e-12)) *
-          greatest(col("nsq_hat"), lit(1e-12))))
-      .withColumn("arnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("acos"), asc("vec_id"))))
-      .filter(col("arnk") <= candFactor * k)
+    val ipHat = col("qc_dot") +
+      graft.functions.PqAdc.ip(col("codes"), col("adc_table"), m, cb.k)
+    val nsqHat = col("cell_nsq") +
+      lit(2.0) * graft.functions.PqAdc.ip(col("codes"), col("cell_dot_table"), m, cb.k) +
+      graft.functions.PqReconNormSq.normSq(col("codes"), cb)
+    val approx = adcCut(codes.join(broadcast(queries), Seq("cell"))
+        .filter(col("vec_id") =!= col("query_id")),
+        ipHat / sqrt(greatest(col("qnsq"), lit(1e-12)) *
+          greatest(nsqHat, lit(1e-12))), candFactor * k)
       .select(col("query_id"), col("qe"), col("qnsq"),
         col("vec_id").as("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    broadcast(approx)
-      .join(emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding"), col("nsq")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+    rerankCandidates(approx, emb, k)
   }
 
   /** IVF (inverted-file) approximate nearest neighbors — the
@@ -2164,17 +2160,10 @@ object LlmOps {
         col("nsq").as("qnsq"),
         explode(transform(slice(array_sort(scored), 1, nProbe),
           x => x.getField("cid"))).as("cell"))
-    assigned.join(broadcast(probes), Seq("cell"))
+    topKByCos(assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCos)
+      .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
   /** Persist the IVF index: the k-means centroids (bounded — nCells
@@ -2842,14 +2831,14 @@ object LlmOps {
     val fs = Sinks.fsFor(spark, indexPath)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     subs.foreach(sub => Sinks.recoverInterrupted(fs, p(s"$indexPath/$sub"), "del"))
-    val delsOpt = readIdDeletes(spark, indexPath, keyCol)
-    if (delsOpt.isEmpty) return false
-    // pinned lazily: the count() is the materializing job (it computes
-    // every partition), replacing the eager-checkpoint + isEmpty pair
-    // with ONE job (round-18, §2.6). The dir is dropped below, so the
-    // pin itself is still required.
-    val dels = delsOpt.get.localCheckpoint(false)
-    if (dels.count() == 0) { fs.delete(p(s"$indexPath/deletes"), true); return false }
+    // a delete writer appends a file only when it records an id, so a
+    // listing tells whether any tombstone is pending — no count job
+    if (!Sinks.hasDataFiles(spark, s"$indexPath/deletes")) {
+      fs.delete(p(s"$indexPath/deletes"), true); return false
+    }
+    // pinned lazily, materialized by its first use in a rewrite: the
+    // dir is dropped below, so the pin itself is still required
+    val dels = readIdDeletes(spark, indexPath, keyCol).get.localCheckpoint(false)
     // the subdir rewrites are DISJOINT (buckets/hs, vectors/codes) —
     // they run as concurrent driver-thread job chains (the
     // dedup-append rule; round-14 verdict item 8). Failure contract
@@ -3152,7 +3141,7 @@ object LlmOps {
   def annIncremental(spark: SparkSession, queries: DataFrame,
       indexPath: String, k: Int = 5, nProbe: Int = 4,
       excludeQueryId: Boolean = true, candFactor: Int = 16,
-      maxQueryRows: Int = 65536): DataFrame = {
+      maxQueryRows: Int = MaxQueryRows): DataFrame = {
     // Layout tolerance — "probe the growing index any time" includes
     // the windows BETWEEN a seed's commits (quantizers written,
     // vectors/codes not yet) and a never-seeded index (stream started
@@ -3186,20 +3175,10 @@ object LlmOps {
     // on runtime dynamic-pruning heuristics. rankCells orders by
     // (-cos, cid) — exactly centroidScores' array_sort order, so the
     // probed cells are the ones the previous in-plan form chose.
-    import spark.implicits._
     val qRows = collectBoundedQueries(queries, maxQueryRows)
     if (qRows.isEmpty) return emptyAnnResult(queries)
-    val probeSeq = qRows.toSeq.flatMap { r =>
-      val q = r.getSeq[Float](1).toArray
-      var qnsq = 0.0
-      q.foreach(v => qnsq += v.toDouble * v)
-      rankCells(q, qnsq, cents, nProbe).map { case (cell, _) =>
-        (longOf(r.get(0)), q.toSeq, qnsq, cell)
-      }
-    }
-    val probes = probeSeq.toDF("query_id", "qe", "qnsq", "cell")
-    val probedCells = probeSeq.map(_._4).distinct
-    minusAnnDeletes(spark, indexPath,
+    val (probes, probedCells) = probeRowsOf(spark, qRows, cents, nProbe, None)
+    topKByCos(minusAnnDeletes(spark, indexPath,
       spark.read.parquet(s"$indexPath/vectors")
         .filter(col("cell").isin(probedCells: _*)))
       .join(broadcast(probes), Seq("cell"))
@@ -3207,19 +3186,16 @@ object LlmOps {
       // vectors (the q38/q49 shape); disable it for an external query
       // table whose ids could collide with unrelated indexed ids
       .filter(if (excludeQueryId) col("vec_id") =!= col("query_id") else lit(true))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCos)
+      .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
-  /** Driver-side probe-batch collect shared by both [[annIncremental]]
-    * paths — GUARDED (the twoPhaseTimeSplit rule): `limit(max + 1)`
+  /** Default bound of a collected query batch ([[collectBoundedQueries]]). */
+  private val MaxQueryRows = 65536
+
+  /** Driver-side query-batch collect shared by every probe that ranks
+    * on the driver (both [[annIncremental]] paths, q91, q92, q93) —
+    * GUARDED (the twoPhaseTimeSplit rule): `limit(max + 1)`
     * bounds the transfer by construction, so an unexpectedly large
     * external query frame fails fast with an instruction instead of
     * silently OOM-ing the driver. The bound is the same contract that
@@ -3233,7 +3209,7 @@ object LlmOps {
     val raw = queries.select("vec_id", "embedding")
       .limit(maxQueryRows + 1).collect()
     require(raw.length <= maxQueryRows,
-      s"annIncremental: query batch exceeds $maxQueryRows rows — probe " +
+      s"query batch exceeds $maxQueryRows rows — probe " +
         "batches must be broadcast-bounded; split the query set (probes " +
         "are independent per query) or raise maxQueryRows deliberately")
     raw.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
@@ -3253,24 +3229,9 @@ object LlmOps {
       cb: graft.functions.Pq.Codebooks, k: Int, nProbe: Int,
       excludeQueryId: Boolean, candFactor: Int,
       maxQueryRows: Int): DataFrame = {
-    import spark.implicits._
-    val m = cb.m
-    val subDim = cb.subDim
     val qRows = collectBoundedQueries(queries, maxQueryRows)
     if (qRows.isEmpty) return emptyAnnResult(queries)
-    // per query: prenorm, ADC table (m·k sub-dots), nProbe best cells
-    // by query-centroid cosine — all bounded driver work (the probe
-    // batch is broadcast-bounded by contract, cents is nCells rows)
-    val probeSeq = qRows.toSeq.flatMap { r =>
-      val q = r.getSeq[Float](1).toArray
-      var qnsq = 0.0
-      q.foreach(v => qnsq += v.toDouble * v)
-      val table = adcTableOf(q, cb).toSeq
-      rankCells(q, qnsq, cents, nProbe).map { case (cell, _) =>
-        (longOf(r.get(0)), q.toSeq, table, qnsq, cell)
-      }
-    }
-    val probeRows = probeSeq.toDF("query_id", "qe", "adc_table", "qnsq", "cell")
+    val (probeRows, probedCells) = probeRowsOf(spark, qRows, cents, nProbe, Some(cb))
     // the probed cells are DRIVER-KNOWN (rankCells ran on local
     // data), so the partition prune is STATIC — an isin over the
     // union of probed cells lands in the scans' partitionFilters,
@@ -3278,7 +3239,6 @@ object LlmOps {
     // pruning heuristics. Both the code scan and the per-finalist
     // vector fetch read only probed cell=<c>/ directories
     // (LlmOpsSpec pins this with the q106 scan-metric technique).
-    val probedCells = probeSeq.map(_._5).distinct
     // Verified-lossless shortcut (round 13): the DECLARED q111/q113/
     // q114/q120 probes run exhaustively — candFactor·k sized ≥ the
     // indexed population — so the ADC rank keeps every candidate and
@@ -3307,22 +3267,15 @@ object LlmOps {
       spark.read.parquet(s"$indexPath/codes")
         .filter(col("cell").isin(probedCells: _*)))
     if (codesInProbed.count() <= candFactor.toLong * k) {
-      return spark.read.parquet(s"$indexPath/vectors")
+      return topKByCos(spark.read.parquet(s"$indexPath/vectors")
         .filter(col("cell").isin(probedCells: _*))
         .join(codesInProbed.select("cell", "vec_id"),
           Seq("cell", "vec_id"), "left_semi")
         .join(broadcast(probeRows.select("query_id", "qe", "qnsq", "cell")),
           Seq("cell"))
         .filter(if (excludeQueryId) col("vec_id") =!= col("query_id") else lit(true))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-            col("qnsq"), col("nsq")), 6).as("cos"))
-        .dropDuplicates("query_id", "neighbor_id")
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-        .filter(col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "cos")
-        .orderBy("query_id", "rnk")
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCos)
+        .dropDuplicates("query_id", "neighbor_id"), k)
     }
     // finalists carry ONLY narrow keys (query_id, cell, vec_id): the
     // broadcast is ≤ nQueries·candFactor·k rows × ~20 bytes — the
@@ -3331,35 +3284,21 @@ object LlmOps {
     // of riding a 64-float array on every finalist row (which at a
     // lossless candFactor — the q111/q113 exhaustive probe — would
     // have made the broadcast corpus-sized × 300 B/row)
-    val finalists = codesInProbed
-      .join(broadcast(probeRows), Seq("cell"))
-      .filter(if (excludeQueryId) col("vec_id") =!= col("query_id") else lit(true))
-      .withColumn("acos",
-        graft.functions.PqAdc.ip(col("code"), col("adc_table"), m, cb.k) /
-          sqrt(greatest(col("qnsq"), lit(1e-12)) *
-            greatest(graft.functions.PqReconNormSq.normSq(col("code"), cb),
-              lit(1e-12))))
-      .withColumn("arnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("acos"), asc("vec_id"))))
-      .filter(col("arnk") <= candFactor * k)
+    val finalists = adcCut(codesInProbed
+        .join(broadcast(probeRows), Seq("cell"))
+        .filter(if (excludeQueryId) col("vec_id") =!= col("query_id") else lit(true)),
+        adcCos("code", cb), candFactor * k)
       .select(col("query_id"), col("cell"), col("vec_id"))
     val queryVecs = probeRows
       .select(col("query_id"), col("qe"), col("qnsq")).distinct()
-    broadcast(finalists)
+    topKByCos(broadcast(finalists)
       .join(spark.read.parquet(s"$indexPath/vectors")
         .filter(col("cell").isin(probedCells: _*))
         .select(col("cell"), col("vec_id"), col("embedding"), col("nsq")),
         Seq("cell", "vec_id"))
       .join(broadcast(queryVecs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-      .orderBy("query_id", "rnk")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCos)
+      .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
   /** #111 Persisted-index similarity search — the serving-side probe

@@ -697,12 +697,13 @@ object Retrieval {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val root = p(indexPath)
     Sinks.recoverInterrupted(fs, root, "del")
-    val delsOpt = readInvDeletes(spark, indexPath)
-    if (delsOpt.isEmpty) return false
-    // pinned lazily (root is parked below): count() materializes every
-    // partition, replacing eager-checkpoint + isEmpty with ONE job
-    val dels = delsOpt.get.localCheckpoint(false)
-    if (dels.count() == 0) { fs.delete(p(s"$indexPath/deletes"), true); return false }
+    // a delete writer appends a file only when it records a doc, so a
+    // listing tells whether any tombstone is pending — no count job
+    if (!Sinks.hasDataFiles(spark, s"$indexPath/deletes")) {
+      fs.delete(p(s"$indexPath/deletes"), true); return false
+    }
+    // pinned lazily (root is parked below), materialized by its first use
+    val dels = readInvDeletes(spark, indexPath).get.localCheckpoint(false)
     val posted = readPostings(spark, indexPath)
     // the tombstone-corrected stats with the modulus (one aggregate,
     // see indexStats); NULL-dl tombstones are resolved against the
@@ -968,7 +969,7 @@ object Retrieval {
   def q108HybridRrf(spark: SparkSession, dir: String, nQueries: Int = 8,
       qLen: Int = 4, kEach: Int = 10, k: Int = 10,
       rrfK: Int = 60): DataFrame = {
-    import graft.ops.LlmOps.{cosinePrenorm, dotProduct}
+    import graft.ops.LlmOps.{dotProduct, exactCos, topKByCos}
     val docs = tokenizedDocs(spark, dir)
     val qdocs = docs.filter(col("doc_id") % 97 === 0)
       .orderBy("doc_id").limit(nQueries)
@@ -984,14 +985,10 @@ object Retrieval {
     // deliberate bounded crossJoin: the broadcast side is ≤ nQueries
     // rows (q38/q91 convention); self-pairs stay in (cos = 1, rank 1
     // — mirroring BM25, where the query's own doc ranks itself)
-    val dense = emb.crossJoin(broadcast(qemb))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        round(cosinePrenorm(dotProduct(col("qe"), col("embedding")),
-          col("qnsq"), col("nsq")), 6).as("cos"))
-      .withColumn("drank", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("doc_id").asc)))
-      .filter(col("drank") <= kEach)
-      .select("query_id", "doc_id", "drank")
+    // (the rank step's closing sort is dropped under the fusion join)
+    val dense = topKByCos(emb.crossJoin(broadcast(qemb))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCos), kEach)
+      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rnk").as("drank"))
     rrfFuse(lex, dense, k, rrfK)
   }
 

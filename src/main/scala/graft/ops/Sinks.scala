@@ -521,15 +521,12 @@ object Sinks {
       .getOrElse(System.getProperty("java.io.tmpdir"))
       .stripSuffix("/")
 
-  /** Read a parquet relation that may not exist yet (or may be a
-    * file-less crash-orphaned directory) — None in both cases, the
-    * one tolerated "nothing to read" of every merge-on-read/validation
-    * path, decided from a listing with Spark's hidden-path rule: names
-    * starting with `_` or `.` are not data, except `=` partition dirs,
-    * so `_SUCCESS` and `_temporary` debris alone read as empty.
+  /** Whether `path` exists and holds a data file, decided from a
+    * listing with Spark's hidden-path rule: names starting with `_` or
+    * `.` are not data, except `=` partition dirs, so `_SUCCESS` and
+    * `_temporary` debris alone hold no data.
     */
-  private[graft] def readParquetIfAny(spark: SparkSession,
-      path: String): Option[DataFrame] = {
+  private[graft] def hasDataFiles(spark: SparkSession, path: String): Boolean = {
     val fs = fsFor(spark, path)
     def hasData(p: org.apache.hadoop.fs.Path): Boolean =
       fs.listStatus(p).exists { st =>
@@ -538,9 +535,17 @@ object Sinks {
           (!st.isDirectory || hasData(st.getPath))
       }
     val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(root) && hasData(root)) Some(spark.read.parquet(path))
-    else None
+    fs.exists(root) && hasData(root)
   }
+
+  /** Read a parquet relation that may not exist yet (or may be a
+    * file-less crash-orphaned directory) — None in both cases
+    * ([[hasDataFiles]]), the one tolerated "nothing to read" of every
+    * merge-on-read/validation path.
+    */
+  private[graft] def readParquetIfAny(spark: SparkSession,
+      path: String): Option[DataFrame] =
+    if (hasDataFiles(spark, path)) Some(spark.read.parquet(path)) else None
 
   /** Thread-local set of lease paths held by the CURRENT thread —
     * reentrancy support for [[withWriterLease]]: a seal's internal

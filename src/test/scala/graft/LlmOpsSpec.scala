@@ -1851,4 +1851,63 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(got.nonEmpty && got === expected)
     assert(run(d.repartition(7)) === got)
   }
+
+  test("apply-deletes on a file-less deletes/ dir: returns false, drops the dir, starts no job") {
+    import graft.ops.Retrieval
+    val root = java.nio.file.Files.createTempDirectory("graft_empty_dels").toString
+    def text(tag: String) = (0 until 40).map(i => s"${tag}_t$i").mkString(" ")
+    val (ann, dedup, para, bm25) =
+      (s"$root/ann", s"$root/dedup", s"$root/para", s"$root/bm25")
+    LlmOps.annIndexWrite(spark,
+      Tables.embeddings(spark, sf).filter(col("vec_id") < 64), ann, nCells = 4)
+    LlmOps.dedupIndexAppendBatch(
+      Seq((1L, text("a")), (3L, text("b"))).toDF("doc_id", "text"), dedup, 0L)
+    LlmOps.paraIngestBatch(spark, Seq((10L, text("p"))).toDF("doc_id", "text"),
+      para, 0L)
+    Retrieval.invIndexWrite(Seq((1L, Seq("a", "b")), (2L, Seq("b", "c")))
+      .toDF("doc_id", "toks"), bm25, 8)
+    Seq[(String, () => Boolean)](
+      ann -> (() => LlmOps.annIndexApplyDeletes(spark, ann)),
+      dedup -> (() => LlmOps.dedupIndexApplyDeletes(spark, dedup)),
+      para -> (() => LlmOps.paraIndexApplyDeletes(spark, para)),
+      bm25 -> (() => Retrieval.invIndexApplyDeletes(spark, bm25))
+    ).foreach { case (idx, apply) =>
+      // a crash-orphaned tombstone dir: the committer's marker only
+      val dels = new java.io.File(s"$idx/deletes")
+      assert(dels.mkdir() && new java.io.File(dels, "_SUCCESS").createNewFile())
+      var applied = true
+      val c = JobCensus.census(spark) { applied = apply() }
+      assert(!applied, idx)
+      assert(!dels.exists(), idx)
+      assert(c.jobs.isEmpty, s"$idx:\n${c.jobs.mkString("\n")}")
+    }
+  }
+
+  test("approximate similarity lines: exact rows pinned by digest at sf0.001") {
+    // q43/q49/q91/q92/q93/q118 are otherwise checked only by recall
+    // floors and run-twice determinism. Digest: the row count and the
+    // exact sum of per-row xxhash64 over every column (no rounding),
+    // independent of row order. A change that moves one of these
+    // answers on purpose re-records its value and says why.
+    def digest(df: org.apache.spark.sql.DataFrame): String = {
+      val r = df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
+        .agg(count(lit(1)), sum(col("h").cast("decimal(38,0)"))).head()
+      s"${r.getLong(0)}/${r.getDecimal(1).toPlainString}"
+    }
+    val got = Seq(
+      "q43" -> LlmOps.q43SimsearchLshAnn(spark, sf),
+      "q49" -> LlmOps.q49SimsearchIvf(spark, sf),
+      "q91" -> LlmOps.q91SimsearchPq(spark, sf),
+      "q92" -> LlmOps.q92SimsearchIvfPq(spark, sf),
+      "q93" -> LlmOps.q93SimsearchIvfPqResidual(spark, sf),
+      "q118" -> LlmOps.q118SimsearchServing(spark, sf)
+    ).map { case (q, df) => q -> digest(df) }
+    assert(got === Seq(
+      "q43" -> "50/-4439808942758445496",
+      "q49" -> "50/29940824379298294171",
+      "q91" -> "50/73616281011501905615",
+      "q92" -> "50/31585366977411446726",
+      "q93" -> "50/77750843745149962218",
+      "q118" -> "50/29940824379298294171"))
+  }
 }
